@@ -8,12 +8,6 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 
-def arrival_order(order_cols: Sequence[str] = ("partition", "offset")) -> list[Column]:
-    """Arrival order within a source = per-partition offset order, the same
-    guarantee the reference provides (thread per partition, offset order)."""
-    return [F.col(c) for c in order_cols]
-
-
 def _shard_bases(df: DataFrame, weight: Column, shard_col: str) -> DataFrame:
     """One row per shard with the cumulative weight of all earlier shards.
 
@@ -40,6 +34,7 @@ def with_cumulative_before(
     out_col: str,
     shard_col: str = "partition",
     order_cols: Sequence[str] = ("offset",),
+    bases: dict[int, int] | None = None,
 ) -> DataFrame:
     """``out_col`` = sum of ``weight`` over all rows strictly before this row
     in global ``(shard, *order)`` arrival order — the reference's
@@ -47,25 +42,38 @@ def with_cumulative_before(
     single-reducer sort.
 
     Two-pass shape that survives 100×: per-shard running sums execute in
-    parallel (Window PARTITION BY shard), and cross-shard bases come from a
-    broadcast join against the tiny per-shard totals relation. Exactly the
-    ordering guarantee the reference gives: total order within a Kafka
-    partition, partition-id order across partitions.
+    parallel (Window PARTITION BY shard), and each shard adds the total
+    weight of all lower-numbered shards. Exactly the ordering guarantee the
+    reference gives: total order within a Kafka partition, partition-id
+    order across partitions.
+
+    ``bases`` is ``{shard: weight of all earlier shards}`` when the caller
+    already has the per-shard totals (the runner and the micro-batch
+    processor get them from their one stats action,
+    ``operators.stats.partition_bases``); it rides as a map literal, so
+    the plan holds no extra subplan. Without it the bases come from a
+    broadcast join against the tiny per-shard totals relation, which
+    costs an aggregate, a global window over the totals and a broadcast.
     """
-    bases = F.broadcast(_shard_bases(df, weight, shard_col))
+    if bases is None:
+        df = df.join(F.broadcast(_shard_bases(df, weight, shard_col)), on=shard_col)
+        base = F.col("_shard_base")
+    elif bases:
+        lookup = F.create_map(
+            *[x for s, b in bases.items() for x in (F.lit(s), F.lit(b).cast("long"))]
+        )
+        base = F.coalesce(F.element_at(lookup, F.col(shard_col)), F.lit(0))
+    else:
+        base = F.lit(0)
     within = (
         Window.partitionBy(shard_col)
         .orderBy(*order_cols)
         .rowsBetween(Window.unboundedPreceding, -1)
     )
     return (
-        df.join(bases, on=shard_col)
-        .withColumn(
+        df.withColumn(
             out_col,
-            (
-                F.col("_shard_base")
-                + F.coalesce(F.sum(weight).over(within), F.lit(0))
-            ).cast("long"),
+            (base + F.coalesce(F.sum(weight).over(within), F.lit(0))).cast("long"),
         )
         .drop("_shard_base")
     )

@@ -21,17 +21,6 @@ def tokens(text: Column) -> Column:
     return F.split(text, " ")
 
 
-def token_count(df: DataFrame, text_col: str = "text") -> DataFrame:
-    return df.withColumn("n_tokens", F.size(tokens(F.col(text_col))))
-
-
-def bpe_ish_token_count(text: Column) -> Column:
-    """BPE-style approximation: split on word boundaries + punctuation
-    (regex, still JVM-side), count non-empty pieces."""
-    pieces = F.split(text, r"[\s\.,;:!\?\(\)\[\]]+")
-    return F.size(F.filter(pieces, lambda p: p != ""))
-
-
 def stopword_hits(text: Column, words: list[str]) -> Column:
     toks = tokens(F.lower(text))
     return F.size(F.filter(toks, lambda t: t.isin(*words)))

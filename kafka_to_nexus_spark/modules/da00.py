@@ -252,14 +252,3 @@ def group_attributes(config: dict | None = None) -> list[dict]:
         if a["name"] == "axes" and signal_is_variable and isinstance(a["values"], list):
             a["values"] = ["time", *a["values"]]
     return attrs
-
-
-def constants_check(df: DataFrame) -> DataFrame:
-    """Constants are written once and verified for consistency thereafter
-    (da00_Writer.cpp constants handling): per variable, the distinct data
-    payloads — >1 distinct value means an inconsistency warning."""
-    return (
-        df.groupBy("name")
-        .agg(F.count_distinct(F.col("data")).alias("distinct_payloads"))
-        .withColumn("consistent", F.col("distinct_payloads") == 1)
-    )

@@ -12,8 +12,13 @@ as-of) messages are NOT written (ev44_Writer.cpp:94-97).
 Spark form: the cumulative shift is a running sum of per-message event
 counts over (partition, offset) arrival order, computed with the two-pass
 ``with_cumulative_before`` scheme — per-Kafka-partition windows in parallel
-plus a broadcast of tiny per-partition base offsets. Exact parity with the
-reference's single-writer append order, no single-reducer sort.
+plus each partition's base offset (the events in all lower-numbered
+partitions). The runner and the micro-batch processor pass those bases in
+from the per-(source, partition) event counts of their one stats action
+(``operators.stats``), so the write plan holds no extra aggregate; called
+without them, ``transform`` derives them with a broadcast of the tiny
+per-partition totals. Exact parity with the reference's single-writer
+append order, no single-reducer sort.
 """
 
 from __future__ import annotations
@@ -160,10 +165,17 @@ def cue_blocked(
         summary.unpersist()
 
 
-def transform(df: DataFrame, config: dict | None = None) -> dict[str, DataFrame]:
+def transform(
+    df: DataFrame,
+    config: dict | None = None,
+    bases: dict[int, int] | None = None,
+) -> dict[str, DataFrame]:
+    """``bases``: ``{partition: in-window events in lower partitions}`` for
+    this source, when the caller has already counted them (see
+    ``with_cumulative_before``)."""
     df = _drop_buffered(df)
     n_events = F.size("time_of_flight")
-    with_cum = with_cumulative_before(df, n_events, "_events_before")
+    with_cum = with_cumulative_before(df, n_events, "_events_before", bases=bases)
     events = with_cum.select(
         F.posexplode(F.arrays_zip("time_of_flight", "pixel_ids")).alias("_pos", "_e"),
         "_events_before",

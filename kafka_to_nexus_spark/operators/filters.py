@@ -158,20 +158,3 @@ def with_out_of_order_flag(
     w = _source_window(source_cols, order_cols)
     prev = F.lag(F.col(ts_col)).over(w)
     return df.withColumn(flag_col, F.coalesce(F.col(ts_col) < prev, F.lit(False)))
-
-
-def stop_leeway_bound(stop: int | None, after_stop_ns: int = 10_000_000_000) -> int | None:
-    """F7 — messages past stop + AfterStopTime leeway terminate a partition;
-    in batch form this is just a scan upper bound (endingOffsetsByTimestamp
-    analog). Reference: src/Stream/Partition.cpp:205-220, StreamerOptions.h:25
-    (10 s leeway)."""
-    return None if stop is None else stop + after_stop_ns
-
-
-def fan_out(df: DataFrame, n_destinations: int) -> list[DataFrame]:
-    """F8 — one accepted stream feeds N writer destinations. In Spark this is
-    plain DAG reuse: return the same DataFrame N times; the runner persists
-    the filtered batch once before branching.
-    Reference: src/Stream/SourceFilter.cpp:121-127, src/JobCreator.cpp:163-168.
-    """
-    return [df] * n_destinations

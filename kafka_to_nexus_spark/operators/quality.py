@@ -4,7 +4,10 @@ stream metrics (C6 analog via ``df.observe``).
 The reference counts per-error-type flatbuffer failures
 (src/Stream/Partition.cpp:225-253) and offset gaps (:226-230); here the
 error taxonomy is a column and the counters are observable metrics, so
-they ride the same scan with zero extra passes.
+they ride the same scan with zero extra passes. The job runner and the
+micro-batch processor count the same taxonomy inside their one stats
+action (``operators.stats``); the tests check those counters against
+``observe_stream_metrics``.
 """
 
 from __future__ import annotations

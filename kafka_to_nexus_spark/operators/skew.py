@@ -41,17 +41,3 @@ def salted_agg(
         *[c.alias(n) for n, c in partial_aggs.items()]
     )
     return partial.groupBy(*keys).agg(*[c.alias(n) for n, c in final_aggs.items()])
-
-
-def salted_mean(df: DataFrame, keys: Sequence[str], value_col: str) -> DataFrame:
-    """Skew-safe mean: sum/count partials, combined exactly."""
-    out = salted_agg(
-        df,
-        keys,
-        {"_s": F.sum(value_col), "_c": F.count(value_col)},
-        {"_s": F.sum("_s"), "_c": F.sum("_c")},
-    )
-    return out.select(
-        *keys, (F.col("_s") / F.col("_c")).alias(f"avg_{value_col}"),
-        F.col("_c").alias("n"),
-    )

@@ -3,14 +3,27 @@
 Executes a full job: StartMessage → plan → one filtered scan → per-stream
 module transforms → staged columnar output + hierarchical metadata.
 
-Execution shape (Spark-first):
-- ONE windowed/validated DataFrame is built and persisted per job, then
-  every stream binding filters from it — the F8/F9 shared-scan multiplexing
-  the reference gets from its per-topic consumer sets
+Execution shape (Spark-first), one incremental plan per job like a
+Structured Streaming trigger:
+- Decode once: the error-classified messages are persisted, so the
+  FlatBuffers decode (and any upstream scan) runs a single time and every
+  stream binding filters from the cache — the F8/F9 shared-scan
+  multiplexing the reference gets from its per-topic consumer sets
   (src/Stream/Partition.cpp:15-48, StreamController.cpp:109-151).
+- One driver action before the fan-out: ``operators.stats.scan_stats``
+  (the same helper ``StreamingJob.process_batch`` uses) returns the D2
+  counters, the F3 buffered last-before-start row per source and the
+  per-(source, partition) ev44 event counts. The buffered rows rejoin the
+  window as a tiny local relation; the event counts give ev44's
+  ``events`` value and its cross-partition index bases, so no write plan
+  recomputes them.
+- Flat fan-out: every (binding, dataset) write and every remaining T6
+  aggregate collect is its own task on one thread pool, so the scheduler
+  interleaves their stages; tasks return their metadata values.
 - All plan work is driver-side Python; all data movement is DataFrames;
-  nothing in the data path collects to the driver. Job-summary aggregates
-  (T6) are tiny per-source rows and are the only collected values.
+  nothing in the data path collects to the driver. The stats rows and the
+  job-summary aggregates (T6) are tiny per-source rows and are the only
+  collected values.
 """
 
 from __future__ import annotations
@@ -18,13 +31,15 @@ from __future__ import annotations
 import time
 from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass, field
+from functools import partial
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.util import inheritable_thread_target
 
 from .modules import REGISTRY as MODULE_REGISTRY
 from .modules import accepts_repeated_timestamps, get_module, group_streams
-from .operators import filters, quality
+from .operators import filters, quality, stats
 from .plan import Plan, StartMessage, build_plan
 from .plan.model import StreamBinding
 from .modules import mdat as mdat_module
@@ -62,6 +77,139 @@ def _stream_key(s: StreamBinding) -> str:
     return f"{s.path}:{s.module}:{s.source}"
 
 
+def _run_task(task) -> dict:
+    """A fan-out task: a zero-argument callable returning the metadata
+    values it produced (a write returns none)."""
+    return task() or {}
+
+
+def _prefixed(path: str, values: dict) -> dict:
+    return {f"{path}/{name}": value for name, value in values.items()}
+
+
+def _summary(module, df: DataFrame, config: dict | None, path: str) -> dict:
+    """T6 job-summary aggregates of one binding."""
+    rows = module.aggregates(df, config).collect()
+    return _prefixed(path, rows[0].asDict()) if rows else {}
+
+
+def _statics(module, df: DataFrame, config: dict | None, path: str) -> dict:
+    return _prefixed(path, module.statics(df, config))
+
+
+def _grouped_summary(module, df: DataFrame, config: dict | None, group: list) -> dict:
+    """T6 aggregates of a whole source group in one grouped collect."""
+    rows = module.aggregates(df, config, group_key="__source").collect()
+    by_source = {r["__source"]: r.asDict() for r in rows}
+    values: dict[str, object] = {}
+    # groupBy drops zero-row sources, but the per-binding path's global
+    # aggregate still yields one row for them (None min/max, 0 counts).
+    # Emit the identical row for parity — computed once from an empty
+    # slice and shared by every empty source.
+    empty_row: dict[str, object] | None = None
+    for b in group:
+        got = by_source.get(b.source)
+        if got is None:
+            if empty_row is None:
+                empty_row = module.aggregates(df.limit(0), config).collect()[0].asDict()
+            got = empty_row
+        values.update(_prefixed(b.path, {k: v for k, v in got.items() if k != "__source"}))
+    return values
+
+
+def _plan_tasks(
+    plan: Plan,
+    windowed: DataFrame,
+    out_dir: str,
+    event_counts: dict[tuple[str, str], dict[int, int]],
+) -> tuple[list, dict[str, list[str]], list[dict], dict[str, object]]:
+    """Build the job's fan-out on the driver: one task per (binding,
+    dataset) write and per T6 aggregate or statics collect. Returns the
+    tasks, the datasets staged per stream, the synthesized group
+    attributes and the metadata values already known on the driver (ev44
+    ``events``, from the stats action's event counts).
+
+    Same-module, same-shape, row-wise bindings are grouped into one pass
+    each (modules.group_streams); everything else takes the per-binding
+    path."""
+    tasks: list = []
+    stream_outputs: dict[str, list[str]] = {}
+    attrs: list[dict] = []
+    values: dict[str, object] = {}
+    groups, singles = group_streams(plan.streams)
+
+    for binding in singles:
+        module = get_module(binding.module)
+        config = binding.config
+        src = filters.source_filter(windowed, binding.module, binding.source)
+        if not accepts_repeated_timestamps(binding.module):
+            src = filters.drop_repeated_timestamps(src)
+        # T6 summaries; "meta_data": false suppresses them
+        # (f144_Writer.cpp:264,282)
+        summary = hasattr(module, "aggregates") and (config or {}).get("meta_data", True)
+        if binding.module == "ev44":
+            counts = event_counts.get((binding.module, binding.source), {})
+            outputs = module.transform(src, config, bases=stats.partition_bases(counts))
+            if summary:
+                values[f"{binding.path}/events"] = sum(counts.values())
+        else:
+            outputs = module.transform(src, config)
+            if summary:
+                agg_input = outputs.get("log", src)
+                tasks.append(partial(_summary, module, agg_input, config, binding.path))
+        for dataset, df in outputs.items():
+            order = [c for c in ORDER_COLS.get((binding.module, dataset), []) if c in df.columns]
+            if order:
+                df = df.orderBy(*order)
+            df = df.drop(*[c for c in HELPER_COLS if c in df.columns])
+            tasks.append(partial(staging.write_dataset, df, out_dir, binding.path, dataset))
+        # write-once statics (da00 constants)
+        if hasattr(module, "statics"):
+            tasks.append(partial(_statics, module, src, config, binding.path))
+        stream_outputs[_stream_key(binding)] = list(outputs)
+        if hasattr(module, "group_attributes"):
+            attrs.extend({"path": binding.path, **a} for a in module.group_attributes(config))
+
+    # 1000-source fast path: same-module same-config row-wise bindings run
+    # as ONE filter + transform + partitionBy write (plus one grouped
+    # aggregate job), instead of one Spark job pipeline per source. The
+    # per-source path degrades linearly in job-scheduler overhead; this
+    # path is O(modules) per job regardless of source count.
+    for (module_id, _shape), group in groups.items():
+        module = get_module(module_id)
+        config = group[0].config
+        src = filters.source_filter_many(windowed, module_id, [b.source for b in group])
+        if not accepts_repeated_timestamps(module_id):
+            # already partitions by (schema, source) internally
+            src = filters.drop_repeated_timestamps(src)
+        keyed = src.withColumn("__source", F.col("source_name"))
+        outputs = module.transform(keyed, config)
+        path_by_source = {b.source: b.path for b in group}
+        for dataset, df in outputs.items():
+            order = [c for c in ORDER_COLS.get((module_id, dataset), []) if c in df.columns]
+            if order:
+                # repartition BY SOURCE first: each source then lands whole
+                # in one task, so sortWithinPartitions gives the same
+                # per-source global order the per-binding path gets from
+                # orderBy (and one ordered part file per source dir) —
+                # without it, a source spanning tasks concatenates part
+                # files in task order and the packed time axis is not
+                # monotone
+                df = df.repartition("__source").sortWithinPartitions("__source", *order)
+            df = df.drop(*[c for c in HELPER_COLS if c in df.columns])
+            tasks.append(partial(
+                staging.write_dataset_grouped, df, out_dir, path_by_source, dataset
+            ))
+        if hasattr(module, "aggregates") and (config or {}).get("meta_data", True):
+            agg_input = outputs.get("log", keyed)
+            tasks.append(partial(_grouped_summary, module, agg_input, config, group))
+        for b in group:
+            stream_outputs[_stream_key(b)] = list(outputs)
+            if hasattr(module, "group_attributes"):
+                attrs.extend({"path": b.path, **a} for a in module.group_attributes(config))
+    return tasks, stream_outputs, attrs, values
+
+
 def run_job(
     spark: SparkSession,
     start: StartMessage,
@@ -84,159 +232,41 @@ def run_job(
     start_ns = start.start_time_ms * MS_TO_NS
     stop_ns = None if start.stop_time_ms is None else start.stop_time_ms * MS_TO_NS
 
-    # D1–D4 validation with observable error counters, then the job window
-    # with as-of buffering — one shared scan for every stream (F8/F9).
-    observed, obs = quality.observe_stream_metrics(messages)
-    valid = quality.valid_only(observed)
-    windowed = filters.with_asof_buffer(valid, start_ns, stop_ns).persist()
-    # Materialize the shared scan ONCE before fanning out: the observe
-    # metrics node must be traversed by exactly one deterministic action —
-    # concurrent first-touch from the binding pool races the cache and can
-    # skip it.
-    windowed.count()
-
-    stream_outputs: dict[str, list[str]] = {}
-    metadata_values: dict[str, object] = {}
-
-    def process_binding(binding: StreamBinding) -> tuple[str, list[str], dict]:
-        module = get_module(binding.module)
-        src = filters.source_filter(windowed, binding.module, binding.source)
-        if not accepts_repeated_timestamps(binding.module):
-            src = filters.drop_repeated_timestamps(src)
-
-        outputs = module.transform(src, binding.config)
-        written: list[str] = []
-        for dataset, df in outputs.items():
-            order = [c for c in ORDER_COLS.get((binding.module, dataset), []) if c in df.columns]
-            if order:
-                df = df.orderBy(*order)
-            df = df.drop(*[c for c in HELPER_COLS if c in df.columns])
-            staging.write_dataset(df, out_dir, binding.path, dataset)
-            written.append(dataset)
-
-        # T6 job-summary aggregates (e.g. f144 min/max/mean, ev44 counts);
-        # "meta_data": false suppresses them (f144_Writer.cpp:264,282)
-        values: dict[str, object] = {}
-        if hasattr(module, "aggregates") and (binding.config or {}).get(
-            "meta_data", True
-        ):
-            agg_input = outputs.get("log", src)
-            agg_row = module.aggregates(agg_input, binding.config).collect()
-            if agg_row:
-                for name, value in agg_row[0].asDict().items():
-                    values[f"{binding.path}/{name}"] = value
-        # write-once statics (da00 constants) + synthesized group attrs
-        if hasattr(module, "statics"):
-            for name, value in module.statics(src, binding.config).items():
-                values[f"{binding.path}/{name}"] = value
-        attrs = [
-            {"path": binding.path, **a}
-            for a in (
-                module.group_attributes(binding.config)
-                if hasattr(module, "group_attributes")
-                else []
-            )
-        ]
-        return _stream_key(binding), written, values, attrs
-
-    def process_group(module_id: str, group: list[StreamBinding]):
-        """1000-source fast path: same-module same-config row-wise bindings
-        run as ONE filter + transform + partitionBy write (plus one grouped
-        aggregate job), instead of one Spark job pipeline per source. The
-        per-source path degrades linearly in job-scheduler overhead; this
-        path is O(modules) per job regardless of source count."""
-        module = get_module(module_id)
-        config = group[0].config
-        sources = [b.source for b in group]
-        src = windowed.filter(
-            (F.col("schema") == module_id) & F.col("source_name").isin(sources)
+    # Decode once: every action below reads this cache. The one stats
+    # action yields the D2 counters, the F3 buffered rows and the ev44
+    # event counts (operators.stats).
+    checked = quality.with_error_code(messages).persist()
+    try:
+        scan = stats.scan_stats(checked, start_ns, stop_ns)
+        metrics = stats.fold_metrics(scan)
+        event_counts = stats.event_counts(scan)
+        valid = quality.valid_only(checked)
+        windowed = filters.window_filter(valid, start_ns, stop_ns).withColumn(
+            "is_buffered_message", F.lit(False)
         )
-        if not accepts_repeated_timestamps(module_id):
-            # already partitions by (schema, source) internally
-            src = filters.drop_repeated_timestamps(src)
-        keyed = src.withColumn("__source", F.col("source_name"))
-        outputs = module.transform(keyed, config)
-        path_by_source = {b.source: b.path for b in group}
-        written: list[str] = []
-        for dataset, df in outputs.items():
-            order = [c for c in ORDER_COLS.get((module_id, dataset), []) if c in df.columns]
-            if order:
-                # repartition BY SOURCE first: each source then lands whole
-                # in one task, so sortWithinPartitions gives the same
-                # per-source global order the per-binding path gets from
-                # orderBy (and one ordered part file per source dir) —
-                # without it, a source spanning tasks concatenates part
-                # files in task order and the packed time axis is not
-                # monotone
-                df = df.repartition("__source").sortWithinPartitions(
-                    "__source", *order
-                )
-            df = df.drop(*[c for c in HELPER_COLS if c in df.columns])
-            staging.write_dataset_grouped(df, out_dir, path_by_source, dataset)
-            written.append(dataset)
-        values: dict[str, object] = {}
-        if hasattr(module, "aggregates") and (config or {}).get("meta_data", True):
-            agg_input = outputs.get("log", keyed)
-            rows = module.aggregates(agg_input, config, group_key="__source").collect()
-            by_source = {r["__source"]: r.asDict() for r in rows}
-            # groupBy drops zero-row sources, but the per-binding path's
-            # global aggregate still yields one row for them (None min/max,
-            # 0 counts). Emit the identical row for parity — computed once
-            # from an empty slice and shared by every empty source.
-            empty_row: dict[str, object] | None = None
-            for b in group:
-                got = by_source.get(b.source)
-                if got is None:
-                    if empty_row is None:
-                        empty_row = (
-                            module.aggregates(agg_input.limit(0), config)
-                            .collect()[0]
-                            .asDict()
-                        )
-                    got = empty_row
-                for name, value in got.items():
-                    if name != "__source":
-                        values[f"{b.path}/{name}"] = value
-        attrs = [
-            {"path": b.path, **a}
-            for b in group
-            for a in (
-                module.group_attributes(config)
-                if hasattr(module, "group_attributes")
-                else []
+        buffered = list(stats.fold_buffered(scan).values())
+        del scan
+        if buffered:
+            windowed = (
+                spark.createDataFrame(buffered, valid.schema)
+                .withColumn("is_buffered_message", F.lit(True))
+                .unionByName(windowed)
             )
-        ]
-        # group-wide values/attrs ride on the first tuple only
-        return [
-            (_stream_key(b), written, values if i == 0 else {}, attrs if i == 0 else [])
-            for i, b in enumerate(group)
-        ]
-
-    # Group same-module, same-shape, row-wise bindings into one pass each
-    # (modules.group_streams); everything else takes the per-binding path.
-    # Per-stream jobs are submitted CONCURRENTLY so the scheduler
-    # interleaves their tasks instead of leaving slots idle between serial
-    # actions — the reference gets the same effect from its per-partition
-    # threads feeding one writer.
-    groups, singles = group_streams(plan.streams)
-
-    extra_group_attrs: list[dict] = []
-    if plan.streams:
-        with ThreadPoolExecutor(
-            max_workers=min(8, max(len(singles) + len(groups), 1))
-        ) as pool:
-            futures = [pool.submit(process_binding, b) for b in singles]
-            gfutures = [
-                pool.submit(process_group, mod, grp)
-                for (mod, _cfg), grp in groups.items()
-            ]
-            results = [f.result() for f in futures]
-            for gf in gfutures:
-                results.extend(gf.result())
-        for key, written, values, attrs in results:
-            stream_outputs[key] = written
-            metadata_values.update(values)
-            extra_group_attrs.extend(attrs)
+        tasks, stream_outputs, extra_group_attrs, metadata_values = _plan_tasks(
+            plan, windowed, out_dir, event_counts
+        )
+        if tasks:
+            # Every write and aggregate is an independent Spark job:
+            # submitted together, the scheduler interleaves their stages
+            # instead of leaving slots idle between serial actions — the
+            # reference gets the same effect from its per-partition threads
+            # feeding one writer. Pool threads inherit the caller's job
+            # group, so the whole job can be tracked or cancelled as one.
+            with ThreadPoolExecutor(max_workers=min(8, len(tasks))) as pool:
+                for values in pool.map(inheritable_thread_target(spark)(_run_task), tasks):
+                    metadata_values.update(values)
+    finally:
+        checked.unpersist()
 
     # W9 mdat run metadata (plan-level constants)
     for m in plan.mdat:
@@ -244,8 +274,6 @@ def run_job(
             {"items": m.items}, start.start_time_ms, start.stop_time_ms
         ).items():
             metadata_values[f"{m.path.rstrip('/')}/{name}"] = value
-
-    windowed.unpersist()
 
     job_info = {
         "job_id": start.job_id,
@@ -259,12 +287,6 @@ def run_job(
         extra_group_attributes=extra_group_attrs,
     )
 
-    try:
-        metrics = dict(obs.get)
-    except Exception:
-        # Catalyst's empty-relation propagation can eliminate the observe
-        # node entirely (e.g. zero-message job) — report zero counters.
-        metrics = dict(quality.ZERO_METRICS)
     # K6 — approximate output size gauge (FileWriterTask.h:103-111
     # approx_file_size_mb, recomputed periodically by StreamController)
     metrics["approx_file_size_mb"] = staging.approximate_size_mb(out_dir)

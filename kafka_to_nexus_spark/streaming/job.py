@@ -39,7 +39,7 @@ from pyspark.sql import DataFrame, Row, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..modules import accepts_repeated_timestamps, get_module, group_streams
-from ..operators import filters, quality
+from ..operators import filters, quality, stats
 from ..plan import Plan, StartMessage, build_plan
 from ..schemas import MESSAGE_SCHEMA
 from ..sinks import staging
@@ -234,15 +234,7 @@ class StreamingJobState:
     max_event_time_ns: int = 0
     finished: bool = False
     # C6 cumulative counters (fed from the per-batch stats action)
-    metrics: dict[str, int] = field(
-        default_factory=lambda: {
-            "messages_received": 0,
-            "flatbuffer_errors": 0,
-            "unknown_schema": 0,
-            "invalid_timestamp": 0,
-            "not_valid_flatbuffer": 0,
-        }
-    )
+    metrics: dict[str, int] = field(default_factory=lambda: dict(quality.ZERO_METRICS))
 
 
 STATE_FILE = "_stream_state.json"
@@ -381,77 +373,21 @@ class StreamingJob:
 
     # -- helpers -----------------------------------------------------------
 
-    def _batch_stats(self, batch: DataFrame) -> list[Row]:
-        """ONE driver action per micro-batch for ALL cross-batch state: the
-        per-source pre-start buffer row, in-window presence/counts, the tail
-        timestamp (F4 boundary state, per Kafka partition — the reference
-        keeps one SourceFilter per (source, partition)), ev44 event counts,
-        and the watchdog max event time. One groupBy over (schema,
-        source_name, partition) — driver round-trips stay O(1) in binding
-        count and batch size (the aggregate is map-side-combined; output is
-        one row per source-partition; the driver folds rows per source)."""
-        ts = F.col(filters.TS)
-        ok = F.col("error_code").isNull()
-        win = ok & (ts >= F.lit(self.start_ns))
-        if self.stop_ns is not None:
-            win = win & (ts <= F.lit(self.stop_ns))
-        pre = ok & (ts < F.lit(self.start_ns))
-        envelope = F.struct(*[F.col(c) for c in MESSAGE_SCHEMA.fieldNames()])
-        arrival = F.struct("partition", "offset")
-        n_events = F.when(
-            F.col("time_of_flight").isNotNull(), F.size("time_of_flight")
-        ).otherwise(F.lit(0))
-
-        def count_where(cond, alias):
-            return F.sum(F.when(cond, 1).otherwise(0)).alias(alias)
-
-        return (
-            batch.groupBy("schema", "source_name", "partition")
-            .agg(
-                F.count(F.lit(1)).alias("n_messages"),
-                F.max(F.when(ok, ts)).alias("max_ts"),
-                count_where(win, "n_in_window"),
-                F.max_by(F.when(win, ts), F.when(win, arrival)).alias("tail_ts"),
-                F.sum(F.when(win, n_events).otherwise(0)).alias("n_events"),
-                F.max_by(
-                    F.when(pre, envelope), F.when(pre, F.struct(ts, "partition", "offset"))
-                ).alias("buffered"),
-                # D2 taxonomy counters (C6), folded into cumulative metrics
-                count_where(~ok, "n_errors"),
-                count_where(F.col("error_code") == "UnknownFlatbufferID", "n_unknown_schema"),
-                count_where(F.col("error_code") == "InvalidTimestamp", "n_invalid_timestamp"),
-                count_where(F.col("error_code") == "NotValidFlatbuffer", "n_not_valid"),
-            )
-            .collect()
-        )
-
-    def _fold_stats(self, stats: list[Row]) -> set[tuple[str, str]]:
-        """Update cross-batch state from the stats rows; return the set of
-        sources with in-window data this batch."""
+    def _fold_stats(self, scan: list[Row]) -> set[tuple[str, str]]:
+        """Update cross-batch state from the ``stats.scan_stats`` rows
+        (one per source-partition); return the set of sources with
+        in-window data this batch."""
         st = self.state
+        stats.fold_metrics(scan, st.metrics)
+        # the per-source latest pre-start row across batches, by
+        # (ts, partition, offset)
+        stats.fold_buffered(scan, st.asof_buffer)
         present: set[tuple[str, str]] = set()
-        for r in stats:
-            key = (r["schema"], r["source_name"])
-            st.metrics["messages_received"] += r["n_messages"]
-            st.metrics["flatbuffer_errors"] += r["n_errors"]
-            st.metrics["unknown_schema"] += r["n_unknown_schema"]
-            st.metrics["invalid_timestamp"] += r["n_invalid_timestamp"]
-            st.metrics["not_valid_flatbuffer"] += r["n_not_valid"]
+        for r in scan:
             if r["max_ts"] is not None:
                 st.max_event_time_ns = max(st.max_event_time_ns, int(r["max_ts"]))
             if r["n_in_window"]:
-                present.add(key)
-            buf = r["buffered"]
-            if buf is not None:
-                # stats rows are per (source, partition): fold to the
-                # per-source latest pre-start row by (ts, partition,
-                # offset) — the same total order the old single-row
-                # max_by(struct(ts, partition, offset)) used
-                cur = st.asof_buffer.get(key)
-                if cur is None or (
-                    buf["timestamp"], buf["partition"], buf["offset"]
-                ) > (cur["timestamp"], cur["partition"], cur["offset"]):
-                    st.asof_buffer[key] = buf
+                present.add((r["schema"], r["source_name"]))
         return present
 
     def _buffered_df(self, keys: set[tuple[str, str]]) -> DataFrame | None:
@@ -475,8 +411,10 @@ class StreamingJob:
             return  # replay of a batch whose state save completed
         batch = quality.with_error_code(batch).persist()
         try:
-            stats = self._batch_stats(batch)
-            present = self._fold_stats(stats)
+            # ONE driver action per micro-batch for all cross-batch state
+            # (operators.stats, shared with the batch runner)
+            scan = stats.scan_stats(batch, self.start_ns, self.stop_ns)
+            present = self._fold_stats(scan)
 
             valid = quality.valid_only(batch)
             in_window = filters.window_filter(valid, self.start_ns, self.stop_ns)
@@ -491,19 +429,15 @@ class StreamingJob:
 
             # stats rows are per (source, partition): tails stay
             # partition-keyed (F4 boundary state is per partition, like
-            # the reference's SourceFilter-per-(source, partition));
-            # event counts fold per source.
-            event_counts: dict[tuple[str, str], int] = {}
-            for r in stats:
-                k = (r["schema"], r["source_name"])
-                event_counts[k] = event_counts.get(k, 0) + (r["n_events"] or 0)
+            # the reference's SourceFilter-per-(source, partition)), and
+            # so do the event counts the ev44 index bases come from.
             wrote = self._write_streams(
                 in_window,
                 tails={
                     (r["schema"], r["source_name"], r["partition"]): r["tail_ts"]
-                    for r in stats
+                    for r in scan
                 },
-                event_counts=event_counts,
+                event_counts=stats.event_counts(scan),
                 present=present,
             )
 
@@ -519,7 +453,7 @@ class StreamingJob:
             # which stop the job only past stop-time + leeway (wall clock).
             from .partition_filter import PollStatus
 
-            if any(r["n_messages"] for r in stats):
+            if any(r["messages_received"] for r in scan):
                 self.partition_filter.should_stop_partition(PollStatus.MESSAGE)
                 self._was_empty = False
             elif not self._was_empty:
@@ -561,7 +495,7 @@ class StreamingJob:
         self,
         windowed: DataFrame,
         tails: dict[tuple[str, str, int], int | None] | None = None,
-        event_counts: dict[tuple[str, str], int] | None = None,
+        event_counts: dict[tuple[str, str], dict[int, int]] | None = None,
         present: set[tuple[str, str]] | None = None,
     ) -> bool:
         """``present`` (from the stats action) lists the sources with
@@ -701,7 +635,14 @@ class StreamingJob:
                 # have its output discarded. Strip the trigger for the
                 # transform call only — finalize reads binding.config.
                 cfg = {k: v for k, v in cfg.items() if k != "cue_interval"}
-            outputs = module.transform(src, cfg)
+            counts = event_counts.get(key, {})
+            if binding.module == "ev44":
+                # W2 index bases from this batch's per-partition counts
+                outputs = module.transform(
+                    src, cfg, bases=stats.partition_bases(counts)
+                )
+            else:
+                outputs = module.transform(src, cfg)
             written = self._written_datasets.setdefault(_stream_key(binding), [])
             for dataset, df in outputs.items():
                 if dataset == "cue":
@@ -764,8 +705,8 @@ class StreamingJob:
                         ))
                         if "cue" not in written:
                             written.append("cue")
-                st.events_written[key] = st.events_written.get(key, 0) + int(
-                    event_counts.get(key, 0)
+                st.events_written[key] = st.events_written.get(key, 0) + sum(
+                    counts.values()
                 )
 
         # One write per (binding, dataset), all independent Spark jobs —

@@ -38,28 +38,102 @@ def _df(spark, msgs):
     )
 
 
-@given(msgs=msg_lists, start=st.integers(0, 30), width=st.integers(0, 30))
+# messages over up to three Kafka partitions: (ts, source, partition);
+# offsets count per partition. Few timestamps, so ties across partitions
+# are common.
+partitioned_msg_lists = st.lists(
+    st.tuples(st.integers(0, 12), st.sampled_from(["s1", "s2"]), st.integers(0, 2)),
+    min_size=0,
+    max_size=12,
+)
+
+
+def _partitioned_df(spark, msgs):
+    offsets: dict[int, int] = {}
+    rows = []
+    for ts, src, part in msgs:
+        off = offsets.get(part, 0)
+        offsets[part] = off + 1
+        rows.append(("f144", src, part, off, ts, float(ts)))
+    return spark.createDataFrame(
+        rows, "schema string, source_name string, partition int, offset long, timestamp long, value double"
+    )
+
+
+@given(msgs=partitioned_msg_lists, start=st.integers(0, 14), width=st.integers(0, 14))
 @PROP_SETTINGS
 def test_asof_buffer_matches_naive_model(spark, msgs, start, width):
-    stop = start + width
-    out = filters.with_asof_buffer(_df(spark, msgs), start, stop).collect()
+    from kafka_to_nexus_spark.operators import quality, stats
 
-    # naive model: per source keep latest (ts, offset) with ts < start,
-    # plus every in-window row
+    stop = start + width
+    df = _partitioned_df(spark, msgs)
+    out = filters.with_asof_buffer(df, start, stop).collect()
+
+    # naive model: per source keep latest (ts, partition, offset) with
+    # ts < start, plus every in-window row
     naive_buffered = {}
     naive_window = set()
-    for off, (ts, src) in enumerate(msgs):
+    offsets: dict[int, int] = {}
+    for ts, src, part in msgs:
+        off = offsets.get(part, 0)
+        offsets[part] = off + 1
         if ts < start:
             cur = naive_buffered.get(src)
-            if cur is None or (ts, off) > cur:
-                naive_buffered[src] = (ts, off)
+            if cur is None or (ts, part, off) > cur:
+                naive_buffered[src] = (ts, part, off)
         elif start <= ts <= stop:
-            naive_window.add(off)
+            naive_window.add((part, off))
 
-    got_buffered = {r.source_name: (r.timestamp, r.offset) for r in out if r.is_buffered_message}
-    got_window = {r.offset for r in out if not r.is_buffered_message}
+    got_buffered = {
+        r.source_name: (r.timestamp, r.partition, r.offset) for r in out if r.is_buffered_message
+    }
+    got_window = {(r.partition, r.offset) for r in out if not r.is_buffered_message}
     assert got_buffered == naive_buffered
     assert got_window == naive_window
+
+    # the driver fold of the stats action's per-partition rows (the
+    # runner's and the micro-batch processor's buffered row) must pick the
+    # same row as the operator over valid messages (ts 0 is invalid)
+    folded = stats.fold_buffered(
+        stats.scan_stats(quality.with_error_code(df), start, stop)
+    )
+    want = {
+        r.source_name: r.asDict()
+        for r in filters.with_asof_buffer(quality.valid_only(df), start, stop).collect()
+        if r.is_buffered_message
+    }
+    got = {src: {**row.asDict(), "is_buffered_message": True} for (_, src), row in folded.items()}
+    assert got == want
+
+
+@given(
+    msgs=st.lists(
+        st.tuples(
+            st.sampled_from(["f144", "ev44", "zz99"]),
+            st.sampled_from(["s1", "", None]),
+            st.sampled_from([0, 5, 11]),
+            st.integers(0, 2),
+        ),
+        min_size=1,
+        max_size=12,
+    )
+)
+@PROP_SETTINGS
+def test_scan_stats_counters_match_observe(spark, msgs):
+    """The D2 counters folded from the stats action equal the ``observe``
+    counters on valid, unknown-schema, missing-source and zero-timestamp
+    messages."""
+    from kafka_to_nexus_spark.operators import quality, stats
+
+    df = spark.createDataFrame(
+        [(schema, src, part, i, ts) for i, (schema, src, ts, part) in enumerate(msgs)],
+        "schema string, source_name string, partition int, offset long, timestamp long",
+    )
+    observed, obs = quality.observe_stream_metrics(df)
+    observed.collect()
+    got = stats.fold_metrics(stats.scan_stats(quality.with_error_code(df), 1, 10))
+    assert got == obs.get
+    assert got["messages_received"] == len(msgs)
 
 
 @given(msgs=msg_lists)

@@ -221,10 +221,24 @@ def test_cumulative_index_matches_global_window(spark):
 
     from kafka_to_nexus_spark.functions import with_cumulative_before
 
+    from kafka_to_nexus_spark.operators.stats import partition_bases
+
     env = _envelope_fixture(spark, n=300, parts=7)
     got = {
         (r["partition"], r["offset"]): r["cum"]
         for r in with_cumulative_before(env, F.size("timestamps"), "cum").collect()
+    }
+    # the driver-side form: bases from per-partition totals the caller
+    # already holds (the runner's stats action)
+    totals = {
+        r["partition"]: r["n"]
+        for r in env.groupBy("partition").agg(F.sum(F.size("timestamps")).alias("n")).collect()
+    }
+    got_bases = {
+        (r["partition"], r["offset"]): r["cum"]
+        for r in with_cumulative_before(
+            env, F.size("timestamps"), "cum", bases=partition_bases(totals)
+        ).collect()
     }
     w = Window.orderBy("partition", "offset").rowsBetween(Window.unboundedPreceding, -1)
     want = {
@@ -234,6 +248,7 @@ def test_cumulative_index_matches_global_window(spark):
         ).collect()
     }
     assert got == want
+    assert got_bases == want
 
 
 # ---------------------------------------------------------------------------
