@@ -19,6 +19,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 
+from ..plan.model import MS_TO_NS
 from ..schemas import MESSAGE_SCHEMA
 from . import ess
 from .runtime import Builder, Table, file_identifier, root_table
@@ -32,8 +33,6 @@ __all__ = [
     "decode_kafka_flatbuffers",
     "encode_fixture",
 ]
-
-MS_TO_NS = 1_000_000
 
 
 def encode_fixture(item: dict) -> bytes:

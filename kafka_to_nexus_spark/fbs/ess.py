@@ -17,9 +17,8 @@ tdct → ``timestamps[0]``; se00 → ``packet_timestamp``.
 
 from __future__ import annotations
 
+from ..plan.model import MS_TO_NS
 from .runtime import Builder, Table, file_identifier, root_table
-
-MS_TO_NS = 1_000_000
 
 # f144 Value union member codes (declaration order, 1-based).
 F144_DOUBLE = 10

@@ -13,6 +13,9 @@ from __future__ import annotations
 
 from dataclasses import dataclass, field
 
+# StartMessage/StopMessage times are ms; envelope and payload times are ns.
+MS_TO_NS = 1_000_000
+
 
 @dataclass
 class StartMessage:

@@ -17,9 +17,15 @@ Structured Streaming trigger:
   window as a tiny local relation; the event counts give ev44's
   ``events`` value and its cross-partition index bases, so no write plan
   recomputes them.
-- Flat fan-out: every (binding, dataset) write and every remaining T6
-  aggregate collect is its own task on one thread pool, so the scheduler
-  interleaves their stages; tasks return their metadata values.
+- Flat fan-out (``run_tasks``, shared with ``StreamingJob``): every
+  (binding, dataset) write and every remaining T6 aggregate collect is its
+  own task on one thread pool, so the scheduler interleaves their stages;
+  tasks return their metadata values, and pool threads inherit the
+  caller's job group.
+- One job-output surface with the live path: the T6 aggregates
+  (``summary``/``grouped_summary``) and the job metadata
+  (``job_metadata``) are computed here for both job paths, and the staged
+  dataset format (order table, stream keys) lives in ``sinks.staging``.
 - All plan work is driver-side Python; all data movement is DataFrames;
   nothing in the data path collects to the driver. The stats rows and the
   job-summary aggregates (T6) are tiny per-source rows and are the only
@@ -41,27 +47,9 @@ from .modules import REGISTRY as MODULE_REGISTRY
 from .modules import accepts_repeated_timestamps, get_module, group_streams
 from .operators import filters, quality, stats
 from .plan import Plan, StartMessage, build_plan
-from .plan.model import StreamBinding
+from .plan.model import MS_TO_NS
 from .modules import mdat as mdat_module
 from .sinks import staging
-
-MS_TO_NS = 1_000_000
-
-# Arrival-order column per (module, dataset) — reproduces the reference's
-# per-partition consumption-order append (SURVEY.md §7 "arrival-order
-# output"); helper columns are dropped after ordering.
-ORDER_COLS: dict[tuple[str, str], list[str]] = {
-    ("f144", "log"): ["time"],
-    ("ev44", "events"): ["_global_index"],
-    ("ev44", "pulses"): ["event_time_zero"],
-    ("se00", "log"): ["time"],
-    ("tdct", "tdc"): ["time"],
-    ("ad00", "frames"): ["time"],
-    ("da00", "frames"): ["time"],
-    ("al00", "alarms"): ["alarm_time"],
-    ("ep01", "status"): ["connection_status_time"],
-}
-HELPER_COLS = ("_global_index", "row_index")
 
 
 @dataclass
@@ -73,21 +61,72 @@ class JobResult:
     elapsed_sec: float = 0.0
 
 
-def _stream_key(s: StreamBinding) -> str:
-    return f"{s.path}:{s.module}:{s.source}"
-
-
 def _run_task(task) -> dict:
     """A fan-out task: a zero-argument callable returning the metadata
     values it produced (a write returns none)."""
     return task() or {}
 
 
+def run_tasks(spark: SparkSession, tasks: list) -> dict:
+    """Run a job's fan-out and merge the metadata values its tasks return.
+
+    Every write and aggregate is an independent Spark job: submitted
+    together, the scheduler interleaves their stages instead of leaving
+    slots idle between serial actions — the reference gets the same effect
+    from its per-partition threads feeding one writer. Pool threads
+    inherit the caller's job group, so the whole job can be tracked or
+    cancelled as one; a single task runs inline."""
+    if len(tasks) <= 1:
+        return _run_task(tasks[0]) if tasks else {}
+    # Wrap each task here: the wrapper captures a copy of the caller's
+    # local properties, and one wrapper shared by every task would share
+    # one copy, so concurrent writes would overwrite each other's SQL
+    # execution id and their jobs would be attributed to one execution.
+    wrapped = [inheritable_thread_target(spark)(partial(_run_task, t)) for t in tasks]
+    values: dict[str, object] = {}
+    with ThreadPoolExecutor(max_workers=min(8, len(tasks))) as pool:
+        for got in pool.map(lambda run: run(), wrapped):
+            values.update(got)
+    return values
+
+
+def job_metadata(
+    start: StartMessage, plan: Plan, events: dict[tuple[str, str], int]
+) -> tuple[dict, dict[str, object], list[dict]]:
+    """The job-level metadata batch and live jobs publish: the ``job``
+    info dict; the metadata values known without reading staged data — ev44 ``events``
+    per source from ``events`` (``(module, source) → count``), written
+    whatever ``meta_data`` says because only f144 documents that flag, and
+    the W9 mdat values; and the module-synthesized group attributes (da00
+    NXdata signal/axes) in plan order."""
+    values: dict[str, object] = {}
+    attrs: list[dict] = []
+    for b in plan.streams:
+        module = get_module(b.module)
+        if hasattr(module, "group_attributes"):
+            attrs.extend({"path": b.path, **a} for a in module.group_attributes(b.config))
+        if b.module == "ev44":
+            values[f"{b.path}/events"] = events.get((b.module, b.source), 0)
+    for m in plan.mdat:
+        for name, value in mdat_module.values(
+            {"items": m.items}, start.start_time_ms, start.stop_time_ms
+        ).items():
+            values[f"{m.path.rstrip('/')}/{name}"] = value
+    job = {
+        "job_id": start.job_id,
+        "filename": start.filename,
+        "start_time_ms": start.start_time_ms,
+        "stop_time_ms": start.stop_time_ms,
+        "instrument_name": start.instrument_name,
+    }
+    return job, values, attrs
+
+
 def _prefixed(path: str, values: dict) -> dict:
     return {f"{path}/{name}": value for name, value in values.items()}
 
 
-def _summary(module, df: DataFrame, config: dict | None, path: str) -> dict:
+def summary(module, df: DataFrame, config: dict | None, path: str) -> dict:
     """T6 job-summary aggregates of one binding."""
     rows = module.aggregates(df, config).collect()
     return _prefixed(path, rows[0].asDict()) if rows else {}
@@ -97,8 +136,9 @@ def _statics(module, df: DataFrame, config: dict | None, path: str) -> dict:
     return _prefixed(path, module.statics(df, config))
 
 
-def _grouped_summary(module, df: DataFrame, config: dict | None, group: list) -> dict:
-    """T6 aggregates of a whole source group in one grouped collect."""
+def grouped_summary(module, df: DataFrame, config: dict | None, group: list) -> dict:
+    """T6 aggregates of a whole source group in one grouped collect;
+    ``df`` carries the source name in ``__source``."""
     rows = module.aggregates(df, config, group_key="__source").collect()
     by_source = {r["__source"]: r.asDict() for r in rows}
     values: dict[str, object] = {}
@@ -122,20 +162,16 @@ def _plan_tasks(
     windowed: DataFrame,
     out_dir: str,
     event_counts: dict[tuple[str, str], dict[int, int]],
-) -> tuple[list, dict[str, list[str]], list[dict], dict[str, object]]:
+) -> tuple[list, dict[str, list[str]]]:
     """Build the job's fan-out on the driver: one task per (binding,
     dataset) write and per T6 aggregate or statics collect. Returns the
-    tasks, the datasets staged per stream, the synthesized group
-    attributes and the metadata values already known on the driver (ev44
-    ``events``, from the stats action's event counts).
+    tasks and the datasets staged per stream.
 
     Same-module, same-shape, row-wise bindings are grouped into one pass
     each (modules.group_streams); everything else takes the per-binding
     path."""
     tasks: list = []
     stream_outputs: dict[str, list[str]] = {}
-    attrs: list[dict] = []
-    values: dict[str, object] = {}
     groups, singles = group_streams(plan.streams)
 
     for binding in singles:
@@ -144,31 +180,28 @@ def _plan_tasks(
         src = filters.source_filter(windowed, binding.module, binding.source)
         if not accepts_repeated_timestamps(binding.module):
             src = filters.drop_repeated_timestamps(src)
-        # T6 summaries; "meta_data": false suppresses them
-        # (f144_Writer.cpp:264,282)
-        summary = hasattr(module, "aggregates") and (config or {}).get("meta_data", True)
         if binding.module == "ev44":
+            # ev44's T6 value, ``events``, comes from the stats action
+            # (job_metadata)
             counts = event_counts.get((binding.module, binding.source), {})
             outputs = module.transform(src, config, bases=stats.partition_bases(counts))
-            if summary:
-                values[f"{binding.path}/events"] = sum(counts.values())
         else:
             outputs = module.transform(src, config)
-            if summary:
+            # T6 summaries; "meta_data": false suppresses them
+            # (f144_Writer.cpp:264,282)
+            if hasattr(module, "aggregates") and (config or {}).get("meta_data", True):
                 agg_input = outputs.get("log", src)
-                tasks.append(partial(_summary, module, agg_input, config, binding.path))
+                tasks.append(partial(summary, module, agg_input, config, binding.path))
         for dataset, df in outputs.items():
-            order = [c for c in ORDER_COLS.get((binding.module, dataset), []) if c in df.columns]
+            order = staging.order_cols(binding.module, dataset, df.columns)
             if order:
                 df = df.orderBy(*order)
-            df = df.drop(*[c for c in HELPER_COLS if c in df.columns])
+            df = df.drop(*staging.HELPER_COLS)
             tasks.append(partial(staging.write_dataset, df, out_dir, binding.path, dataset))
         # write-once statics (da00 constants)
         if hasattr(module, "statics"):
             tasks.append(partial(_statics, module, src, config, binding.path))
-        stream_outputs[_stream_key(binding)] = list(outputs)
-        if hasattr(module, "group_attributes"):
-            attrs.extend({"path": binding.path, **a} for a in module.group_attributes(config))
+        stream_outputs[staging.stream_key(binding)] = list(outputs)
 
     # 1000-source fast path: same-module same-config row-wise bindings run
     # as ONE filter + transform + partitionBy write (plus one grouped
@@ -186,7 +219,7 @@ def _plan_tasks(
         outputs = module.transform(keyed, config)
         path_by_source = {b.source: b.path for b in group}
         for dataset, df in outputs.items():
-            order = [c for c in ORDER_COLS.get((module_id, dataset), []) if c in df.columns]
+            order = staging.order_cols(module_id, dataset, df.columns)
             if order:
                 # repartition BY SOURCE first: each source then lands whole
                 # in one task, so sortWithinPartitions gives the same
@@ -196,18 +229,16 @@ def _plan_tasks(
                 # files in task order and the packed time axis is not
                 # monotone
                 df = df.repartition("__source").sortWithinPartitions("__source", *order)
-            df = df.drop(*[c for c in HELPER_COLS if c in df.columns])
+            df = df.drop(*staging.HELPER_COLS)
             tasks.append(partial(
                 staging.write_dataset_grouped, df, out_dir, path_by_source, dataset
             ))
         if hasattr(module, "aggregates") and (config or {}).get("meta_data", True):
             agg_input = outputs.get("log", keyed)
-            tasks.append(partial(_grouped_summary, module, agg_input, config, group))
+            tasks.append(partial(grouped_summary, module, agg_input, config, group))
         for b in group:
-            stream_outputs[_stream_key(b)] = list(outputs)
-            if hasattr(module, "group_attributes"):
-                attrs.extend({"path": b.path, **a} for a in module.group_attributes(config))
-    return tasks, stream_outputs, attrs, values
+            stream_outputs[staging.stream_key(b)] = list(outputs)
+    return tasks, stream_outputs
 
 
 def run_job(
@@ -252,39 +283,18 @@ def run_job(
                 .withColumn("is_buffered_message", F.lit(True))
                 .unionByName(windowed)
             )
-        tasks, stream_outputs, extra_group_attrs, metadata_values = _plan_tasks(
-            plan, windowed, out_dir, event_counts
-        )
-        if tasks:
-            # Every write and aggregate is an independent Spark job:
-            # submitted together, the scheduler interleaves their stages
-            # instead of leaving slots idle between serial actions — the
-            # reference gets the same effect from its per-partition threads
-            # feeding one writer. Pool threads inherit the caller's job
-            # group, so the whole job can be tracked or cancelled as one.
-            with ThreadPoolExecutor(max_workers=min(8, len(tasks))) as pool:
-                for values in pool.map(inheritable_thread_target(spark)(_run_task), tasks):
-                    metadata_values.update(values)
+        tasks, stream_outputs = _plan_tasks(plan, windowed, out_dir, event_counts)
+        fanned = run_tasks(spark, tasks)
     finally:
         checked.unpersist()
 
-    # W9 mdat run metadata (plan-level constants)
-    for m in plan.mdat:
-        for name, value in mdat_module.values(
-            {"items": m.items}, start.start_time_ms, start.stop_time_ms
-        ).items():
-            metadata_values[f"{m.path.rstrip('/')}/{name}"] = value
-
-    job_info = {
-        "job_id": start.job_id,
-        "filename": start.filename,
-        "start_time_ms": start.start_time_ms,
-        "stop_time_ms": start.stop_time_ms,
-        "instrument_name": start.instrument_name,
-    }
+    job_info, metadata_values, group_attrs = job_metadata(
+        start, plan, {k: sum(c.values()) for k, c in event_counts.items()}
+    )
+    metadata_values.update(fanned)
     staging.write_meta(
         out_dir, plan, job_info, stream_outputs, metadata_values,
-        extra_group_attributes=extra_group_attrs,
+        extra_group_attributes=group_attrs,
     )
 
     # K6 — approximate output size gauge (FileWriterTask.h:103-111

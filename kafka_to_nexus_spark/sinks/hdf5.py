@@ -49,23 +49,6 @@ NUMPY_DTYPES = {
     "double": np.float64,
 }
 
-# Helper columns the staging layer adds for cross-file ordering.
-_ORDER_HELPERS = ("batch", "_row_order")
-
-# Per-(module, dataset) fallback sort for streaming-staged data when no
-# explicit _row_order column exists (same keys as runner.ORDER_COLS).
-_FALLBACK_ORDER: dict[tuple[str, str], list[str]] = {
-    ("f144", "log"): ["time"],
-    ("ev44", "pulses"): ["event_time_zero"],
-    ("se00", "log"): ["time"],
-    ("tdct", "tdc"): ["time"],
-    ("ad00", "frames"): ["time"],
-    ("da00", "frames"): ["time"],
-    ("al00", "alarms"): ["alarm_time"],
-    ("ep01", "status"): ["connection_status_time"],
-}
-
-
 def _write_attrs(node, attrs: list[dict]) -> None:
     for a in attrs:
         values = a["values"]
@@ -81,22 +64,20 @@ def _write_attrs(node, attrs: list[dict]) -> None:
 def _ordered_frame(table, module: str, dataset: str):
     """Staged parquet → pandas frame in single-writer append order.
 
-    Batch staging is pre-sorted (runner.ORDER_COLS before write → parquet
-    part files hold ordered ranges). Streaming staging carries
-    (batch, _row_order) — sort on those, falling back to the
-    module's natural time column within a batch."""
+    A batch job stages each dataset already sorted on
+    ``staging.ORDER_COLS`` (parquet part files hold ordered ranges), so it
+    is read as is. A live job stages ``staging.BATCH_ORDER_COLS``: sort on
+    ``batch``, then ``_row_order``, or, for datasets without a row-order
+    helper, the dataset's ``staging.ORDER_COLS`` within the batch."""
     pdf = table.to_pandas()
-    sort_cols: list[str] = []
     if "batch" in pdf.columns:
-        sort_cols.append("batch")
-        if "_row_order" in pdf.columns:
-            sort_cols.append("_row_order")
-        else:
-            sort_cols.extend(
-                c for c in _FALLBACK_ORDER.get((module, dataset), []) if c in pdf.columns
-            )
+        sort_cols = ["batch"] + (
+            ["_row_order"]
+            if "_row_order" in pdf.columns
+            else staging.order_cols(module, dataset, pdf.columns)
+        )
         pdf = pdf.sort_values(sort_cols, kind="stable")
-    return pdf.drop(columns=[c for c in _ORDER_HELPERS if c in pdf.columns])
+    return pdf.drop(columns=[c for c in staging.BATCH_ORDER_COLS if c in pdf.columns])
 
 
 def _chunks(n: int, chunk_size: int):

@@ -16,6 +16,10 @@ Layout:
 
 Scale: each dataset write is a plain distributed parquet write — no
 driver-side collect anywhere in the data path.
+
+Order: a batch job's datasets are sorted on ``ORDER_COLS`` before the
+write; a live job's carry ``batch`` + ``_row_order`` (``with_batch_order``)
+and the packer sorts on those (``sinks.hdf5``).
 """
 
 from __future__ import annotations
@@ -25,10 +29,51 @@ from dataclasses import asdict
 from pathlib import Path
 
 from pyspark.sql import DataFrame
+from pyspark.sql import functions as F
 
-from ..plan.model import Plan
+from ..plan.model import Plan, StreamBinding
 
 META_FILE = "_nexus_meta.json"
+
+# Arrival-order columns per (module, dataset) — reproduces the reference's
+# per-partition consumption-order append (SURVEY.md §7 "arrival-order
+# output"). ``HELPER_COLS`` are transform row-order helpers, dropped before
+# staging; ``BATCH_ORDER_COLS`` are the live-staging order columns the
+# packer sorts on and drops.
+ORDER_COLS: dict[tuple[str, str], list[str]] = {
+    ("f144", "log"): ["time"],
+    ("ev44", "events"): ["_global_index"],
+    ("ev44", "pulses"): ["event_time_zero"],
+    ("se00", "log"): ["time"],
+    ("tdct", "tdc"): ["time"],
+    ("ad00", "frames"): ["time"],
+    ("da00", "frames"): ["time"],
+    ("al00", "alarms"): ["alarm_time"],
+    ("ep01", "status"): ["connection_status_time"],
+}
+HELPER_COLS = ("_global_index", "row_index")
+BATCH_ORDER_COLS = ("batch", "_row_order")
+
+
+def stream_key(binding: StreamBinding) -> str:
+    """Key of a binding's staged-dataset list in ``write_meta``."""
+    return f"{binding.path}:{binding.module}:{binding.source}"
+
+
+def order_cols(module: str, dataset: str, columns) -> list[str]:
+    """The dataset's ``ORDER_COLS`` present in ``columns``."""
+    return [c for c in ORDER_COLS.get((module, dataset), []) if c in columns]
+
+
+def with_batch_order(df: DataFrame, batch: int) -> DataFrame:
+    """Live-staging columns: ``_row_order`` from the transform's row-order
+    helper, helpers dropped, ``batch`` = the micro-batch sequence number.
+    Parquet part-file names are unordered, so read-back and pack sort on
+    (batch, _row_order) to reproduce single-writer append order."""
+    order_src = next((c for c in HELPER_COLS if c in df.columns), None)
+    if order_src is not None:
+        df = df.withColumn("_row_order", F.col(order_src))
+    return df.drop(*HELPER_COLS).withColumn("batch", F.lit(batch))
 
 
 def escape_path(group_path: str) -> str:
@@ -173,6 +218,21 @@ def write_dataset_grouped_batched(
         shutil.rmtree(tmp, ignore_errors=True)
 
 
+def write_dataset_batched(
+    df: DataFrame, out_dir: str | Path, group_path: str, dataset: str
+) -> None:
+    """Per-binding live write: dynamic partition overwrite on ``batch``, so
+    a replayed micro-batch rewrites ONLY its own partition and the staged
+    output stays idempotent under failure/restart (plain append would
+    duplicate the crashed attempt's files)."""
+    (
+        df.write.mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
+        .partitionBy("batch")
+        .parquet(str(dataset_dir(out_dir, group_path, dataset)))
+    )
+
+
 def write_meta(
     out_dir: str | Path,
     plan: Plan,
@@ -198,7 +258,7 @@ def write_meta(
                 "topic": s.topic,
                 "source": s.source,
                 "config": s.config,
-                "datasets": stream_outputs.get(f"{s.path}:{s.module}:{s.source}", []),
+                "datasets": stream_outputs.get(stream_key(s), []),
             }
             for s in plan.streams
         ],

@@ -19,9 +19,8 @@ from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
 
+from ..plan.model import MS_TO_NS
 from ..schemas import MESSAGE_SCHEMA
-
-MS_TO_NS = 1_000_000
 
 
 def _normalize_row(item: dict, offset_by_partition: dict) -> dict:

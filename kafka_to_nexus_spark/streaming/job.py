@@ -9,9 +9,16 @@ Shape:
 - decode: envelope columns from the Kafka value — binary FlatBuffers via
   the pure-Python runtime (``fbs`` package, default) or the JSON fixture
   encoding, both behind the same envelope contract;
-- sink: ``foreachBatch`` → the SAME per-stream filter+transform pipeline as
-  the batch runner, plus the two pieces of genuinely cross-batch state the
-  reference keeps (SURVEY.md §7 "hard parts"):
+- sink: ``foreachBatch`` → the batch runner's per-stream pipeline and job
+  output surface: the ``operators.stats`` scan action, the source filters
+  and module transforms, the write fan-out (``runner.run_tasks``), the T6
+  aggregates (``runner.summary``/``grouped_summary``, here over the staged
+  logs at finalize), the job metadata (``runner.job_metadata``) and the
+  staged-dataset format (``sinks.staging``). What stays live-only is what
+  differs in meaning: the cross-batch F4 repeat carry, the cue derived
+  from the staged log at finalize, first-message statics, batch-keyed
+  idempotent overwrite, and the two pieces of genuinely cross-batch state
+  the reference keeps (SURVEY.md §7 "hard parts"):
     * F3 as-of buffer — latest pre-start message per source, emitted when
       the first in-window message arrives or at stop
       (src/Stream/SourceFilter.cpp:61-66);
@@ -33,6 +40,7 @@ config assembly, exercised wherever a broker exists.
 from __future__ import annotations
 
 from dataclasses import dataclass, field
+from functools import partial, reduce
 from pathlib import Path
 
 from pyspark.sql import DataFrame, Row, SparkSession, Window
@@ -41,15 +49,12 @@ from pyspark.sql import functions as F
 from ..modules import accepts_repeated_timestamps, get_module, group_streams
 from ..operators import filters, quality, stats
 from ..plan import Plan, StartMessage, build_plan
+from ..plan.model import MS_TO_NS
+from ..runner import grouped_summary, job_metadata, run_tasks, summary
 from ..schemas import MESSAGE_SCHEMA
 from ..sinks import staging
 
-MS_TO_NS = 1_000_000
 DEFAULT_TRIGGER = "10 seconds"  # reference DataFlushInterval (StreamerOptions.h:20)
-
-
-def _stream_key(binding) -> str:
-    return f"{binding.path}:{binding.module}:{binding.source}"
 AFTER_STOP_LEEWAY_NS = 10_000_000_000  # AfterStopTime (StreamerOptions.h:25)
 BEFORE_START_LEEWAY_NS = 10_000_000_000  # BeforeStartTime (StreamerOptions.h:24)
 
@@ -508,8 +513,7 @@ class StreamingJob:
         batch_seq = st.batches_processed
         tails = tails or {}
         event_counts = event_counts or {}
-        write_tasks: list[tuple[DataFrame, str]] = []
-        grouped_tasks: list[tuple[DataFrame, dict[str, str], str]] = []
+        tasks: list = []
         groups, singles = group_streams(self.plan.streams)
 
         # -- 1000-source fast path: one filter + transform + partitioned
@@ -556,20 +560,14 @@ class StreamingJob:
             for dataset, df in outputs.items():
                 if dataset == "cue":
                     continue
-                order_src = next(
-                    (c for c in ("_global_index", "row_index") if c in df.columns),
-                    None,
-                )
-                if order_src is not None:
-                    df = df.withColumn("_row_order", F.col(order_src))
-                df = df.drop(
-                    *[c for c in ("_global_index", "row_index") if c in df.columns]
-                )
-                df = df.withColumn("batch", F.lit(batch_seq))
                 if members:
-                    grouped_tasks.append((df, path_by_source, dataset))
+                    tasks.append(partial(
+                        staging.write_dataset_grouped_batched,
+                        staging.with_batch_order(df, batch_seq),
+                        self.out_dir, path_by_source, dataset,
+                    ))
                 for b in group:
-                    written = self._written_datasets.setdefault(_stream_key(b), [])
+                    written = self._written_datasets.setdefault(staging.stream_key(b), [])
                     if dataset not in written:
                         written.append(dataset)
 
@@ -643,7 +641,7 @@ class StreamingJob:
                 )
             else:
                 outputs = module.transform(src, cfg)
-            written = self._written_datasets.setdefault(_stream_key(binding), [])
+            written = self._written_datasets.setdefault(staging.stream_key(binding), [])
             for dataset, df in outputs.items():
                 if dataset == "cue":
                     # batch-local cue indices are meaningless across
@@ -656,19 +654,12 @@ class StreamingJob:
                         "event_index",
                         F.col("event_index") + F.lit(st.events_written.get(key, 0)),
                     )
-                # monotone staging order: (batch, _row_order) — parquet
-                # part-file names are unordered, so read-back/pack sorts on
-                # these to reproduce single-writer append order
-                order_src = next(
-                    (c for c in ("_global_index", "row_index") if c in df.columns), None
-                )
-                if order_src is not None:
-                    df = df.withColumn("_row_order", F.col(order_src))
-                df = df.drop(*[c for c in ("_global_index", "row_index") if c in df.columns])
-                df = df.withColumn("batch", F.lit(batch_seq))
                 if is_present:
-                    target = staging.dataset_dir(self.out_dir, binding.path, dataset)
-                    write_tasks.append((df, str(target)))
+                    tasks.append(partial(
+                        staging.write_dataset_batched,
+                        staging.with_batch_order(df, batch_seq),
+                        self.out_dir, binding.path, dataset,
+                    ))
                 if dataset not in written:
                     written.append(dataset)
             if binding.module == "ev44":
@@ -699,9 +690,9 @@ class StreamingJob:
                             .withColumn("_row_order", F.col("cue_index"))
                             .withColumn("batch", F.lit(batch_seq))
                         )
-                        write_tasks.append((
-                            cue_df,
-                            str(staging.dataset_dir(self.out_dir, binding.path, "cue")),
+                        tasks.append(partial(
+                            staging.write_dataset_batched,
+                            cue_df, self.out_dir, binding.path, "cue",
                         ))
                         if "cue" not in written:
                             written.append("cue")
@@ -709,69 +700,25 @@ class StreamingJob:
                     counts.values()
                 )
 
-        # One write per (binding, dataset), all independent Spark jobs —
-        # run them concurrently (the scheduler interleaves their stages
-        # over the same persisted batch) instead of serially paying each
-        # job's latency. State mutation stayed above, on one thread.
-        # Dynamic partition overwrite on batch: a replayed micro-batch
-        # rewrites ONLY its own partition, making the staged output
-        # idempotent under failure/restart (plain append would duplicate
-        # the crashed attempt's files).
-        def _write(task):
-            df, target = task
-            (
-                df.write.mode("overwrite")
-                .option("partitionOverwriteMode", "dynamic")
-                .partitionBy("batch")
-                .parquet(target)
-            )
-
-        def _write_grouped(task):
-            df, path_by_source, dataset = task
-            staging.write_dataset_grouped_batched(
-                df, self.out_dir, path_by_source, dataset
-            )
-
-        tasks = [(_write, t) for t in write_tasks] + [
-            (_write_grouped, t) for t in grouped_tasks
-        ]
-        if len(tasks) == 1:
-            fn, t = tasks[0]
-            fn(t)
-        elif tasks:
-            from concurrent.futures import ThreadPoolExecutor
-
-            with ThreadPoolExecutor(max_workers=min(8, len(tasks))) as pool:
-                list(pool.map(lambda ft: ft[0](ft[1]), tasks))
+        # One write per (binding, dataset), all independent Spark jobs over
+        # the same persisted batch, on the job's shared fan-out. State
+        # mutation stayed above, on one thread.
+        run_tasks(self.spark, tasks)
         return bool(tasks)  # did this batch stage anything new?
 
-    def _job_info(self) -> dict:
-        return {
-            "job_id": self.start.job_id,
-            "filename": self.start.filename,
-            "start_time_ms": self.start.start_time_ms,
-            "stop_time_ms": self.start.stop_time_ms,
-            "instrument_name": self.start.instrument_name,
-        }
-
-    def _meta_base(self) -> tuple[dict, list]:
-        """Metadata shared by live snapshots and finalize: module group
-        attributes, config-declared statics, cumulative ev44 event
-        counters, and mdat values. The finalize-only surface (cue
-        derivation, T6 aggregates, empty-dataset backfill) stays in
-        finalize() — a snapshot must not mutate job state."""
-        from ..modules import mdat as mdat_module
-
-        metadata_values: dict[str, object] = {}
-        extra_group_attrs: list[dict] = []
+    def _meta_base(self) -> tuple[dict, dict, list]:
+        """Metadata shared by live snapshots and finalize: the job
+        metadata batch and live jobs publish (``runner.job_metadata``, with the
+        cumulative ev44 event counters) plus the first-message statics.
+        The finalize-only surface (cue derivation, T6 aggregates,
+        empty-dataset backfill) stays in finalize() — a snapshot must not
+        mutate job state."""
+        job_info, metadata_values, group_attrs = job_metadata(
+            self.start, self.plan, self.state.events_written
+        )
         empty = None
         for binding in self.plan.streams:
             module = get_module(binding.module)
-            if hasattr(module, "group_attributes"):
-                extra_group_attrs.extend(
-                    {"path": binding.path, **a}
-                    for a in module.group_attributes(binding.config)
-                )
             if hasattr(module, "statics"):
                 # first-message-refined constants captured on the source's
                 # first present batch (statics_by_path, W5); a source that
@@ -784,18 +731,7 @@ class StreamingJob:
                     stored = module.statics(empty, binding.config)
                 for name, value in stored.items():
                     metadata_values[f"{binding.path}/{name}"] = value
-            if binding.module == "ev44":
-                metadata_values[f"{binding.path}/events"] = (
-                    self.state.events_written.get(
-                        (binding.module, binding.source), 0
-                    )
-                )
-        for m in self.plan.mdat:
-            for name, value in mdat_module.values(
-                {"items": m.items}, self.start.start_time_ms, self.start.stop_time_ms
-            ).items():
-                metadata_values[f"{m.path.rstrip('/')}/{name}"] = value
-        return metadata_values, extra_group_attrs
+        return job_info, metadata_values, group_attrs
 
     def enable_snapshots(
         self,
@@ -842,10 +778,10 @@ class StreamingJob:
         if not target or target == "None":
             raise ValueError("snapshot() needs hdf_path or enable_snapshots()")
 
-        metadata_values, extra_group_attrs = self._meta_base()
+        job_info, metadata_values, group_attrs = self._meta_base()
         written: dict[str, list[str]] = {}
         for binding in self.plan.streams:
-            skey = _stream_key(binding)
+            skey = staging.stream_key(binding)
             # only datasets whose staged dir exists — a registered-but-
             # never-written dataset is backfilled at finalize, not here
             written[skey] = [
@@ -857,10 +793,10 @@ class StreamingJob:
         staging.write_meta(
             self.out_dir,
             self.plan,
-            self._job_info(),
+            job_info,
             written,
             metadata_values,
-            extra_group_attributes=extra_group_attrs,
+            extra_group_attributes=group_attrs,
         )
         tmp = f"{target}.snapshot.tmp"
         hdf5.pack(
@@ -894,7 +830,7 @@ class StreamingJob:
         empty_src = None
         for binding in self.plan.streams:
             module = get_module(binding.module)
-            for dataset in self._written_datasets.get(_stream_key(binding), []):
+            for dataset in self._written_datasets.get(staging.stream_key(binding), []):
                 d = staging.dataset_dir(self.out_dir, binding.path, dataset)
                 if d.exists():
                     continue
@@ -903,7 +839,7 @@ class StreamingJob:
                 out = module.transform(empty_src, binding.config).get(dataset)
                 if out is None:
                     continue
-                out = out.withColumn("batch", F.lit(0))
+                out = staging.with_batch_order(out, 0)
                 try:
                     staging.write_empty_dataset(
                         out.schema, self.out_dir, binding.path, dataset
@@ -913,11 +849,11 @@ class StreamingJob:
 
         # shared-with-snapshot surface (group attrs, statics, ev44 event
         # counters, mdat) + the finalize-only additions below
-        metadata_values, extra_group_attrs = self._meta_base()
+        job_info, metadata_values, group_attrs = self._meta_base()
         agg_bindings: list = []
         for binding in self.plan.streams:
             module = get_module(binding.module)
-            written = self._written_datasets.get(_stream_key(binding), [])
+            written = self._written_datasets.get(staging.stream_key(binding), [])
             # K4: cumulative cue from the staged log in staging order
             cue_interval = (binding.config or {}).get("cue_interval")
             if cue_interval and "log" in written:
@@ -951,53 +887,34 @@ class StreamingJob:
             ):
                 agg_bindings.append(binding)
 
-        # T6 aggregates over staged logs: same-module same-shape bindings
-        # union their (tiny, already-reduced) staged logs and run ONE
-        # grouped aggregate job, instead of one read+aggregate+collect job
-        # per stream — O(module-groups) finalize jobs at 1000 sources.
-        if agg_bindings:
-            agg_groups, agg_singles = group_streams(agg_bindings)
-            for (module_id, _shape), group in agg_groups.items():
-                module = get_module(module_id)
-                config = group[0].config
-                parts = [
-                    self.spark.read.parquet(
-                        str(staging.dataset_dir(self.out_dir, b.path, "log"))
-                    ).withColumn("__source", F.lit(b.source))
-                    for b in group
-                ]
-                log = parts[0]
-                for p in parts[1:]:
-                    log = log.unionByName(p)
-                rows = module.aggregates(log, config, group_key="__source").collect()
-                by_source = {r["__source"]: r.asDict() for r in rows}
-                empty_row: dict[str, object] | None = None
-                for b in group:
-                    got = by_source.get(b.source)
-                    if got is None:  # zero-row source: per-binding parity
-                        if empty_row is None:
-                            empty_row = (
-                                module.aggregates(parts[0].limit(0), config)
-                                .collect()[0]
-                                .asDict()
-                            )
-                        got = empty_row
-                    for name, value in got.items():
-                        if name != "__source":
-                            metadata_values[f"{b.path}/{name}"] = value
-            for binding in agg_singles:
-                module = get_module(binding.module)
-                log = self.spark.read.parquet(
-                    str(staging.dataset_dir(self.out_dir, binding.path, "log"))
-                )
-                row = module.aggregates(log, binding.config).collect()
-                if row:
-                    for name, value in row[0].asDict().items():
-                        metadata_values[f"{binding.path}/{name}"] = value
+        # T6 aggregates over staged logs, with the batch runner's helpers:
+        # same-module same-shape bindings union their (tiny, already-
+        # reduced) staged logs and run ONE grouped aggregate job, instead
+        # of one read+aggregate+collect job per stream — O(module-groups)
+        # finalize jobs at 1000 sources.
+        def staged_log(b) -> DataFrame:
+            return self.spark.read.parquet(
+                str(staging.dataset_dir(self.out_dir, b.path, "log"))
+            )
+
+        agg_groups, agg_singles = group_streams(agg_bindings)
+        tasks = []
+        for (module_id, _shape), group in agg_groups.items():
+            log = reduce(DataFrame.unionByName, [
+                staged_log(b).withColumn("__source", F.lit(b.source)) for b in group
+            ])
+            tasks.append(partial(
+                grouped_summary, get_module(module_id), log, group[0].config, group
+            ))
+        tasks += [
+            partial(summary, get_module(b.module), staged_log(b), b.config, b.path)
+            for b in agg_singles
+        ]
+        metadata_values.update(run_tasks(self.spark, tasks))
 
         staging.write_meta(
-            self.out_dir, self.plan, self._job_info(), self._written_datasets,
-            metadata_values, extra_group_attributes=extra_group_attrs,
+            self.out_dir, self.plan, job_info, self._written_datasets,
+            metadata_values, extra_group_attributes=group_attrs,
         )
         # K6 staged-size gauge (FileWriterTask approx_file_size_mb)
         st.metrics["approx_file_size_mb"] = staging.approximate_size_mb(self.out_dir)

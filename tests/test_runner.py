@@ -751,3 +751,142 @@ def test_run_job_decodes_once_and_bounds_spark_jobs(spark, tmp_path):
         assert "_shard_total" not in plan, plan
     jobs = sc.statusTracker().getJobIdsForGroup(group)
     assert 0 < len(jobs) <= MAX_JOBS_2_BANKS_3_PVS, len(jobs)
+
+
+# ---------------------------------------------------------------------------
+# One job-output surface: batch and live jobs
+# ---------------------------------------------------------------------------
+
+# Spark jobs one process_batch of a 1-bank + 3-PV live job runs (local[4],
+# 4 shuffle partitions, AQE on): the stats collect, the grouped f144 log
+# write and the 2 ev44 writes, each with its AQE stage jobs. Raise this
+# only with a reason.
+MAX_JOBS_LIVE_BATCH_1_BANK_3_PVS = 9
+
+
+def test_process_batch_jobs_join_callers_job_group(spark, tmp_path):
+    """Every Spark job of one micro-batch, the concurrent dataset writes
+    included, runs in the caller's job group, so cancelling the group
+    reaches all of them; none runs outside a group."""
+    from kafka_to_nexus_spark import fbs
+    from kafka_to_nexus_spark.streaming.job import StreamingJob
+
+    pvs = ["pv0", "pv1", "pv2"]
+    items = []
+    for k in range(20):
+        ms = 10_050 + 20 * k
+        items.append(_ev44_item("bank0", k % 2, ms, k % 4, k))
+        items += [{"schema": "f144", "topic": "motion", "partition": 0,
+                   "source_name": pv, "timestamp": ms, "value": float(k)} for pv in pvs]
+    start = StartMessage(job_id="live-group", filename="f",
+                         nexus_structure=_structure(pvs, ["bank0"]),
+                         start_time_ms=10_100, stop_time_ms=11_000)
+    envelope = fbs.decode_kafka_flatbuffers(_binary_kafka_df(spark, items))
+    job = StreamingJob(spark, start, str(tmp_path / "live"))
+
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    bus = sc._jsc.sc().listenerBus()
+    bus.waitUntilEmpty()
+    ungrouped = set(tracker.getJobIdsForGroup(None))
+    group = "test-live-batch-group"
+    sc.setJobGroup(group, "live batch job-group guard")
+    try:
+        job.process_batch(envelope, 0)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    bus.waitUntilEmpty()
+    assert job.state.events_written[("ev44", "bank0")] > 0
+    assert set(tracker.getJobIdsForGroup(None)) == ungrouped
+    jobs = tracker.getJobIdsForGroup(group)
+    assert 0 < len(jobs) <= MAX_JOBS_LIVE_BATCH_1_BANK_3_PVS, len(jobs)
+
+
+def test_run_tasks_keeps_each_task_in_its_own_sql_execution(spark, tmp_path):
+    """Concurrent fan-out tasks each keep their own copy of the caller's
+    local properties: every write's jobs belong to its own SQL execution
+    (a shared copy lets the writes overwrite each other's execution id)
+    and to the caller's job group."""
+    from functools import partial
+
+    from kafka_to_nexus_spark.runner import run_tasks
+
+    def write(i: int) -> dict:
+        (spark.range(0, 2000, numPartitions=4).selectExpr("id % 7 AS k")
+         .groupBy("k").count().write.parquet(str(tmp_path / str(i))))
+        return {f"task{i}": i}
+
+    sc = spark.sparkContext
+    store = spark._jsparkSession.sharedState().statusStore()
+    bus = sc._jsc.sc().listenerBus()
+
+    def executions() -> dict:
+        bus.waitUntilEmpty()
+        listed = store.executionsList()
+        return {e.executionId(): e for e in (listed.apply(i) for i in range(listed.size()))}
+
+    before = set(executions())
+    group = "test-run-tasks-properties"
+    sc.setJobGroup(group, "fan-out local properties")
+    try:
+        got = run_tasks(spark, [partial(write, i) for i in range(6)])
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert got == {f"task{i}": i for i in range(6)}
+    new = [e for k, e in executions().items() if k not in before]
+    assert len(new) == 6
+    assert all(e.jobs().size() > 0 for e in new), [e.jobs().size() for e in new]
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == sum(e.jobs().size() for e in new)
+
+
+def test_batch_and_live_job_metadata_match(spark, tmp_path):
+    """run_job and a live job (one process_batch, then finalize) over the
+    same messages publish the same job metadata: the ``job`` info, the
+    module group attributes and every metadata value — the grouped f144
+    T6 aggregates with the empty-row parity of a PV that has no in-window
+    message, ev44 ``events`` of a bank configured ``"meta_data": false``
+    (the flag is documented for f144 only) and the mdat values."""
+    from kafka_to_nexus_spark.sources.fixtures import messages_from_json
+    from kafka_to_nexus_spark.streaming.job import StreamingJob
+
+    pvs = ["pv0", "pv1", "pv2"]
+    structure = _structure(pvs, [])
+    structure["children"][0]["children"] += [
+        {"type": "group", "name": "bank0", "children": [
+            {"module": "ev44", "config": {"topic": "events", "source": "bank0",
+                                          "meta_data": False}}]},
+        {"module": "mdat", "config": {"items": ["start_time", "end_time"]}},
+    ]
+    msgs = []
+    for k in range(8):
+        ms = 10_100 + 100 * k
+        msgs.append(_ev44_item("bank0", k % 2, ms, k % 3, k))
+        msgs += [{"schema": "f144", "topic": "motion", "partition": 0,
+                  "source_name": pv, "timestamp": ms, "value": float(k + i)}
+                 for i, pv in enumerate(pvs[:2])]
+    # pv2's only message is past stop: no in-window row
+    msgs.append({"schema": "f144", "topic": "motion", "partition": 0,
+                 "source_name": "pv2", "timestamp": 12_000, "value": 1.0})
+    for off, m in enumerate(msgs):
+        m["offset"] = off
+    start = StartMessage(job_id="parity", filename="f", nexus_structure=structure,
+                         start_time_ms=10_000, stop_time_ms=11_000)
+
+    res = run_job(spark, start, messages_from_json(spark, msgs), str(tmp_path / "batch"))
+    live = StreamingJob(spark, start, str(tmp_path / "live"))
+    live.process_batch(messages_from_json(spark, msgs), 0)
+    live.finalize()
+
+    batch_meta = staging.read_meta(res.out_dir)
+    live_meta = staging.read_meta(live.out_dir)
+    n_events = sum(len(m.get("time_of_flight", [])) for m in msgs if m["schema"] == "ev44")
+    mv = res.metadata_values
+    assert n_events and mv["/entry/bank0/events"] == n_events
+    assert mv["/entry/pv2/minimum_value"] is None
+    assert mv["/entry/pv1/maximum_value"] == 8.0
+    assert mv["/entry/start_time"] == "1970-01-01T00:00:10.000Z"
+    assert json.loads(json.dumps(mv, default=str)) == batch_meta["metadata_values"]
+    for key in ("metadata_values", "group_attributes", "job"):
+        assert batch_meta[key] == live_meta[key], key
