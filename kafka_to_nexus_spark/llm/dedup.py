@@ -234,20 +234,24 @@ def banded_signatures(
     return sig.select(
         id_col,
         *keep_cols,
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(b).alias("band"),
-                        F.concat_ws(
-                            "|", *[F.col(sig_cols[b * rows_per_band + r]) for r in range(rows_per_band)]
-                        ).alias("band_key"),
-                    )
-                    for b in range(bands)
-                ]
-            )
-        ).alias("bk"),
+        F.explode(_band_structs(sig_cols, bands, rows_per_band)).alias("bk"),
     ).select(id_col, *keep_cols, "bk.band", "bk.band_key")
+
+
+def _band_structs(sig_cols: Sequence[str], bands: int, rows_per_band: int) -> Column:
+    """One row's LSH bands as ``array<struct<band, band_key>>``: band ``b``
+    keys on its ``rows_per_band`` signature columns joined by ``|``."""
+    return F.array(
+        *[
+            F.struct(
+                F.lit(b).alias("band"),
+                F.concat_ws(
+                    "|", *[F.col(sig_cols[b * rows_per_band + r]) for r in range(rows_per_band)]
+                ).alias("band_key"),
+            )
+            for b in range(bands)
+        ]
+    )
 
 
 def lsh_candidate_pairs(
@@ -839,33 +843,60 @@ def _neardup_relations(
     """(banding-uncapped, fingerprints, shingle_hashes) for one side —
     shared by the layout writer, the append path, and the arrival side of
     admission so the two sides can never drift."""
-    sig = minhash_signatures(
-        df,
-        text_col=text_col,
-        id_col=id_col,
-        num_hashes=params["num_hashes"],
-        shingle_k=params["shingle_k"],
-        hash_engine=params["hash_engine"],
-    )
-    banded = banded_signatures(
-        sig,
-        id_col=id_col,
-        bands=params["bands"],
-        rows_per_band=params["rows_per_band"],
-    )
-    fp = df.select(
-        F.col(id_col).alias("doc_id"), F.md5(F.col(text_col)).alias("fp")
-    )
-    sh = df.select(
+    return _neardup_projections(_neardup_rows(df, params, text_col, id_col))
+
+
+def _neardup_rows(
+    df: DataFrame,
+    params: dict,
+    text_col: str = "text",
+    id_col: str = "doc_id",
+    keep_cols: tuple[str, ...] = (),
+) -> DataFrame:
+    """One row per document: ``(doc_id, *keep_cols, fp, bands, sh)`` —
+    the md5 fingerprint, the LSH bands (``array<struct<band,
+    band_key>>``) and the shingle-hash array. The only place the layout's
+    per-document expressions are written: the layout writer, the append
+    path and the admission arrival ledger all project from it."""
+    text = F.col(text_col)
+    rows = df.select(
         F.col(id_col).alias("doc_id"),
+        *keep_cols,
+        F.md5(text).alias("fp"),
         F.transform(
-            F.array_distinct(shingles(F.col(text_col), params["shingle_k"])),
+            F.array_distinct(shingles(text, params["shingle_k"])),
             lambda s: F.conv(F.substring(F.md5(s), 1, 15), 16, 10).cast(
                 "long"
             ),
         ).alias("sh"),
+        text.alias("_text"),
     )
-    return banded, fp, sh
+    sig = minhash_signatures(
+        rows,
+        text_col="_text",
+        id_col="doc_id",
+        num_hashes=params["num_hashes"],
+        shingle_k=params["shingle_k"],
+        keep_cols=(*keep_cols, "fp", "sh"),
+        hash_engine=params["hash_engine"],
+    )
+    bands = _band_structs(
+        [f"m{i}" for i in range(params["num_hashes"])],
+        params["bands"],
+        params["rows_per_band"],
+    )
+    return sig.select("doc_id", *keep_cols, "fp", bands.alias("bands"), "sh")
+
+
+def _neardup_projections(rows: DataFrame) -> tuple[DataFrame, DataFrame, DataFrame]:
+    """(banding-uncapped, fingerprints, shingle_hashes) of
+    :func:`_neardup_rows` output — the three stored relations' shapes.
+    ``bands`` is never empty, so ``inline_outer`` yields what ``inline``
+    would; a non-outer generator would make the optimizer infer a
+    ``size(bands) > 0`` filter and push it below the projection, where
+    it evaluates the whole MinHash expression a second time."""
+    banded = rows.select("doc_id", F.inline_outer("bands"))
+    return banded, rows.select("doc_id", "fp"), rows.select("doc_id", "sh")
 
 
 def _cap_banding(banded: DataFrame, max_bucket: int) -> DataFrame:
@@ -1061,57 +1092,53 @@ def append_neardup_banding(
     import os
 
     p, stored_band, _, _ = _read_neardup_layout(spark, path)
-    capped_new, fp, sh = _neardup_append_frames(
-        p, stored_band, new_docs, text_col, id_col
-    )
-    capped_new.write.mode("append").partitionBy("band").parquet(
-        os.path.join(path, "banding")
-    )
+    banded, fp, sh = _neardup_relations(new_docs, p, text_col, id_col)
+    _cap_increment(banded, stored_band, p["max_bucket"]).write.mode(
+        "append"
+    ).partitionBy("band").parquet(os.path.join(path, "banding"))
     fp.write.mode("append").parquet(os.path.join(path, "fingerprints"))
     sh.write.mode("append").parquet(os.path.join(path, "shingle_hashes"))
 
 
-def _neardup_append_frames(
-    p: dict,
-    stored_band: DataFrame,
-    new_docs: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> tuple[DataFrame, DataFrame, DataFrame]:
-    """(cap-aware banding, fingerprints, shingles) increment for an
-    admitted batch, against a CALLER-SUPPLIED pre-batch standing banding
-    relation — shared by :func:`append_neardup_banding` (the stored
-    banding dir) and the streaming AdmissionSession (its persisted
-    in-memory banding view).
+def _cap_increment(
+    banded: DataFrame, stored_band: DataFrame, max_bucket: int
+) -> DataFrame:
+    """The rows of an uncapped banding increment that fit their bucket's
+    budget left after the CALLER-SUPPLIED pre-batch ``stored_band``
+    occupancy, filled in doc_id order — shared by
+    :func:`append_neardup_banding` (the stored banding dir) and the
+    streaming admission fold (the session's in-memory banding view).
 
-    r14 (guide §2.3/§3.2, arrival-side contract): the cap only needs
-    bucket occupancy for the buckets THIS batch touches, so the standing
-    banding is pre-filtered with a broadcast semi-join on the arrival's
-    (band, band_key) set before aggregating. The old form aggregated the
-    WHOLE standing banding per append — a corpus-sized shuffle every
-    micro-batch at 100 TB; now the shuffle input is bounded by
-    arrival_buckets × max_bucket rows and the standing side stays a
-    streamed scan. Identical capped output: the left join only ever
-    consulted occupancy rows for the arrival's own keys."""
-    banded, fp, sh = _neardup_relations(new_docs, p, text_col, id_col)
-    keys = banded.select("band", "band_key").distinct()
-    occupancy = (
-        stored_band.join(F.broadcast(keys), ["band", "band_key"])
-        .groupBy("band", "band_key")
-        .agg(F.count("*").alias("_n"))
+    The cap only needs the occupancy of the buckets THIS batch touches
+    (r14, arrival-side contract): the standing banding is semi-joined
+    to the broadcast arrival bands, so the standing side stays a
+    streamed scan and the shuffle input is bounded by arrival_buckets ×
+    max_bucket rows. Those standing rows and the increment are ranked
+    together in one bucket window, standing rows first, so an arrival's
+    rank is the occupancy plus its doc_id rank among the arrivals — one
+    exchange, no occupancy aggregate or join."""
+    touched = stored_band.join(
+        F.broadcast(banded.select("band", "band_key")),
+        ["band", "band_key"],
+        "left_semi",
     )
-    capped_new = (
-        banded.withColumn(
+    ranked = (
+        touched.select("doc_id", "band", "band_key", F.lit(True).alias("_standing"))
+        .unionByName(
+            banded.select("doc_id", "band", "band_key", F.lit(False).alias("_standing"))
+        )
+        .withColumn(
             "_rk",
             F.row_number().over(
-                Window.partitionBy("band", "band_key").orderBy("doc_id")
+                Window.partitionBy("band", "band_key").orderBy(
+                    F.col("_standing").desc(), "doc_id"
+                )
             ),
         )
-        .join(occupancy, ["band", "band_key"], "left")
-        .filter(F.col("_rk") + F.coalesce("_n", F.lit(0)) <= p["max_bucket"])
-        .drop("_rk", "_n")
     )
-    return capped_new, fp, sh
+    return ranked.filter(
+        ~F.col("_standing") & (F.col("_rk") <= max_bucket)
+    ).select("band", "band_key", "doc_id")
 
 
 # ---------------------------------------------------------------------------
@@ -1196,23 +1223,51 @@ def bloom_build(
             ).alias("m_bits"),
         )
     )
-    words = (
+    return params, _bloom_fp_words(df, fp_col, params, k, hash_engine)
+
+
+def _bloom_fp_words(
+    df: DataFrame, fp_col: str, params: DataFrame, k: int, hash_engine: str
+) -> DataFrame:
+    """The bitmap rows setting the k positions of each distinct
+    fingerprint in ``df`` at ``params``' ``m_bits``."""
+    return _bloom_word_rows(
         df.select(F.col(fp_col).alias("_fp"))
         .distinct()
-        .crossJoin(F.broadcast(params.select("m_bits")))
-        .select(
-            F.explode(
-                _BLOOM_ENGINES[hash_engine](F.col("_fp"), k, F.col("m_bits"))
-            ).alias("pos")
-        )
-        .select(
-            F.expr("pos div 63").alias("word_idx"),
-            F.expr("shiftleft(1L, cast(pos % 63 as int))").alias("mask"),
-        )
+        .crossJoin(F.broadcast(params.select("m_bits"))),
+        _BLOOM_ENGINES[hash_engine](F.col("_fp"), k, F.col("m_bits")),
+    )
+
+
+def _pos_word_idx() -> Column:
+    """The bitmap word of bit position ``pos``."""
+    return F.expr("pos div 63")
+
+
+def _pos_mask() -> Column:
+    """Position ``pos``'s bit within its word."""
+    return F.expr("shiftleft(1L, cast(pos % 63 as int))")
+
+
+def _bloom_word_rows(df: DataFrame, positions: Column) -> DataFrame:
+    """The bitmap ``(word_idx, word)`` rows setting every position in the
+    ``positions`` arrays of ``df`` — one word-keyed ``bit_or``."""
+    return (
+        df.select(F.explode(positions).alias("pos"))
+        .select(_pos_word_idx().alias("word_idx"), _pos_mask().alias("mask"))
         .groupBy("word_idx")
         .agg(F.bit_or("mask").alias("word"))
     )
-    return params, words
+
+
+def _bloom_key_rows(df: DataFrame, fp_col: str, params: DataFrame) -> DataFrame:
+    """The params increment ``(n_keys, m_bits)`` for the distinct
+    fingerprints in ``df``, at the stored ``m_bits``."""
+    return (
+        df.agg(F.count_distinct(F.col(fp_col)).alias("n_keys"))
+        .crossJoin(F.broadcast(params.select("m_bits")))
+        .select("n_keys", "m_bits")
+    )
 
 
 def bloom_membership(
@@ -1244,15 +1299,13 @@ def bloom_membership(
     return (
         probes.join(
             F.broadcast(words),
-            F.expr("pos div 63") == words["word_idx"],
+            _pos_word_idx() == words["word_idx"],
             "left",
         )
         .select(
             id_col,
             F.coalesce(
-                F.col("word").bitwiseAND(
-                    F.expr("shiftleft(1L, cast(pos % 63 as int))")
-                )
+                F.col("word").bitwiseAND(_pos_mask())
                 != 0,
                 F.lit(False),
             ).alias("_hit"),
@@ -1368,47 +1421,12 @@ def append_bloom(
         )
     import os
 
-    new_words, new_params = _bloom_append_frames(new_df, fp_col, meta, params)
-    new_words.write.mode("append").parquet(os.path.join(path, "words"))
-    new_params.write.mode("append").parquet(os.path.join(path, "params"))
-
-
-def _bloom_append_frames(
-    new_df: DataFrame,
-    fp_col: str,
-    meta: dict,
-    params: DataFrame,
-) -> tuple[DataFrame, DataFrame]:
-    """(words, params) increment rows for one appended batch — shared by
-    :func:`append_bloom` (which writes them to the layout dir) and the
-    streaming AdmissionSession (which ALSO unions the words increment
-    into its persisted in-memory view, so one materialized frame feeds
-    both destinations and memory can never diverge from disk)."""
-    m = params.select("m_bits")
-    new_words = (
-        new_df.select(F.col(fp_col).alias("_fp"))
-        .distinct()
-        .crossJoin(F.broadcast(m))
-        .select(
-            F.explode(
-                _BLOOM_ENGINES[meta["hash_engine"]](
-                    F.col("_fp"), meta["k"], F.col("m_bits")
-                )
-            ).alias("pos")
-        )
-        .select(
-            F.expr("pos div 63").alias("word_idx"),
-            F.expr("shiftleft(1L, cast(pos % 63 as int))").alias("mask"),
-        )
-        .groupBy("word_idx")
-        .agg(F.bit_or("mask").alias("word"))
+    _bloom_fp_words(
+        new_df, fp_col, params, meta["k"], meta["hash_engine"]
+    ).write.mode("append").parquet(os.path.join(path, "words"))
+    _bloom_key_rows(new_df, fp_col, params).write.mode("append").parquet(
+        os.path.join(path, "params")
     )
-    new_params = (
-        new_df.agg(F.count_distinct(F.col(fp_col)).alias("n_keys"))
-        .crossJoin(F.broadcast(m))
-        .select("n_keys", "m_bits")
-    )
-    return new_words, new_params
 
 
 def _recover_aside(dst: str) -> None:
@@ -1638,7 +1656,7 @@ def count_bloom_hits(
     return (
         probes.join(
             F.broadcast(words),
-            F.expr("pos div 63") == words["word_idx"],
+            _pos_word_idx() == words["word_idx"],
             "left",
         )
         .select(
@@ -1649,9 +1667,7 @@ def count_bloom_hits(
             (
                 F.col("_g").isNotNull()
                 & F.coalesce(
-                    F.col("word").bitwiseAND(
-                        F.expr("shiftleft(1L, cast(pos % 63 as int))")
-                    )
+                    F.col("word").bitwiseAND(_pos_mask())
                     != 0,
                     F.lit(False),
                 )

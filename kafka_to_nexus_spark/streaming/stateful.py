@@ -1166,44 +1166,188 @@ def _admit_batch_against(
     id_col: str = "doc_id",
     source_col: str = "source",
 ) -> DataFrame:
-    """:func:`admit_batch`'s body over caller-held layout relations."""
+    """:func:`admit_batch`'s body over caller-held layout relations: the
+    decide over the batch's (lazy) arrival ledger."""
+    return _decide(
+        state, _arrival_ledger(state, batch, text_col, id_col, source_col),
+        quota, tau, id_col, source_col,
+    )
+
+
+def _arrival_ledger(
+    state: dict,
+    batch: DataFrame,
+    text_col: str = "text",
+    id_col: str = "doc_id",
+    source_col: str = "source",
+) -> DataFrame:
+    """A trigger's arrival ledger: one row per arrival, ``(doc_id, source,
+    fp, pos, bands, sh)`` — the md5 fingerprint, its k Bloom probe
+    positions at the stored ``m_bits``, the LSH bands and the
+    shingle-hash array, in one narrow pass over the batch. The decide
+    probes it and the fold projects it, so the md5, MinHash and shingle
+    expressions run once per arrival per trigger (Structured Streaming's
+    incremental execution: each input-derived relation computed once),
+    and they are the layout writer's own (``_neardup_rows``), so the
+    arrival side and the stored side cannot drift. ``m_bits`` comes from
+    the state's params relation."""
+    from ..llm import dedup as llm_dedup
+
+    meta = state["bloom_meta"]
+    rows = llm_dedup._neardup_rows(
+        batch, state["nd_params"], text_col, id_col, keep_cols=(source_col,)
+    )
+    positions = llm_dedup._BLOOM_ENGINES[meta["hash_engine"]](
+        F.col("fp"), meta["k"], F.col("m_bits")
+    )
+    return rows.crossJoin(
+        F.broadcast(state["bloom_params"].select("m_bits"))
+    ).select(
+        "doc_id", F.col(source_col).alias("source"), "fp",
+        positions.alias("pos"), "bands", "sh",
+    )
+
+
+def _decide(
+    state: dict,
+    ledger: DataFrame,
+    quota: int,
+    tau: float,
+    id_col: str = "doc_id",
+    source_col: str = "source",
+) -> DataFrame:
+    """(id_col, source_col, stage) per ledger row, stage ∈ exact_dup |
+    near_dup | quota | admitted. Every probe broadcasts an arrival-sized
+    projection of the ledger against a standing relation, which stays a
+    streamed scan:
+
+    - Bloom: positions ⋈ ``words`` on the word index; an arrival is
+      positive iff all k of its probes hit. A probe counts once however
+      many word rows it hits, so ``words`` may hold one row per word and
+      increment (the session's union of pieces, unaggregated).
+    - Near-dup: bands ⋈ ``band`` ∪ fp ⋈ ``fp`` gives the candidates;
+      candidates ⋈ ``sh`` gives each arrival's best Jaccard.
+    - Quota: one running sum of survivors per source in doc_id order.
+
+    The probe outcomes meet the ledger in one doc-keyed aggregate, not a
+    join per probe. The generators are the ``_outer`` forms for the
+    reason ``llm.dedup._neardup_projections`` gives: over a lazy ledger a
+    non-outer one re-evaluates the arrival hashing in an inferred
+    filter (``pos`` and ``bands`` are never empty, so the rows are the
+    same)."""
     from pyspark.sql import Window
 
     from ..llm import dedup as llm_dedup
 
-    meta = state["bloom_meta"]
-    fp = batch.select(
-        id_col, source_col, F.md5(F.col(text_col)).alias("_fp")
+    probes = ledger.select(
+        "doc_id", "source", F.posexplode_outer("pos").alias("probe", "pos")
     )
-    member = llm_dedup.bloom_membership(
-        fp, state["bloom_params"], state["words"], "_fp", id_col,
-        k=meta["k"], hash_engine=meta["hash_engine"],
+    hits = (
+        F.broadcast(probes)
+        .join(state["words"], llm_dedup._pos_word_idx() == F.col("word_idx"))
+        .filter(F.col("word").bitwiseAND(llm_dedup._pos_mask()) != 0)
+        .select("doc_id", "source", "probe")
     )
-    nd = llm_dedup._neardup_admission_body(
-        state["nd_params"], state["band"], state["fp"], state["sh"],
-        batch, tau=tau, text_col=text_col, id_col=id_col,
-    ).select(id_col, F.col("admitted").alias("_nd_ok"))
-    # r13: pass2 feeds two plan legs (quota ranking + final stage join).
-    # Deliberately NOT checkpointed here: leg-timing showed the decide
-    # ≈ the sum of its single-evaluation legs (exchange reuse already
-    # dedupes the repeated subtree), and a per-batch localCheckpoint
-    # would pin a block the session's close() doesn't own (the
-    # checkpoint-release test catches exactly that leak).
-    pass2 = fp.select(id_col, source_col).join(member, id_col).join(nd, id_col)
-    survivors = pass2.filter(~F.col("bloom_positive") & F.col("_nd_ok"))
-    ranked = survivors.withColumn(
-        "_rk",
-        F.row_number().over(Window.partitionBy(source_col).orderBy(id_col)),
-    ).select(id_col, "_rk")
-    return pass2.join(ranked, id_col, "left").select(
-        id_col,
-        source_col,
-        F.when(F.col("bloom_positive"), F.lit("exact_dup"))
-        .when(~F.col("_nd_ok"), F.lit("near_dup"))
-        .when(F.col("_rk") > quota, F.lit("quota"))
+    arrival = [F.col("doc_id").alias("id_a"), "source", F.col("sh").alias("sh_a")]
+    cand_lsh = F.broadcast(ledger.select(*arrival, F.inline_outer("bands"))).join(
+        state["band"], ["band", "band_key"]
+    )
+    cand_fp = F.broadcast(ledger.select(*arrival, "fp")).join(state["fp"], "fp")
+    cand = cand_lsh.select(
+        "id_a", "source", "sh_a", F.col("doc_id").alias("id_b")
+    ).union(cand_fp.select("id_a", "source", "sh_a", F.col("doc_id").alias("id_b")))
+    # the verify join builds on the candidate (arrival-bounded) side and
+    # streams the standing shingle relation
+    verified = F.broadcast(cand).join(
+        state["sh"], F.col("id_b") == F.col("doc_id")
+    ).select(
+        F.col("id_a").alias("doc_id"),
+        "source",
+        (
+            F.size(F.array_intersect("sh_a", "sh"))
+            / F.size(F.array_union("sh_a", "sh"))
+        ).alias("jaccard"),
+    )
+    per_doc = (
+        ledger.select("doc_id", "source")
+        .unionByName(hits, allowMissingColumns=True)
+        .unionByName(verified, allowMissingColumns=True)
+        # partitioned once, by source: the aggregate and the quota
+        # window both run on this one exchange
+        .repartition("source")
+        .groupBy("source", "doc_id")
+        .agg(
+            (
+                F.size(F.collect_set("probe")) == state["bloom_meta"]["k"]
+            ).alias("_positive"),
+            F.max(F.round("jaccard", 6)).alias("_best"),
+        )
+    )
+    near = F.coalesce(F.col("_best") >= tau, F.lit(False))
+    rank = F.sum((~F.col("_positive") & ~near).cast("int")).over(
+        Window.partitionBy("source")
+        .orderBy("doc_id")
+        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    )
+    return per_doc.select(
+        F.col("doc_id").alias(id_col),
+        F.col("source").alias(source_col),
+        F.when(F.col("_positive"), F.lit("exact_dup"))
+        .when(near, F.lit("near_dup"))
+        .when(rank > quota, F.lit("quota"))
         .otherwise(F.lit("admitted"))
         .alias("stage"),
     )
+
+
+def _fold_appends(
+    state: dict,
+    ledger: DataFrame,
+    admitted_ids: list,
+    bloom_dir: str,
+    neardup_layout: str,
+) -> dict:
+    """The admitted arrivals' layout increments, ``{relation: (frame,
+    append)}``: projections of the trigger's ledger filtered to the
+    admitted ids — the words increment (``bit_or`` of the positions), the
+    params row (distinct fingerprints), the banding capped against the
+    pre-batch occupancy of ``state['band']`` (arrival-bounded), the
+    fingerprints and the shingle hashes. ``append(frame)`` writes a frame
+    to its layout dir."""
+    import os
+
+    from ..llm import dedup as llm_dedup
+
+    admitted = ledger.filter(F.col("doc_id").isin(admitted_ids))
+    banded, fp, sh = llm_dedup._neardup_projections(admitted)
+
+    def appender(*parts, by=None):
+        path = os.path.join(*parts)
+
+        def append(df):
+            writer = df.write.mode("append")
+            (writer.partitionBy(by) if by else writer).parquet(path)
+
+        return append
+
+    return {
+        "words": (
+            llm_dedup._bloom_word_rows(admitted, F.col("pos")),
+            appender(bloom_dir, "words"),
+        ),
+        "params": (
+            llm_dedup._bloom_key_rows(admitted, "fp", state["bloom_params"]),
+            appender(bloom_dir, "params"),
+        ),
+        "band": (
+            llm_dedup._cap_increment(
+                banded, state["band"], state["nd_params"]["max_bucket"]
+            ),
+            appender(neardup_layout, "banding", by="band"),
+        ),
+        "fp": (fp, appender(neardup_layout, "fingerprints")),
+        "sh": (sh, appender(neardup_layout, "shingle_hashes")),
+    }
 
 
 def admit_and_fold(
@@ -1239,118 +1383,120 @@ def admit_and_fold(
     the exact gate is the Bloom bitmap, and the Jaccard verify is a
     max over candidates).
 
+    The layouts are read once per call. The batch's arrival ledger
+    (:func:`_arrival_ledger`) is pinned (localCheckpoint) for the
+    transaction: the decide probes it, and the five appends — one
+    ``runner.run_tasks`` fan-out — project it, so nothing re-derives
+    the arrival side from the batch text. It is released before return.
+
     The admitted id set is PINNED on the driver between the decision
     write and the folds (O(admitted-per-batch) rows — micro-batch-
     bounded, the runner-style driver-collect budget): the decision plan
     reads the layout LAZILY, so re-deriving 'admitted' from it after
-    append_bloom has mutated the words relation re-scores the batch
-    against its own appends (caught by the stream≡twin parity test;
-    persist() alone does not reliably fence a foreachBatch plan from a
-    mid-batch filesystem append)."""
+    the words append would re-score the batch against its own appends
+    (caught by the stream≡twin parity test)."""
     import os
+    from functools import partial
 
+    from .. import runner
     from ..llm import dedup as llm_dedup
 
-    dec_dir = os.path.join(decisions_path, f"batch={batch_id}")
-    admitted_ids = _decide_or_reuse(
-        spark, dec_dir, id_col,
-        lambda: admit_batch(
-            spark, batch, bloom_layout, neardup_layout, quota, tau,
-            text_col, id_col, source_col,
-        ),
-    )
-    if not admitted_ids:
-        return
-    admitted = batch.filter(F.col(id_col).isin(admitted_ids))
-    with _no_aqe(spark):  # r14: arrival-bounded fold plans (see _no_aqe)
-        llm_dedup.append_bloom(
-            spark, bloom_layout,
-            admitted.select(F.md5(F.col(text_col)).alias("_fp")),
-            "_fp",
-        )
-        llm_dedup.append_neardup_banding(
-            spark, neardup_layout, admitted,
-            text_col=text_col, id_col=id_col,
-        )
-
-
-from contextlib import contextmanager
-
-
-@contextmanager
-def _no_aqe(spark):
-    """AQE off for one micro-batch transaction (r14, guide §1.2): the
-    admission decide AND fold plans are arrival-BOUNDED by the family
-    contract — standing relations are streamed scans into broadcast-
-    hash joins and every shuffle's input is arrival-sized (the r14
-    occupancy fix closed the last standing-wide shuffle) — so AQE has
-    nothing to re-optimize at any corpus size, while its per-exchange
-    stage materialization charged every micro-batch a dozen extra
-    scheduler round-trips (measured: decide 21 jobs → 7, −0.7–1.4
-    s/batch warm at sf0.1; fold legs −0.2–0.3 s)."""
-    prev = spark.conf.get("spark.sql.adaptive.enabled", "true")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    state = _read_admission_state(spark, bloom_layout, neardup_layout)
+    ledger = _arrival_ledger(
+        state, batch, text_col, id_col, source_col
+    ).localCheckpoint()
     try:
-        yield
+        admitted_ids = _decide_or_reuse(
+            spark, os.path.join(decisions_path, f"batch={batch_id}"), id_col,
+            lambda: _decide(state, ledger, quota, tau, id_col, source_col),
+        )
+        if admitted_ids:
+            appends = _fold_appends(
+                state, ledger, admitted_ids,
+                llm_dedup.resolve_bloom_generation(bloom_layout),
+                neardup_layout,
+            )
+            runner.run_tasks(
+                spark, [partial(append, df) for df, append in appends.values()]
+            )
     finally:
-        spark.conf.set("spark.sql.adaptive.enabled", prev)
+        _release(ledger)
+
+
+def _release(df: DataFrame) -> None:
+    """Deterministically free a localCheckpoint-ed frame (ADVICE r12):
+    checkpointed blocks are pinned at the RDD level OUTSIDE the cache
+    manager, so ``DataFrame.unpersist()`` alone leaves the release to
+    ContextCleaner GC — an unbounded executor-storage tail in a session
+    built for thousands of micro-batches (measured: the blocks stay in
+    getRDDStorageInfo after df.unpersist(); the LogicalRDD release
+    removes them). Best effort through the internal plan handle — a
+    failure degrades to the GC path, never raises into the batch
+    transaction."""
+    try:
+        df._jdf.queryExecution().analyzed().rdd().unpersist(False)
+    except Exception:
+        pass
+    try:
+        df.unpersist()
+    except Exception:
+        pass
 
 
 def _decide_or_reuse(spark, dec_dir: str, id_col: str, derive) -> list:
     """The replay-safe decision transaction shared by the per-batch-read
-    path and the cached session: committed decisions (``_SUCCESS``
-    present) are REUSED — the pinned pre-fold snapshot — otherwise
-    ``derive()`` builds them, they land with overwrite, and the admitted
-    ids ride an :class:`~pyspark.sql.Observation` attached to the SAME
-    write action (r14, guide §1.2): the decide used to be two jobs per
-    micro-batch — the decision write plus a filtered collect off a
-    persisted copy — and the observation folds the id pickup into the
-    write, so one job computes the decisions once, writes them, and
-    hands back the admitted set (the driver pin that fences the folds
-    from lazily re-scoring the batch against its own appends is now the
-    collected observation row instead of a persisted frame)."""
+    path, the cached session and the video gate: committed decisions
+    (``_SUCCESS`` present) are REUSED — the pinned pre-fold snapshot —
+    otherwise ``derive()`` builds them, they land with overwrite, and the
+    admitted ids ride an :class:`~pyspark.sql.Observation` attached to
+    the SAME write action, so one job computes the decisions, writes them
+    and hands back the admitted set (the driver pin that fences the folds
+    from lazily re-scoring the batch against its own appends).
+
+    Both paths return the sorted distinct ids: a retried task attempt can
+    merge into the observed ``collect_list`` twice."""
     import os
 
     if os.path.exists(os.path.join(dec_dir, "_SUCCESS")):
-        return [
+        return sorted({
             r[0]
             for r in spark.read.parquet(dec_dir)
             .filter(F.col("stage") == "admitted")
             .select(id_col)
             .collect()
-        ]
+        })
     from pyspark.sql import Observation
 
-    with _no_aqe(spark):
-        obs = Observation()
-        dec = derive().observe(
-            obs,
-            # collect_list skips NULLs: non-admitted rows contribute
-            # nothing
-            F.collect_list(
-                F.when(F.col("stage") == "admitted", F.col(id_col))
-            ).alias("_admitted_ids"),
-        )
-        dec.write.mode("overwrite").parquet(dec_dir)
-    return list(obs.get["_admitted_ids"])
+    obs = Observation()
+    dec = derive().observe(
+        obs,
+        # collect_list skips NULLs: non-admitted rows contribute nothing
+        F.collect_list(
+            F.when(F.col("stage") == "admitted", F.col(id_col))
+        ).alias("_admitted_ids"),
+    )
+    dec.write.mode("overwrite").parquet(dec_dir)
+    return sorted(set(obs.get["_admitted_ids"]))
 
 
 class AdmissionSession:
     """Cross-batch cache for the streaming admission gate's per-batch
     FIXED costs (VERDICT r11 #5): a 100 TB ingest runs thousands of
     small micro-batches, and with :func:`admit_and_fold` each one
-    re-lists and re-reads every layout dir (bloom meta/params/words
-    ×2 — probe and append — plus the three near-dup relations ×2) and
-    re-aggregates bucket occupancy from parquet. This session reads the
-    layouts ONCE, persists the relations, and advances them
-    INCREMENTALLY: each fold materializes the increment frames
-    (``_bloom_append_frames`` / ``_neardup_append_frames``), appends
-    them to the layout dirs (disk stays the source of truth — a
-    restarted session rebuilds from the dirs and sees every fold), and
-    unions the SAME materialized frames into the in-memory view, so
-    memory and disk can never diverge.
+    re-lists and re-reads every layout dir. This session reads the
+    layouts ONCE, pins the relations as a snapshot detached from the
+    dirs (see ``_pin_base``), and advances them INCREMENTALLY: each
+    trigger pins its arrival ledger
+    (:func:`_arrival_ledger`), decides from it (:func:`_decide`), and
+    folds by materializing the ledger's increment projections
+    (:func:`_fold_appends`), appending them to the layout dirs (disk
+    stays the source of truth — a restarted session rebuilds from the
+    dirs and sees every fold) and unioning the SAME materialized frames
+    into the in-memory view, so memory and disk can never diverge. The
+    ledger is released when the trigger ends: the increments are
+    checkpoints of their own and do not read it.
 
-    Consistency: the current view = persisted base ∪ checkpointed
+    Consistency: the current view = pinned base ∪ checkpointed
     increments — union is lazy metadata, so probes scan only cached
     pieces and the old base is never unpersisted mid-plan. Increments
     are lineage-TRUNCATED (localCheckpoint), never merely persisted: a
@@ -1402,17 +1548,34 @@ class AdmissionSession:
         )
         self.bloom_meta = base["bloom_meta"]
         self.nd_params = base["nd_params"]
-        self.bloom_params = base["bloom_params"].persist()
-        # one list per mutable relation: [base, increment, increment, ...]
-        self._words = [base["words"].persist()]
-        self._band = [base["band"].persist()]
-        self._fp = [base["fp"].persist()]
-        self._sh = [base["sh"].persist()]
+        self.bloom_params = base["bloom_params"]
+        # one list per mutable relation: [base, increment, increment, ...];
+        # the base relations are pinned at first use (_pin_base)
+        self._words = [base["words"]]
+        self._band = [base["band"]]
+        self._fp = [base["fp"]]
+        self._sh = [base["sh"]]
+        self._pieces = []
+        self._folds_since_base = 0
+
+    def _pin_base(self) -> None:
+        """Pin the freshly read base relations. A cached parquet read is
+        no snapshot: every append to its dir makes Spark refresh the file
+        listing and rebuild the cache, so each fold's rows would enter the
+        base beside their in-memory increment (counted twice) and every
+        trigger would re-scan the dirs. A lazy local checkpoint detaches
+        the base from the dirs; the cache on top is what probes scan."""
+
+        def pin(df: DataFrame) -> DataFrame:
+            return df.localCheckpoint(eager=False).persist()
+
+        self.bloom_params = pin(self.bloom_params)
+        for pieces in (self._words, self._band, self._fp, self._sh):
+            pieces[0] = pin(pieces[0])
         self._pieces = [
             self.bloom_params, self._words[0], self._band[0],
             self._fp[0], self._sh[0],
         ]
-        self._folds_since_base = 0
 
     @staticmethod
     def _union(pieces: list[DataFrame]) -> DataFrame:
@@ -1422,17 +1585,14 @@ class AdmissionSession:
         return out
 
     def _state(self) -> dict:
-        # words increments may repeat word_idx across pieces — re-fold
-        # with the same associative bit_or the parquet read side uses
-        words = self._union(self._words)
-        if len(self._words) > 1:
-            words = words.groupBy("word_idx").agg(
-                F.bit_or("word").alias("word")
-            )
+        if not self._pieces:
+            self._pin_base()
+        # words increments may repeat word_idx across pieces: _decide
+        # counts each probe once, so the union needs no re-fold
         return {
             "bloom_meta": self.bloom_meta,
             "bloom_params": self.bloom_params,
-            "words": words,
+            "words": self._union(self._words),
             "nd_params": self.nd_params,
             "band": self._union(self._band),
             "fp": self._union(self._fp),
@@ -1457,29 +1617,9 @@ class AdmissionSession:
         self._pieces.append(df)
         return df
 
-    @staticmethod
-    def _release(df: DataFrame) -> None:
-        """Deterministically free a localCheckpoint-ed piece (ADVICE
-        r12): checkpointed blocks are pinned at the RDD level OUTSIDE
-        the cache manager, so ``DataFrame.unpersist()`` alone leaves the
-        release to ContextCleaner GC — an unbounded executor-storage
-        tail in a session built for thousands of micro-batches
-        (measured: the blocks stay in getRDDStorageInfo after
-        df.unpersist(); the LogicalRDD release removes them). Best
-        effort through the internal plan handle — a failure degrades to
-        the GC path, never raises into the batch transaction."""
-        try:
-            df._jdf.queryExecution().analyzed().rdd().unpersist(False)
-        except Exception:
-            pass
-        try:
-            df.unpersist()
-        except Exception:
-            pass
-
     def close(self) -> None:
         for df in self._pieces:
-            self._release(df)
+            _release(df)
         self._pieces = []
 
     #: in-memory piece compaction cadence: above this many increments a
@@ -1496,7 +1636,7 @@ class AdmissionSession:
         merged = self._union(tail).localCheckpoint()
         self._pieces.append(merged)
         for p in tail:
-            self._release(p)  # merged is eager — parents can free now
+            _release(p)  # merged is eager — parents can free now
             if p in self._pieces:
                 self._pieces.remove(p)
         return [pieces[0], merged]
@@ -1511,7 +1651,7 @@ class AdmissionSession:
         old = self._pieces
         self._load_base()  # disk has every fold; fresh base, depth 1
         for df in old:
-            self._release(df)
+            _release(df)
 
     # -- the per-batch transaction -------------------------------------------
 
@@ -1519,91 +1659,57 @@ class AdmissionSession:
         self, batch: DataFrame, batch_id: int, decisions_path: str
     ) -> None:
         """:func:`admit_and_fold` against the cached state — same
-        decision log, same layout-dir appends, same replay contract."""
+        decision log, same layout-dir appends, same replay contract. The
+        ledger is built and pinned on replay too (reused decisions still
+        fold), and the four kept increments are checkpointed and appended
+        in one ``runner.run_tasks`` fan-out, so every fold job joins the
+        caller's job group. State-list mutation stays on this thread,
+        after every append has finished; the ``_pieces.append`` from pool
+        threads is a GIL-atomic list append used only for release."""
         import os
+        from functools import partial
 
+        from .. import runner
         from ..llm import dedup as llm_dedup
 
-        dec_dir = os.path.join(decisions_path, f"batch={batch_id}")
-        admitted_ids = _decide_or_reuse(
-            self.spark, dec_dir, self.id_col,
-            lambda: _admit_batch_against(
-                self._state(), batch, self.quota, self.tau,
-                self.text_col, self.id_col, self.source_col,
-            ),
-        )
-        if not admitted_ids:
-            return
-        admitted = batch.filter(F.col(self.id_col).isin(admitted_ids))
-        # bloom fold: one write action materializes disk AND cache
-        new_words, new_params = llm_dedup._bloom_append_frames(
-            admitted.select(F.md5(F.col(self.text_col)).alias("_fp")),
-            "_fp", self.bloom_meta, self.bloom_params,
-        )
-        bloom_dir = llm_dedup.resolve_bloom_generation(self.bloom_layout)
-        # near-dup fold: the pre-batch cached banding view (the _band
-        # union snapshots the piece list HERE, before any append, so the
-        # cap sees the pre-batch bucket population exactly as the serial
-        # fold did); occupancy itself is built arrival-bounded inside
-        # _neardup_append_frames (r14 — no standing-wide agg per batch)
-        capped_new, fp_new, sh_new = llm_dedup._neardup_append_frames(
-            self.nd_params, self._union(self._band), admitted,
-            self.text_col, self.id_col,
-        )
-        # r13 (guide §2.6): the five append jobs are independent —
-        # different target dirs, all derived from the persisted state +
-        # this batch — so overlap them from a small pool instead of
-        # paying five job latencies serially (~1.1 s/batch measured →
-        # the slowest single job). State-list mutation stays on THIS
-        # thread, after every job has finished; _pieces.append from the
-        # workers is a GIL-atomic list append used only for release.
-        from concurrent.futures import ThreadPoolExecutor
+        # one snapshot of the piece lists: the cap sees the pre-batch
+        # bucket population, as the serial disk fold does
+        state = self._state()
+        ledger = _arrival_ledger(
+            state, batch, self.text_col, self.id_col, self.source_col
+        ).localCheckpoint()
+        try:
+            admitted_ids = _decide_or_reuse(
+                self.spark,
+                os.path.join(decisions_path, f"batch={batch_id}"),
+                self.id_col,
+                lambda: _decide(
+                    state, ledger, self.quota, self.tau,
+                    self.id_col, self.source_col,
+                ),
+            )
+            if not admitted_ids:
+                return
+            appends = _fold_appends(
+                state, ledger, admitted_ids,
+                llm_dedup.resolve_bloom_generation(self.bloom_layout),
+                self.neardup_layout,
+            )
+            params, append_params = appends.pop("params")
 
-        # r14: AQE off for the fold legs too — after the arrival-bounded
-        # occupancy fix every fold shuffle is arrival-sized (see _no_aqe)
-        with _no_aqe(self.spark), ThreadPoolExecutor(max_workers=5) as pool:
-            f_words = pool.submit(
-                self._persist_via_write,
-                new_words,
-                lambda df: df.write.mode("append").parquet(
-                    os.path.join(bloom_dir, "words")
-                ),
-            )
-            f_params = pool.submit(
-                lambda: new_params.write.mode("append").parquet(
-                    os.path.join(bloom_dir, "params")
-                )
-            )
-            f_capped = pool.submit(
-                self._persist_via_write,
-                capped_new,
-                lambda df: df.write.mode("append").partitionBy("band").parquet(
-                    os.path.join(self.neardup_layout, "banding")
-                ),
-            )
-            f_fp = pool.submit(
-                self._persist_via_write,
-                fp_new,
-                lambda df: df.write.mode("append").parquet(
-                    os.path.join(self.neardup_layout, "fingerprints")
-                ),
-            )
-            f_sh = pool.submit(
-                self._persist_via_write,
-                sh_new,
-                lambda df: df.write.mode("append").parquet(
-                    os.path.join(self.neardup_layout, "shingle_hashes")
-                ),
-            )
-            new_words = f_words.result()
-            f_params.result()
-            capped_new, fp_new, sh_new = (
-                f_capped.result(), f_fp.result(), f_sh.result(),
-            )
-        self._words.append(new_words)
-        self._band.append(capped_new)
-        self._fp.append(fp_new)
-        self._sh.append(sh_new)
+            def keep(name, df, append):
+                return {name: self._persist_via_write(df, append)}
+
+            pieces = runner.run_tasks(self.spark, [
+                partial(append_params, params),
+                *(partial(keep, n, *fa) for n, fa in appends.items()),
+            ])
+        finally:
+            _release(ledger)
+        self._words.append(pieces["words"])
+        self._band.append(pieces["band"])
+        self._fp.append(pieces["fp"])
+        self._sh.append(pieces["sh"])
         self._folds_since_base += 1
         self._maybe_consolidate()
 
@@ -1713,8 +1819,7 @@ def video_admit_and_fold(
     )
     if not admitted_ids:
         return
-    with _no_aqe(spark):  # r14: arrival-bounded fold plans (see _no_aqe)
-        mm.append_video_phash_layout(
-            spark, layout, batch.filter(F.col(id_col).isin(admitted_ids)),
-            hash_col, id_col, frame_col, nf_col,
-        )
+    mm.append_video_phash_layout(
+        spark, layout, batch.filter(F.col(id_col).isin(admitted_ids)),
+        hash_col, id_col, frame_col, nf_col,
+    )

@@ -429,3 +429,251 @@ def test_admission_session_partial_fold_failure_replays_consistent(
     fresh_t = {r.doc_id: r.stage for r in stateful.admit_batch(
         spark, _batch_df(spark, B2), bloom_t, nd_t, QUOTA, TAU).collect()}
     assert fresh == fresh_t
+
+
+# ---------------------------------------------------------------------------
+# One-pass trigger: the arrival ledger, its decide and its fold
+# ---------------------------------------------------------------------------
+
+# a batch that admits nothing: copies of standing and admitted docs and a
+# near-duplicate of an admitted one
+B_NONE = [
+    (11, STANDING[2][1], "src_a"),              # exact dup of standing
+    (12, B1[5][1], "src_b"),                    # exact dup of ADMITTED doc 6
+    (13, B2[3][1] + "tail", "src_b"),           # near-dup of ADMITTED doc 10
+]
+# a fold after the empty trigger: novel docs past the quota, and dups of
+# admissions two triggers back
+B4 = [
+    (14, _body("zephyr"), "src_c"),             # admitted
+    (15, _body("yonder"), "src_c"),             # admitted
+    (16, _body("xylem"), "src_c"),              # quota
+    (17, B2[3][1], "src_a"),                    # exact dup of ADMITTED doc 10
+    (18, B1[2][1] + "tail", "src_a"),           # near-dup of ADMITTED doc 3
+]
+
+
+def _reference_stages(state, rows, quota, tau):
+    """The decide's stages by an independent composition over one session
+    state: ``bloom_membership`` (over the bit_or-folded words pieces),
+    ``neardup_admission``'s body, and a per-source doc_id rank of the
+    survivors computed here."""
+    from collections import Counter
+
+    meta = state["bloom_meta"]
+    batch = _batch_df(state["words"].sparkSession, rows)
+    words = state["words"].groupBy("word_idx").agg(F.bit_or("word").alias("word"))
+    positive = {r.doc_id: r.bloom_positive for r in dedup.bloom_membership(
+        batch.select("doc_id", F.md5("text").alias("_fp")),
+        state["bloom_params"], words, "_fp", "doc_id",
+        k=meta["k"], hash_engine=meta["hash_engine"],
+    ).collect()}
+    near_ok = {r.doc_id: r.admitted for r in dedup._neardup_admission_body(
+        state["nd_params"], state["band"], state["fp"], state["sh"], batch, tau,
+    ).collect()}
+    stages, rank = {}, Counter()
+    for doc_id, _, source in sorted(rows):
+        if positive[doc_id]:
+            stages[doc_id] = "exact_dup"
+        elif not near_ok[doc_id]:
+            stages[doc_id] = "near_dup"
+        else:
+            rank[source] += 1
+            stages[doc_id] = "quota" if rank[source] > quota else "admitted"
+    return stages
+
+
+def test_admission_session_decide_equals_reference_composition(spark, tmp_path):
+    """Over four triggers on one session (three of them folding), every
+    arrival's stage equals the reference composition evaluated on the
+    session state the trigger saw: exact and near duplicates of standing
+    and of earlier in-stream admissions, quota overflow, a re-sent
+    quota-rejected doc, and a trigger that admits nothing."""
+    bloom, nd = _build_layouts(spark, tmp_path / "lay")
+    dec = str(tmp_path / "dec")
+    sess = stateful.AdmissionSession(spark, bloom, nd, quota=QUOTA, tau=TAU)
+    try:
+        for seq, rows in enumerate((B1, B2, B_NONE, B4)):
+            want = _reference_stages(sess._state(), rows, QUOTA, TAU)
+            sess.admit_and_fold(_batch_df(spark, rows), seq, dec)
+            got = {r.doc_id: r.stage for r in spark.read.parquet(
+                f"{dec}/batch={seq}").collect()}
+            assert got == want, seq
+            if rows is B_NONE:
+                assert "admitted" not in got.values()
+        assert len(sess._fp) == 4  # base + three folds
+    finally:
+        sess.close()
+    got = {r.doc_id: r.stage for r in spark.read.parquet(dec).collect()}
+    assert {d: got[d] for d in EXPECT} == EXPECT
+    assert {d: got[d] for d, _, _ in B_NONE + B4} == {
+        11: "exact_dup", 12: "exact_dup", 13: "near_dup",
+        14: "admitted", 15: "admitted", 16: "quota",
+        17: "exact_dup", 18: "near_dup",
+    }
+
+
+def test_decide_or_reuse_derive_and_reuse_return_same_ids(spark, tmp_path):
+    """The derive path (ids off the write's Observation) and the reuse
+    path (ids read back from the committed decisions) return one list:
+    sorted, each id once even when the observed rows repeat one."""
+    dec_dir = str(tmp_path / "batch=0")
+    decisions = spark.createDataFrame(
+        [(7, "admitted"), (3, "admitted"), (7, "admitted"), (5, "quota")],
+        "doc_id long, stage string",
+    )
+    derived = stateful._decide_or_reuse(spark, dec_dir, "doc_id", lambda: decisions)
+    reused = stateful._decide_or_reuse(
+        spark, dec_dir, "doc_id",
+        lambda: pytest.fail("committed decisions must be reused"),
+    )
+    assert derived == reused == [3, 7]
+
+
+# Spark jobs one AdmissionSession.admit_and_fold of B1 runs after a
+# warm-up trigger (local[4], 4 shuffle partitions, AQE on): the ledger
+# checkpoint, the decision write and the fold's four checkpointed
+# increments plus five appends, each with its AQE stage jobs. Raise this
+# only with a reason.
+MAX_JOBS_ADMISSION_TRIGGER_B1 = 23
+
+
+def test_admission_session_trigger_jobs_join_callers_job_group(spark, tmp_path):
+    """Every Spark job of one admission trigger, the concurrent fold
+    appends included, runs in the caller's job group, so cancelling the
+    group reaches all of them; none runs outside a group."""
+    bloom, nd = _build_layouts(spark, tmp_path / "lay")
+    dec = str(tmp_path / "dec")
+    sess = stateful.AdmissionSession(spark, bloom, nd, quota=QUOTA, tau=TAU)
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    bus = sc._jsc.sc().listenerBus()
+    try:
+        sess.admit_and_fold(_batch_df(spark, B2), 0, dec)  # warm-up
+        bus.waitUntilEmpty()
+        ungrouped = set(tracker.getJobIdsForGroup(None))
+        group = "test-admission-trigger-group"
+        sc.setJobGroup(group, "admission trigger job-group guard")
+        try:
+            sess.admit_and_fold(_batch_df(spark, B1), 1, dec)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        bus.waitUntilEmpty()
+    finally:
+        sess.close()
+    # no new ungrouped job; earlier ones may be gone, since the status
+    # store drops the oldest 100 jobs at once past spark.ui.retainedJobs
+    assert set(tracker.getJobIdsForGroup(None)) <= ungrouped
+    jobs = tracker.getJobIdsForGroup(group)
+    assert 0 < len(jobs) <= MAX_JOBS_ADMISSION_TRIGGER_B1, len(jobs)
+
+
+def test_admission_session_pins_no_ledger_beyond_live_pieces(
+    spark, tmp_path, monkeypatch
+):
+    """A trigger's ledger is released when the trigger ends: after a
+    trigger that admits nothing and after folds that cross
+    ``COMPACT_EVERY``, no ledger block stays pinned while every live
+    increment's does (the increments are checkpoints of their own and do
+    not read the ledger), and close() frees everything."""
+    sc = spark.sparkContext
+
+    def pinned():
+        return {i.id() for i in sc._jsc.sc().getRDDStorageInfo()} - before
+
+    def rdd_id(df):
+        return df._jdf.queryExecution().analyzed().rdd().id()
+
+    ledgers = []
+    decide = stateful._decide
+
+    def recording_decide(state, ledger, *args):
+        ledgers.append(rdd_id(ledger))
+        return decide(state, ledger, *args)
+
+    monkeypatch.setattr(stateful, "_decide", recording_decide)
+    before = {i.id() for i in sc._jsc.sc().getRDDStorageInfo()}
+    bloom, nd = _build_layouts(spark, tmp_path / "lay")
+    dec = str(tmp_path / "dec")
+    sess = stateful.AdmissionSession(spark, bloom, nd, quota=QUOTA, tau=TAU)
+    monkeypatch.setattr(sess, "COMPACT_EVERY", 2)
+    novel = [
+        [(100 + 10 * i + j, _body(f"fresh{i}x{j}"), "src_a") for j in range(2)]
+        for i in range(3)
+    ]
+    for seq, rows in enumerate([B1, B_NONE, *novel]):
+        sess.admit_and_fold(_batch_df(spark, rows), seq, dec)
+        assert len(ledgers) == seq + 1
+        assert not set(ledgers) & pinned(), seq
+        increments = [p for ps in (sess._words, sess._band, sess._fp, sess._sh)
+                      for p in ps[1:]]
+        assert {rdd_id(p) for p in increments} <= pinned(), seq
+    assert len(sess._fp) <= 1 + sess.COMPACT_EVERY  # compaction ran
+    sess.close()
+    assert pinned() == set(), "close() left blocks pinned"
+
+
+def test_admission_session_views_equal_layout_dirs_after_folds(spark, tmp_path):
+    """After every fold the session's in-memory relations hold exactly
+    the rows of its layout dirs: each fold's rows once, as an increment,
+    never also inside a base relation that an append to its dir
+    refreshed."""
+    from collections import Counter
+
+    bloom, nd = _build_layouts(spark, tmp_path / "lay")
+    dec = str(tmp_path / "dec")
+    sess = stateful.AdmissionSession(spark, bloom, nd, quota=QUOTA, tau=TAU)
+
+    def rows(df, cols):
+        return Counter(
+            tuple(tuple(v) if isinstance(v, list) else v for v in r)
+            for r in df.select(*cols).collect()
+        )
+
+    def words(df):
+        return {r.word_idx: r.word for r in df.groupBy("word_idx").agg(
+            F.bit_or("word").alias("word")).collect()}
+
+    try:
+        for seq, batch in enumerate((B1, B2, B4)):
+            sess.admit_and_fold(_batch_df(spark, batch), seq, dec)
+            state = sess._state()
+            for name, sub, cols in (
+                ("band", "banding", ("doc_id", "band", "band_key")),
+                ("fp", "fingerprints", ("doc_id", "fp")),
+                ("sh", "shingle_hashes", ("doc_id", "sh")),
+            ):
+                disk = spark.read.parquet(f"{nd}/{sub}")
+                assert rows(state[name], cols) == rows(disk, cols), (seq, name)
+            assert words(state["words"]) == words(
+                spark.read.parquet(f"{bloom}/words")), seq
+    finally:
+        sess.close()
+
+
+def test_cap_increment_matches_python_model(spark):
+    """The capped banding increment keeps, per bucket, the first
+    ``max_bucket - occupancy`` arrivals in doc_id order, where occupancy
+    counts the standing rows of that bucket (repeats included)."""
+    import random
+    from collections import Counter
+
+    rng = random.Random(7)
+    stored = [(i, rng.randrange(3), f"k{rng.randrange(5)}") for i in range(40)]
+    stored += stored[:5]  # a replayed append repeats standing rows
+    new = [(1000 + i, rng.randrange(3), f"k{rng.randrange(7)}") for i in range(50)]
+    schema = "doc_id long, band int, band_key string"
+    for max_bucket in (1, 4, 8):
+        got = dedup._cap_increment(
+            spark.createDataFrame(new, schema),
+            spark.createDataFrame(stored, schema),
+            max_bucket,
+        ).select("doc_id", "band", "band_key").collect()
+        occupancy = Counter((b, k) for _, b, k in stored)
+        want = []
+        for doc_id, b, k in sorted(new):
+            if occupancy[(b, k)] < max_bucket:
+                occupancy[(b, k)] += 1
+                want.append((doc_id, b, k))
+        assert sorted(map(tuple, got)) == want, max_bucket
