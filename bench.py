@@ -571,7 +571,7 @@ def _run_e2e_video_admission(spark, sf_dir: str, n_batches: int = 2) -> None:
         try:
             # checkpoint blocks pin outside the cache manager; free them
             # deterministically (the AdmissionSession release path)
-            stateful.AdmissionSession._release(standing_frames)
+            stateful._release(standing_frames)
         except Exception:
             pass
         spark.conf.set("spark.sql.shuffle.partitions", prev_parts)

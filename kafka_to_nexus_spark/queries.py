@@ -1472,7 +1472,7 @@ _CKPT_PERSIST: dict[str, list] = {}
 
 def _release_ckpt(df: DataFrame) -> None:
     """Deterministically free a localCheckpoint-ed frame (the
-    AdmissionSession._release recipe): the LogicalRDD unpersist removes
+    streaming.stateful._release recipe): the LogicalRDD unpersist removes
     the pinned blocks that DataFrame.unpersist alone leaves to
     ContextCleaner GC. Best effort — a failure degrades to the GC path."""
     try:

@@ -1306,48 +1306,102 @@ def _fold_appends(
     admitted_ids: list,
     bloom_dir: str,
     neardup_layout: str,
-) -> dict:
-    """The admitted arrivals' layout increments, ``{relation: (frame,
-    append)}``: projections of the trigger's ledger filtered to the
-    admitted ids — the words increment (``bit_or`` of the positions), the
-    params row (distinct fingerprints), the banding capped against the
-    pre-batch occupancy of ``state['band']`` (arrival-bounded), the
-    fingerprints and the shingle hashes. ``append(frame)`` writes a frame
-    to its layout dir."""
+) -> list[tuple]:
+    """The admitted arrivals' layout increments, as ``(relation, frame,
+    path, partition_by)``: projections of the trigger's ledger filtered
+    to the admitted ids — the words increment (``bit_or`` of the
+    positions), the params row (distinct fingerprints), the banding
+    capped against the pre-batch occupancy of ``state['band']``
+    (arrival-bounded), the fingerprints and the shingle hashes."""
     import os
 
     from ..llm import dedup as llm_dedup
 
     admitted = ledger.filter(F.col("doc_id").isin(admitted_ids))
     banded, fp, sh = llm_dedup._neardup_projections(admitted)
+    cap = state["nd_params"]["max_bucket"]
+    return [
+        ("words", llm_dedup._bloom_word_rows(admitted, F.col("pos")),
+         os.path.join(bloom_dir, "words"), None),
+        ("params", llm_dedup._bloom_key_rows(admitted, "fp", state["bloom_params"]),
+         os.path.join(bloom_dir, "params"), None),
+        ("band", llm_dedup._cap_increment(banded, state["band"], cap),
+         os.path.join(neardup_layout, "banding"), "band"),
+        ("fp", fp, os.path.join(neardup_layout, "fingerprints"), None),
+        ("sh", sh, os.path.join(neardup_layout, "shingle_hashes"), None),
+    ]
 
-    def appender(*parts, by=None):
-        path = os.path.join(*parts)
 
-        def append(df):
-            writer = df.write.mode("append")
-            (writer.partitionBy(by) if by else writer).parquet(path)
+def _append(df: DataFrame, path: str, partition_by: str | None = None) -> None:
+    writer = df.write.mode("append")
+    (writer.partitionBy(partition_by) if partition_by else writer).parquet(path)
 
-        return append
 
-    return {
-        "words": (
-            llm_dedup._bloom_word_rows(admitted, F.col("pos")),
-            appender(bloom_dir, "words"),
-        ),
-        "params": (
-            llm_dedup._bloom_key_rows(admitted, "fp", state["bloom_params"]),
-            appender(bloom_dir, "params"),
-        ),
-        "band": (
-            llm_dedup._cap_increment(
-                banded, state["band"], state["nd_params"]["max_bucket"]
-            ),
-            appender(neardup_layout, "banding", by="band"),
-        ),
-        "fp": (fp, appender(neardup_layout, "fingerprints")),
-        "sh": (sh, appender(neardup_layout, "shingle_hashes")),
-    }
+def _transaction(
+    spark,
+    state: dict,
+    batch: DataFrame,
+    batch_id: int,
+    decisions_path: str,
+    bloom_layout: str,
+    neardup_layout: str,
+    quota: int,
+    tau: float,
+    text_col: str,
+    id_col: str,
+    source_col: str,
+    keep: frozenset = frozenset(),
+) -> dict:
+    """One trigger's admission transaction against ``state``, shared by
+    :func:`admit_and_fold` and :class:`AdmissionSession`: pin the batch's
+    arrival ledger (:func:`_arrival_ledger`, localCheckpoint), decide
+    from it or reuse committed decisions (:func:`_decide_or_reuse`), and
+    append the admitted increments (:func:`_fold_appends`) in one
+    ``runner.run_tasks`` fan-out, so every fold job joins the caller's
+    job group and nothing re-derives the arrival side from the batch
+    text. The ledger is built on replay too (reused decisions still
+    fold) and released before return.
+
+    The increments of the relations named in ``keep`` are materialized
+    once (eager localCheckpoint) before their append, and the SAME
+    materializations are returned, ``{relation: frame}``, so a caller's
+    in-memory view holds exactly what the dirs received. On failure they
+    are released and the error propagates."""
+    import os
+    from functools import partial
+
+    from .. import runner
+    from ..llm import dedup as llm_dedup
+
+    ledger = _arrival_ledger(
+        state, batch, text_col, id_col, source_col
+    ).localCheckpoint()
+    kept: dict[str, DataFrame] = {}
+
+    def fold(name, df, path, partition_by):
+        if name in keep:
+            # dict assignment from a pool thread is GIL-atomic
+            df = kept[name] = df.localCheckpoint()
+        _append(df, path, partition_by)
+
+    try:
+        admitted_ids = _decide_or_reuse(
+            spark, os.path.join(decisions_path, f"batch={batch_id}"), id_col,
+            lambda: _decide(state, ledger, quota, tau, id_col, source_col),
+        )
+        if admitted_ids:
+            appends = _fold_appends(
+                state, ledger, admitted_ids,
+                llm_dedup.resolve_bloom_generation(bloom_layout), neardup_layout,
+            )
+            runner.run_tasks(spark, [partial(fold, *a) for a in appends])
+    except BaseException:
+        for df in kept.values():
+            _release(df)
+        raise
+    finally:
+        _release(ledger)
+    return kept
 
 
 def admit_and_fold(
@@ -1383,11 +1437,9 @@ def admit_and_fold(
     the exact gate is the Bloom bitmap, and the Jaccard verify is a
     max over candidates).
 
-    The layouts are read once per call. The batch's arrival ledger
-    (:func:`_arrival_ledger`) is pinned (localCheckpoint) for the
-    transaction: the decide probes it, and the five appends — one
-    ``runner.run_tasks`` fan-out — project it, so nothing re-derives
-    the arrival side from the batch text. It is released before return.
+    The layouts are read once per call and the transaction is
+    :func:`_transaction`: one pinned arrival ledger that the decide
+    probes and the five appends project.
 
     The admitted id set is PINNED on the driver between the decision
     write and the folds (O(admitted-per-batch) rows — micro-batch-
@@ -1395,32 +1447,11 @@ def admit_and_fold(
     reads the layout LAZILY, so re-deriving 'admitted' from it after
     the words append would re-score the batch against its own appends
     (caught by the stream≡twin parity test)."""
-    import os
-    from functools import partial
-
-    from .. import runner
-    from ..llm import dedup as llm_dedup
-
-    state = _read_admission_state(spark, bloom_layout, neardup_layout)
-    ledger = _arrival_ledger(
-        state, batch, text_col, id_col, source_col
-    ).localCheckpoint()
-    try:
-        admitted_ids = _decide_or_reuse(
-            spark, os.path.join(decisions_path, f"batch={batch_id}"), id_col,
-            lambda: _decide(state, ledger, quota, tau, id_col, source_col),
-        )
-        if admitted_ids:
-            appends = _fold_appends(
-                state, ledger, admitted_ids,
-                llm_dedup.resolve_bloom_generation(bloom_layout),
-                neardup_layout,
-            )
-            runner.run_tasks(
-                spark, [partial(append, df) for df, append in appends.values()]
-            )
-    finally:
-        _release(ledger)
+    _transaction(
+        spark, _read_admission_state(spark, bloom_layout, neardup_layout),
+        batch, batch_id, decisions_path, bloom_layout, neardup_layout,
+        quota, tau, text_col, id_col, source_col,
+    )
 
 
 def _release(df: DataFrame) -> None:
@@ -1563,11 +1594,19 @@ class AdmissionSession:
         no snapshot: every append to its dir makes Spark refresh the file
         listing and rebuild the cache, so each fold's rows would enter the
         base beside their in-memory increment (counted twice) and every
-        trigger would re-scan the dirs. A lazy local checkpoint detaches
-        the base from the dirs; the cache on top is what probes scan."""
+        trigger would re-scan the dirs. So the cache is built over a lazy
+        local checkpoint, which detaches it from the dirs, and once a
+        count has filled the cache the checkpoint's own blocks are freed:
+        executor storage holds each base once, in the cache probes scan.
+        A lost cache block then fails the next probe instead of being
+        recomputed, as a lost block of any checkpointed piece does; the
+        recovery is the same, a session rebuilt from the dirs."""
 
         def pin(df: DataFrame) -> DataFrame:
-            return df.localCheckpoint(eager=False).persist()
+            df = df.localCheckpoint(eager=False).persist()
+            df.count()  # one scan of the dirs fills checkpoint and cache
+            df._jdf.queryExecution().analyzed().rdd().unpersist(False)
+            return df
 
         self.bloom_params = pin(self.bloom_params)
         for pieces in (self._words, self._band, self._fp, self._sh):
@@ -1598,24 +1637,6 @@ class AdmissionSession:
             "fp": self._union(self._fp),
             "sh": self._union(self._sh),
         }
-
-    def _persist_via_write(self, df: DataFrame, write) -> DataFrame:
-        """Materialize an increment ONCE (eager localCheckpoint), append
-        the SAME materialization to the layout dir, and register it as a
-        cached piece. localCheckpoint — not persist() — because a
-        persisted DataFrame keeps its full LOGICAL plan, and each fold's
-        increment plan nests the union of every earlier piece (occupancy
-        → union → pieces → …): by batch 9 the analyzer was walking an
-        exponentially nested tree (4.3 s → 58.5 s/batch, measured solo)
-        even though execution hit the cache. The checkpoint truncates
-        the plan to the pinned RDD, so batch N's plan is O(pieces), and
-        consolidation bounds pieces. Executor-pinned blocks are fine
-        here: disk stays the source of truth — a failed/restarted
-        session rebuilds from the layout dirs."""
-        df = df.localCheckpoint()  # eager: one computation, tiny plan
-        write(df)
-        self._pieces.append(df)
-        return df
 
     def close(self) -> None:
         for df in self._pieces:
@@ -1659,57 +1680,25 @@ class AdmissionSession:
         self, batch: DataFrame, batch_id: int, decisions_path: str
     ) -> None:
         """:func:`admit_and_fold` against the cached state — same
-        decision log, same layout-dir appends, same replay contract. The
-        ledger is built and pinned on replay too (reused decisions still
-        fold), and the four kept increments are checkpointed and appended
-        in one ``runner.run_tasks`` fan-out, so every fold job joins the
-        caller's job group. State-list mutation stays on this thread,
-        after every append has finished; the ``_pieces.append`` from pool
-        threads is a GIL-atomic list append used only for release."""
-        import os
-        from functools import partial
-
-        from .. import runner
-        from ..llm import dedup as llm_dedup
-
+        decision log, same layout-dir appends, same replay contract, one
+        :func:`_transaction`. The four kept increments come back as the
+        checkpointed frames the dirs received and join the in-memory
+        view on this thread, after every append has finished."""
         # one snapshot of the piece lists: the cap sees the pre-batch
         # bucket population, as the serial disk fold does
-        state = self._state()
-        ledger = _arrival_ledger(
-            state, batch, self.text_col, self.id_col, self.source_col
-        ).localCheckpoint()
-        try:
-            admitted_ids = _decide_or_reuse(
-                self.spark,
-                os.path.join(decisions_path, f"batch={batch_id}"),
-                self.id_col,
-                lambda: _decide(
-                    state, ledger, self.quota, self.tau,
-                    self.id_col, self.source_col,
-                ),
-            )
-            if not admitted_ids:
-                return
-            appends = _fold_appends(
-                state, ledger, admitted_ids,
-                llm_dedup.resolve_bloom_generation(self.bloom_layout),
-                self.neardup_layout,
-            )
-            params, append_params = appends.pop("params")
-
-            def keep(name, df, append):
-                return {name: self._persist_via_write(df, append)}
-
-            pieces = runner.run_tasks(self.spark, [
-                partial(append_params, params),
-                *(partial(keep, n, *fa) for n, fa in appends.items()),
-            ])
-        finally:
-            _release(ledger)
-        self._words.append(pieces["words"])
-        self._band.append(pieces["band"])
-        self._fp.append(pieces["fp"])
-        self._sh.append(pieces["sh"])
+        kept = _transaction(
+            self.spark, self._state(), batch, batch_id, decisions_path,
+            self.bloom_layout, self.neardup_layout, self.quota, self.tau,
+            self.text_col, self.id_col, self.source_col,
+            keep=frozenset(("words", "band", "fp", "sh")),
+        )
+        if not kept:
+            return
+        self._pieces.extend(kept.values())
+        self._words.append(kept["words"])
+        self._band.append(kept["band"])
+        self._fp.append(kept["fp"])
+        self._sh.append(kept["sh"])
         self._folds_since_base += 1
         self._maybe_consolidate()
 

@@ -18,7 +18,13 @@ TESTDATA = Path(os.environ.get("SPARK_GRAFT_TESTDATA", "/root/testdata"))
 def spark():
     from kafka_to_nexus_spark.session import get_spark
 
-    s = get_spark(app_name="tests", master="local[4]", shuffle_partitions=4)
+    # The job-group tests compare the status store's ungrouped job ids
+    # before and after a call; past spark.ui.retainedJobs (1000) the
+    # store drops its oldest jobs, so retain every job the suite runs.
+    s = get_spark(
+        app_name="tests", master="local[4]", shuffle_partitions=4,
+        extra_conf={"spark.ui.retainedJobs": "1000000"},
+    )
     yield s
 
 

@@ -798,9 +798,7 @@ def test_process_batch_jobs_join_callers_job_group(spark, tmp_path):
         sc.setLocalProperty("spark.job.description", None)
     bus.waitUntilEmpty()
     assert job.state.events_written[("ev44", "bank0")] > 0
-    # no new ungrouped job; earlier ones may be gone, since the status
-    # store drops the oldest 100 jobs at once past spark.ui.retainedJobs
-    assert set(tracker.getJobIdsForGroup(None)) <= ungrouped
+    assert set(tracker.getJobIdsForGroup(None)) == ungrouped
     jobs = tracker.getJobIdsForGroup(group)
     assert 0 < len(jobs) <= MAX_JOBS_LIVE_BATCH_1_BANK_3_PVS, len(jobs)
 

@@ -562,9 +562,7 @@ def test_admission_session_trigger_jobs_join_callers_job_group(spark, tmp_path):
         bus.waitUntilEmpty()
     finally:
         sess.close()
-    # no new ungrouped job; earlier ones may be gone, since the status
-    # store drops the oldest 100 jobs at once past spark.ui.retainedJobs
-    assert set(tracker.getJobIdsForGroup(None)) <= ungrouped
+    assert set(tracker.getJobIdsForGroup(None)) == ungrouped
     jobs = tracker.getJobIdsForGroup(group)
     assert 0 < len(jobs) <= MAX_JOBS_ADMISSION_TRIGGER_B1, len(jobs)
 
