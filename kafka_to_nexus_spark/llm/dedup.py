@@ -18,6 +18,9 @@ from collections.abc import Sequence
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from . import layout
+from .layout import compact_parquet_subdir  # noqa: F401
+
 
 def exact_dedup(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
     """Keep the lowest id per exact content hash."""
@@ -795,33 +798,15 @@ def mirror_merged_flags(
 
 
 # --- Stored standing-corpus banding (L68) ------------------------------------
-# Build-once/probe-forever for near-dup admission (VERDICT r9 #1): a
-# continuously-ingesting corpus must not recompute signatures + banding +
-# bucket caps over its ENTIRE standing side per admission batch (the
-# reference's analog: its standing consumer state is maintained, never
-# rebuilt per message — Stream/Partition.cpp:174-223). The layout persists
-# exactly what admission needs, keyed by doc id:
-#
-# - ``banding/``        (band, band_key, doc_id) — CAPPED at ``max_bucket``
-#                       rows per (band, band_key) ordered by doc_id, the
-#                       same cap rule the inline L66 query applies (an
-#                       uncapped standing banding measured disk-filling at
-#                       the ×100 tier — SCALE.md r9). Partitioned by
-#                       ``band``; at cluster scale, bucket by band_key so
-#                       the admission join co-locates without a shuffle.
-# - ``fingerprints/``   (doc_id, fp=md5(text)) — UNCAPPED: the exact-dup
-#                       backstop leg must see every standing doc, so
-#                       identical arrivals stay cap-proof.
-# - ``shingle_hashes/`` (doc_id, sh array<long>) — the 60-bit md5-int
-#                       shingle sets verification needs, so the Jaccard
-#                       stage never touches standing TEXT again. At
-#                       cluster scale, sort/bucket by doc_id for the
-#                       verify join.
-# - ``_meta.json``      parameters + hash engine; admission ADOPTS the
-#                       stored parameters for the arrival side (stronger
-#                       than refusing a mismatch: the two sides cannot
-#                       drift, so mismatched banding can never silently
-#                       lose candidates).
+# Build-once/probe-forever near-dup admission (VERDICT r9 #1), in the
+# stored layout of ``llm/layout.py`` (family ``layout.TEXT``): the
+# ``banding`` relation capped at ``max_bucket`` rows per (band, band_key)
+# in doc_id order (the cap rule the inline L66 query applies), the
+# UNCAPPED ``fingerprints`` exact-dup backstop (identical arrivals stay
+# cap-proof), the ``shingle_hashes`` the Jaccard verify reads (the
+# verify never touches standing TEXT again), and ``_meta.json``, whose
+# parameters admission ADOPTS for the arrival side so the two sides
+# cannot drift.
 
 NEARDUP_LAYOUT_PARAMS = {
     "num_hashes": 8,
@@ -899,19 +884,6 @@ def _neardup_projections(rows: DataFrame) -> tuple[DataFrame, DataFrame, DataFra
     return banded, rows.select("doc_id", "fp"), rows.select("doc_id", "sh")
 
 
-def _cap_banding(banded: DataFrame, max_bucket: int) -> DataFrame:
-    return (
-        banded.withColumn(
-            "_rk",
-            F.row_number().over(
-                Window.partitionBy("band", "band_key").orderBy("doc_id")
-            ),
-        )
-        .filter(F.col("_rk") <= max_bucket)
-        .drop("_rk")
-    )
-
-
 def write_neardup_banding_layout(
     df: DataFrame,
     path: str,
@@ -922,53 +894,13 @@ def write_neardup_banding_layout(
     """Persist the standing-corpus near-dup state (one-time build; see
     the layout comment above). Admission then probes this layout without
     any corpus-sized recompute."""
-    import json
-    import os
-
     p = {**NEARDUP_LAYOUT_PARAMS, **(params or {})}
     banded, fp, sh = _neardup_relations(df, p, text_col, id_col)
-    # r14 (guide §2.6): the three relation writes are independent jobs
-    # over different target dirs — overlap them instead of paying three
-    # job latencies serially (the one-time build cost the streaming
-    # admission e2e re-pays per bench run). _meta.json lands LAST: the
-    # layout's presence markers include it, so a crashed build never
-    # looks complete.
-    from concurrent.futures import ThreadPoolExecutor
-
-    with ThreadPoolExecutor(max_workers=3) as pool:
-        futs = [
-            pool.submit(
-                lambda: _cap_banding(banded, p["max_bucket"])
-                .write.partitionBy("band")
-                .parquet(os.path.join(path, "banding"))
-            ),
-            pool.submit(
-                lambda: fp.write.parquet(os.path.join(path, "fingerprints"))
-            ),
-            pool.submit(
-                lambda: sh.write.parquet(os.path.join(path, "shingle_hashes"))
-            ),
-        ]
-        for f_ in futs:
-            f_.result()
-    with open(os.path.join(path, "_meta.json"), "w") as f:
-        json.dump(p, f)
-
-
-def _read_neardup_layout(spark, path: str) -> tuple[dict, DataFrame, DataFrame, DataFrame]:
-    import json
-    import os
-
-    for sub in ("banding", "fingerprints", "shingle_hashes"):
-        _recover_aside(os.path.join(path, sub))
-    with open(os.path.join(path, "_meta.json")) as f:
-        p = json.load(f)
-    return (
-        p,
-        spark.read.parquet(os.path.join(path, "banding")),
-        spark.read.parquet(os.path.join(path, "fingerprints")),
-        spark.read.parquet(os.path.join(path, "shingle_hashes")),
-    )
+    layout.write(path, layout.TEXT, {
+        "banding": layout.cap(banded, layout.TEXT, p["max_bucket"]),
+        "fingerprints": fp,
+        "shingle_hashes": sh,
+    }, p)
 
 
 def neardup_admission(
@@ -990,7 +922,7 @@ def neardup_admission(
     corpus-sized recompute — the plan-quality test pins the admission
     plan Window-free (the inline L66 twin carries the cap window every
     batch)."""
-    p, stored_band, stored_fp, stored_sh = _read_neardup_layout(spark, path)
+    p, stored_band, stored_fp, stored_sh = layout.read(spark, path, layout.TEXT)
     return _neardup_admission_body(
         p, stored_band, stored_fp, stored_sh, arrivals, tau, text_col, id_col
     )
@@ -1084,61 +1016,19 @@ def append_neardup_banding(
 ) -> None:
     """Fold an admitted batch INTO the stored layout (the L64 pattern:
     compressed appends, probes stay valid during ingest). Fingerprints
-    and shingle sets append wholesale; banding appends cap-aware — the
-    per-bucket budget left after the EXISTING occupancy (one
-    O(distinct-buckets) aggregation over the stored banding, never a
-    corpus-sized window) is filled in doc_id order, so a bucket never
-    exceeds ``max_bucket`` across any number of appends."""
-    import os
-
-    p, stored_band, _, _ = _read_neardup_layout(spark, path)
+    and shingle sets append wholesale; banding appends cap-aware
+    (:func:`~.layout.cap_increment`: the budget each touched bucket has
+    left is filled in doc_id order), so a bucket never exceeds
+    ``max_bucket`` across any number of appends."""
+    p, stored_band, _, _ = layout.read(spark, path, layout.TEXT)
     banded, fp, sh = _neardup_relations(new_docs, p, text_col, id_col)
-    _cap_increment(banded, stored_band, p["max_bucket"]).write.mode(
-        "append"
-    ).partitionBy("band").parquet(os.path.join(path, "banding"))
-    fp.write.mode("append").parquet(os.path.join(path, "fingerprints"))
-    sh.write.mode("append").parquet(os.path.join(path, "shingle_hashes"))
-
-
-def _cap_increment(
-    banded: DataFrame, stored_band: DataFrame, max_bucket: int
-) -> DataFrame:
-    """The rows of an uncapped banding increment that fit their bucket's
-    budget left after the CALLER-SUPPLIED pre-batch ``stored_band``
-    occupancy, filled in doc_id order — shared by
-    :func:`append_neardup_banding` (the stored banding dir) and the
-    streaming admission fold (the session's in-memory banding view).
-
-    The cap only needs the occupancy of the buckets THIS batch touches
-    (r14, arrival-side contract): the standing banding is semi-joined
-    to the broadcast arrival bands, so the standing side stays a
-    streamed scan and the shuffle input is bounded by arrival_buckets ×
-    max_bucket rows. Those standing rows and the increment are ranked
-    together in one bucket window, standing rows first, so an arrival's
-    rank is the occupancy plus its doc_id rank among the arrivals — one
-    exchange, no occupancy aggregate or join."""
-    touched = stored_band.join(
-        F.broadcast(banded.select("band", "band_key")),
-        ["band", "band_key"],
-        "left_semi",
-    )
-    ranked = (
-        touched.select("doc_id", "band", "band_key", F.lit(True).alias("_standing"))
-        .unionByName(
-            banded.select("doc_id", "band", "band_key", F.lit(False).alias("_standing"))
-        )
-        .withColumn(
-            "_rk",
-            F.row_number().over(
-                Window.partitionBy("band", "band_key").orderBy(
-                    F.col("_standing").desc(), "doc_id"
-                )
-            ),
-        )
-    )
-    return ranked.filter(
-        ~F.col("_standing") & (F.col("_rk") <= max_bucket)
-    ).select("band", "band_key", "doc_id")
+    layout.append(spark, path, layout.TEXT, {
+        "banding": layout.cap_increment(
+            banded, stored_band, p["max_bucket"], layout.TEXT
+        ),
+        "fingerprints": fp,
+        "shingle_hashes": sh,
+    })
 
 
 # ---------------------------------------------------------------------------
@@ -1333,34 +1223,14 @@ def write_bloom_layout(
     the false-positive rate degrades gracefully (and measurably, via the
     stored n_keys) as the corpus outgrows the initial sizing — resize =
     rebuild, exactly like production Blooms."""
-    import json
-    import os
-
     if hash_engine not in _BLOOM_ENGINES:
         raise ValueError(f"unknown hash_engine {hash_engine!r}")
     params, words = bloom_build(df, fp_col, k, bits_per_key, hash_engine)
-    # r14 (guide §2.6): two independent writes, two target dirs —
-    # overlap them; _meta.json lands last (completion marker)
-    from concurrent.futures import ThreadPoolExecutor
-
-    with ThreadPoolExecutor(max_workers=2) as pool:
-        f_w = pool.submit(
-            lambda: words.write.mode("overwrite").parquet(
-                os.path.join(path, "words")
-            )
-        )
-        f_p = pool.submit(
-            lambda: params.write.mode("overwrite").parquet(
-                os.path.join(path, "params")
-            )
-        )
-        f_w.result()
-        f_p.result()
-    with open(os.path.join(path, "_meta.json"), "w") as f:
-        json.dump(
-            {"k": k, "bits_per_key": bits_per_key, "hash_engine": hash_engine},
-            f,
-        )
+    layout.write(
+        path, layout.BLOOM, {"words": words, "params": params},
+        {"k": k, "bits_per_key": bits_per_key, "hash_engine": hash_engine},
+        mode="overwrite",
+    )
 
 
 def read_bloom_layout(spark, path: str) -> tuple[dict, DataFrame, DataFrame]:
@@ -1373,24 +1243,13 @@ def read_bloom_layout(spark, path: str) -> tuple[dict, DataFrame, DataFrame]:
     default to "md5", the only engine they could have been built with).
     If a crashed compaction left a final dir missing, the rename-aside
     ``.old`` copy is restored first — the stored filter is never lost."""
-    import json
-    import os
-
     path = resolve_bloom_generation(path)
-    for final in ("words", "params"):
-        _recover_aside(os.path.join(path, final))
-    with open(os.path.join(path, "_meta.json")) as f:
-        meta = json.load(f)
+    meta, words_rows, params_rows = layout.read(spark, path, layout.BLOOM)
     meta.setdefault("hash_engine", "md5")
-    params_rows = spark.read.parquet(os.path.join(path, "params"))
     params = params_rows.agg(
         F.sum("n_keys").alias("n_keys"), F.max("m_bits").alias("m_bits")
     )
-    words = (
-        spark.read.parquet(os.path.join(path, "words"))
-        .groupBy("word_idx")
-        .agg(F.bit_or("word").alias("word"))
-    )
+    words = words_rows.groupBy("word_idx").agg(F.bit_or("word").alias("word"))
     return meta, params, words
 
 
@@ -1419,59 +1278,29 @@ def append_bloom(
             f"{hash_engine!r} would mix position engines and create "
             "false negatives — rebuild the layout to change engines"
         )
-    import os
-
-    _bloom_fp_words(
-        new_df, fp_col, params, meta["k"], meta["hash_engine"]
-    ).write.mode("append").parquet(os.path.join(path, "words"))
-    _bloom_key_rows(new_df, fp_col, params).write.mode("append").parquet(
-        os.path.join(path, "params")
-    )
-
-
-def _recover_aside(dst: str) -> None:
-    """Crash recovery for the rename-aside publish: if a compaction
-    crashed after moving the live dir to ``dst + '.old'`` but before the
-    staged dir landed, restore the aside copy; if both exist the swap
-    completed and the aside is stale — drop it."""
-    import os
-    import shutil
-
-    old = dst + ".old"
-    if os.path.exists(old):
-        if os.path.exists(dst):
-            shutil.rmtree(old)
-        else:
-            os.rename(old, dst)
+    layout.append(spark, path, layout.BLOOM, {
+        "words": _bloom_fp_words(
+            new_df, fp_col, params, meta["k"], meta["hash_engine"]
+        ),
+        "params": _bloom_key_rows(new_df, fp_col, params),
+    })
 
 
 def compact_bloom_layout(spark, path: str) -> None:
     """Fold appended generations back to one row per word (and one
-    params row): read-side merge cost returns to a single pass. Publish
-    is rename-first, NEVER rmtree-then-rename: stage to _compact_*, move
-    the live dir aside to ``.old``, rename the staged dir in, then drop
-    the aside copy — at every instant a words/params directory (live or
-    aside) exists on disk, and :func:`read_bloom_layout` /
-    :func:`_recover_aside` restore the aside copy after a crash, so the
-    stored filter can never be destroyed mid-swap (the _publish_layout
-    discipline the IVF/near-dup layouts use)."""
+    params row): read-side merge cost returns to a single pass. Each
+    relation is staged to ``_compact_*`` and published by the layout's
+    rename-aside swap (``layout._swap_aside``), which
+    :func:`read_bloom_layout` recovers from after a crash, so the stored
+    filter can never be destroyed mid-swap."""
     import os
-    import shutil
 
     path = resolve_bloom_generation(path)
     _, params, words = read_bloom_layout(spark, path)
-    wtmp = os.path.join(path, "_compact_words")
-    ptmp = os.path.join(path, "_compact_params")
-    words.write.mode("overwrite").parquet(wtmp)
-    params.write.mode("overwrite").parquet(ptmp)
-    for tmp, final in ((wtmp, "words"), (ptmp, "params")):
-        dst = os.path.join(path, final)
-        old = dst + ".old"
-        if os.path.exists(old):
-            shutil.rmtree(old)
-        os.rename(dst, old)
-        os.rename(tmp, dst)
-        shutil.rmtree(old)
+    for name, df in (("words", words), ("params", params)):
+        staged = os.path.join(path, f"_compact_{name}")
+        df.write.mode("overwrite").parquet(staged)
+        layout._swap_aside(staged, os.path.join(path, name))
 
 
 def resolve_bloom_generation(path: str) -> str:
@@ -1776,49 +1605,7 @@ def bloom_literal_probe(
     return hit
 
 
-def compact_parquet_subdir(
-    spark,
-    path: str,
-    subdir: str,
-    partition_col: str | None = None,
-    n_files: int = 4,
-) -> None:
-    """Small-files compaction for an append-grown layout relation: a
-    pure REWRITE (same row multiset — crash-window duplicate rows are
-    documented, decision-neutral state and stay; compaction is about
-    file count, not content) into ``n_files`` files (per partition
-    value when ``partition_col`` is set, preserving the directory
-    layout probes partition-prune on). Publish is the
-    :func:`compact_bloom_layout` rename-aside discipline — at every
-    instant a live or aside copy exists on disk, and the layout readers
-    run :func:`_recover_aside` first, so the stored state can never be
-    destroyed mid-swap. At 100 TB this is routine maintenance: every
-    append_* writes one file set per micro-batch, and scan cost grows
-    with file COUNT long before it grows with bytes."""
-    import os
-    import shutil
-
-    src = os.path.join(path, subdir)
-    _recover_aside(src)
-    df = spark.read.parquet(src)
-    staged = os.path.join(path, f"_compact_{subdir}")
-    if partition_col is not None:
-        (df.repartition(n_files, partition_col)
-         .write.mode("overwrite").partitionBy(partition_col)
-         .parquet(staged))
-    else:
-        df.coalesce(n_files).write.mode("overwrite").parquet(staged)
-    old = src + ".old"
-    if os.path.exists(old):
-        shutil.rmtree(old)
-    os.rename(src, old)
-    os.rename(staged, src)
-    shutil.rmtree(old)
-
-
 def compact_neardup_layout(spark, path: str) -> None:
     """Compact every append-grown relation of a near-dup banding layout
     (banding partitions + the fingerprint/shingle backstops)."""
-    compact_parquet_subdir(spark, path, "banding", partition_col="band")
-    compact_parquet_subdir(spark, path, "fingerprints")
-    compact_parquet_subdir(spark, path, "shingle_hashes")
+    layout.compact(spark, path, layout.TEXT)

@@ -32,6 +32,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from . import layout
+
 MEDIA_SCHEMA = T.StructType(
     [
         T.StructField("media_id", T.LongType()),
@@ -1285,7 +1287,7 @@ def phash_near_dup(
 
     ``max_bucket`` caps per-(band_idx, band_val) bucket occupancy — the
     same degenerate-bucket guard every other banding family carries
-    (``dedup._cap_banding``, VERDICT r11 #2): real crawls are full of
+    (``layout.cap``, VERDICT r11 #2): real crawls are full of
     flat/monochrome images (logos, placeholders, tracking pixels) that
     ALL hash to dhash64 = 0, and one such bucket squares the band join
     at corpus scale. The cap keeps the deterministic first
@@ -1295,14 +1297,10 @@ def phash_near_dup(
     untouched. ``max_bucket=None`` is the uncapped exact relation, kept
     registered as the cross-check twin (the L4/L15 capped/uncapped
     precedent)."""
-    if max_hamming >= bands:
-        raise ValueError(
-            f"banded exactness needs max_hamming < bands "
-            f"(got {max_hamming} >= {bands})"
-        )
-    banded = _phash_bands(hashes, hash_col, id_col, bands)
+    _check_bands(bands, max_hamming)
+    banded = _hash_bands(_hashes(hashes, hash_col, id_col), bands)
     if max_bucket is not None:
-        banded = _cap_phash_bands(banded, max_bucket)
+        banded = layout.cap(banded, layout.IMAGE, max_bucket)
     a, b = banded.alias("a"), banded.alias("b")
     cand = (
         a.join(
@@ -1329,23 +1327,45 @@ def phash_near_dup(
     )
 
 
-def _phash_bands(
-    hashes: DataFrame, hash_col: str, id_col: str, bands: int
+def _hashes(
+    df: DataFrame,
+    hash_col: str,
+    id_col: str,
+    frame_col: str | None = None,
+    nf_col: str | None = None,
 ) -> DataFrame:
-    """(_id, _h, band_idx, band_val): the disjoint bit-band explosion
-    shared by the pair join, the stored layout, and the admission
-    probe — one definition so the three sides can never band
-    differently (the _neardup_relations discipline)."""
+    """``(_id, _h)`` per non-null fingerprint — ``(_id, _f, _nf, _h)``
+    for video frames, which carry their frame index and their video's
+    frame count."""
+    frame = (
+        [F.col(frame_col).alias("_f"), F.col(nf_col).alias("_nf")]
+        if frame_col else []
+    )
+    return df.filter(F.col(hash_col).isNotNull()).select(
+        F.col(id_col).alias("_id"), *frame, F.col(hash_col).alias("_h")
+    )
+
+
+def _check_bands(bands: int, max_hamming: int | None = None) -> None:
+    if max_hamming is not None and max_hamming >= bands:
+        raise ValueError(
+            f"banded exactness needs max_hamming < bands "
+            f"(got {max_hamming} >= {bands})"
+        )
     if 64 % bands:
         raise ValueError(f"bands must divide 64 (got {bands})")
+
+
+def _hash_bands(h: DataFrame, bands: int) -> DataFrame:
+    """``(*h.columns, band_idx, band_val)``: the disjoint bit-band split of
+    the 64-bit ``_h``, shared by the pair joins, the stored layouts and
+    the admission probes of images and video frames (video passes its
+    ``_f`` through), so no two sides can band differently."""
+    _check_bands(bands)
     width = 64 // bands
     mask = (1 << width) - 1
-    h = hashes.select(
-        F.col(id_col).alias("_id"), F.col(hash_col).alias("_h")
-    ).filter(F.col("_h").isNotNull())
     return h.select(
-        "_id",
-        "_h",
+        *h.columns,
         F.explode(
             F.array(
                 *[
@@ -1359,33 +1379,34 @@ def _phash_bands(
                 ]
             )
         ).alias("band"),
-    ).select("_id", "_h", "band.band_idx", "band.band_val")
+    ).select(*h.columns, "band.band_idx", "band.band_val")
 
 
-def _cap_phash_bands(banded: DataFrame, max_bucket: int) -> DataFrame:
-    from pyspark.sql import Window
-
+def _band_probe(
+    a_band: DataFrame, stored: DataFrame, family: layout.Family
+) -> DataFrame:
+    """The stored probe of both perceptual admissions: the arrival bands
+    broadcast against the stored capped banding on the family's bucket
+    keys (the standing side stays a streamed scan), each meeting with its
+    exact Hamming distance ``hamming``; arrival columns under ``n.``,
+    stored ones under ``o.``."""
+    on = [F.col(f"n.{k}") == F.col(f"o.{k}") for k in family.keys]
     return (
-        banded.withColumn(
-            "_rk",
-            F.row_number().over(
-                Window.partitionBy("band_idx", "band_val").orderBy("_id")
-            ),
+        a_band.alias("n").hint("broadcast").join(stored.alias("o"), on)
+        .withColumn(
+            "hamming",
+            F.bit_count(F.col("n._h").bitwiseXOR(F.col("o._h"))).cast("int"),
         )
-        .filter(F.col("_rk") <= max_bucket)
-        .drop("_rk")
     )
 
 
 # --- stored perceptual-hash layout (L91) -------------------------------------
-# The text near-dup family has had a STANDING-CORPUS layout since r10
-# (write_neardup_banding_layout): admission probes stored state instead
-# of rescanning history. The image family gets the same contract over
-# its fingerprints — the corpus collapses to (band_idx, band_val, _id,
-# _h) rows (capped per bucket) + _meta.json, arrivals probe via
-# broadcast band equi-join + exact bit_count verify, and admitted
-# images fold back cap-aware. At 100 TB the stored relation is two
-# BIGINTs per image per band — the images themselves are never
+# The text near-dup layout's contract (``llm/layout.py``, family
+# ``layout.IMAGE``) over image fingerprints: the corpus collapses to its
+# capped banding (band_idx, band_val, _id, _h) + _meta.json, arrivals
+# probe via broadcast band equi-join + exact bit_count verify, and
+# admitted images fold back cap-aware. At 100 TB the stored relation is
+# two BIGINTs per image per band — the images themselves are never
 # rescanned, which is the whole point.
 
 PHASH_LAYOUT_PARAMS = {"bands": 4, "max_bucket": 64, "max_hamming": 3,
@@ -1401,30 +1422,11 @@ def write_phash_layout(
 ) -> None:
     """Persist the standing corpus's banded fingerprint relation (one-
     time build; cap paid here, not per probe)."""
-    import json
-    import os
-
     p = {**PHASH_LAYOUT_PARAMS, **(params or {})}
-    banded = _cap_phash_bands(
-        _phash_bands(hashes, hash_col, id_col, p["bands"]), p["max_bucket"]
-    )
-    banded.write.partitionBy("band_idx").parquet(
-        os.path.join(path, "banding")
-    )
-    with open(os.path.join(path, "_meta.json"), "w") as f:
-        json.dump(p, f)
-
-
-def _read_phash_layout(spark, path: str) -> tuple[dict, DataFrame]:
-    import json
-    import os
-
-    from .dedup import _recover_aside
-
-    _recover_aside(os.path.join(path, "banding"))
-    with open(os.path.join(path, "_meta.json")) as f:
-        p = json.load(f)
-    return p, spark.read.parquet(os.path.join(path, "banding"))
+    banded = _hash_bands(_hashes(hashes, hash_col, id_col), p["bands"])
+    layout.write(path, layout.IMAGE, {
+        "banding": layout.cap(banded, layout.IMAGE, p["max_bucket"]),
+    }, p)
 
 
 def phash_admission(
@@ -1442,31 +1444,12 @@ def phash_admission(
     pigeonhole guarantee is the layout's (bands, max_hamming) pair. The
     image-side twin of :func:`dedup.neardup_admission` — same scale
     shape, zero corpus-sized recompute per batch."""
-    p, stored = _read_phash_layout(spark, path)
-    a_band = _phash_bands(arrivals, hash_col, id_col, p["bands"])
-    cand = (
-        a_band.alias("n")
-        .hint("broadcast")
-        .join(
-            stored.alias("o"),
-            (F.col("n.band_idx") == F.col("o.band_idx"))
-            & (F.col("n.band_val") == F.col("o.band_val")),
-        )
-        .select(
-            F.col("n._id").alias("id_a"),
-            F.col("n._h").alias("h_a"),
-            F.col("o._h").alias("h_b"),
-        )
-    )
+    p, stored = layout.read(spark, path, layout.IMAGE)
+    a_band = _hash_bands(_hashes(arrivals, hash_col, id_col), p["bands"])
     best = (
-        cand.select(
-            "id_a",
-            F.bit_count(F.col("h_a").bitwiseXOR(F.col("h_b")))
-            .cast("int")
-            .alias("_ham"),
-        )
-        .groupBy("id_a")
-        .agg(F.min("_ham").alias("best_hamming"))
+        _band_probe(a_band, stored, layout.IMAGE)
+        .groupBy(F.col("n._id").alias("id_a"))
+        .agg(F.min("hamming").alias("best_hamming"))
     )
     base = arrivals.select(F.col(id_col).alias("media_id"))
     return base.join(best, base.media_id == best.id_a, "left").select(
@@ -1486,35 +1469,16 @@ def append_phash_layout(
     id_col: str = "media_id",
 ) -> None:
     """Fold admitted images INTO the stored layout, cap-aware against
-    the EXISTING bucket occupancy (the append_neardup_banding
-    discipline: one O(distinct-buckets) aggregation, never a
-    corpus-sized window; a bucket never exceeds max_bucket across any
-    number of appends)."""
-    import os
-
-    p, stored = _read_phash_layout(spark, path)
-    banded = _phash_bands(new_hashes, hash_col, id_col, p["bands"])
-    occupancy = stored.groupBy("band_idx", "band_val").agg(
-        F.count("*").alias("_n")
-    )
-    from pyspark.sql import Window
-
-    capped_new = (
-        banded.withColumn(
-            "_rk",
-            F.row_number().over(
-                Window.partitionBy("band_idx", "band_val").orderBy("_id")
-            ),
-        )
-        .join(occupancy, ["band_idx", "band_val"], "left")
-        .filter(
-            F.col("_rk") + F.coalesce("_n", F.lit(0)) <= p["max_bucket"]
-        )
-        .drop("_rk", "_n")
-    )
-    capped_new.write.mode("append").partitionBy("band_idx").parquet(
-        os.path.join(path, "banding")
-    )
+    the EXISTING occupancy of the buckets the batch touches
+    (:func:`~.layout.cap_increment`; a bucket never exceeds max_bucket
+    across any number of appends)."""
+    p, stored = layout.read(spark, path, layout.IMAGE)
+    banded = _hash_bands(_hashes(new_hashes, hash_col, id_col), p["bands"])
+    layout.append(spark, path, layout.IMAGE, {
+        "banding": layout.cap_increment(
+            banded, stored, p["max_bucket"], layout.IMAGE
+        ),
+    })
 
 
 # ---------------------------------------------------------------------------
@@ -2530,20 +2494,11 @@ def video_near_dup(
     pair output at C(max_bucket, 2)) — and one (id_a, id_b) count
     aggregation over verified candidate frames. Null-frame rows
     (unparseable payloads) drop out before banding."""
-    if max_hamming >= bands:
-        raise ValueError(
-            f"banded exactness needs max_hamming < bands "
-            f"(got {max_hamming} >= {bands})"
-        )
-    h = frames.filter(F.col(hash_col).isNotNull()).select(
-        F.col(id_col).alias("_id"),
-        F.col(frame_col).alias("_f"),
-        F.col(nf_col).alias("_nf"),
-        F.col(hash_col).alias("_h"),
-    )
-    banded = _video_bands(h, bands)
+    _check_bands(bands, max_hamming)
+    h = _hashes(frames, hash_col, id_col, frame_col, nf_col)
+    banded = _hash_bands(h.drop("_nf"), bands)
     if max_bucket is not None:
-        banded = _cap_video_bands(banded, max_bucket)
+        banded = layout.cap(banded, layout.VIDEO, max_bucket)
     a, b = banded.alias("a"), banded.alias("b")
     cand = (
         a.join(
@@ -2586,60 +2541,15 @@ def video_near_dup(
     )
 
 
-def _video_bands(h: DataFrame, bands: int) -> DataFrame:
-    """(_id, _f, _h, band_idx, band_val): the FRAME-AWARE disjoint
-    bit-band explosion shared by the pair join, the stored layout, and
-    the admission probe — one definition so the three sides can never
-    band differently (the _phash_bands discipline, with frame_idx in
-    the row because the bucket key is (frame, band) everywhere)."""
-    if 64 % bands:
-        raise ValueError(f"bands must divide 64 (got {bands})")
-    width = 64 // bands
-    mask = (1 << width) - 1
-    return h.select(
-        "_id",
-        "_f",
-        "_h",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(j).alias("band_idx"),
-                        F.shiftrightunsigned(F.col("_h"), j * width)
-                        .bitwiseAND(F.lit(mask))
-                        .alias("band_val"),
-                    )
-                    for j in range(bands)
-                ]
-            )
-        ).alias("band"),
-    ).select("_id", "_f", "_h", "band.band_idx", "band.band_val")
-
-
-def _cap_video_bands(banded: DataFrame, max_bucket: int) -> DataFrame:
-    from pyspark.sql import Window
-
-    return (
-        banded.withColumn(
-            "_rk",
-            F.row_number().over(
-                Window.partitionBy("_f", "band_idx", "band_val")
-                .orderBy("_id")
-            ),
-        )
-        .filter(F.col("_rk") <= max_bucket)
-        .drop("_rk")
-    )
-
-
 # --- stored video-fingerprint layout (L94) -----------------------------------
 # The image family's standing-corpus contract (L91) for multi-frame
-# media: the corpus collapses to its capped FRAME-AWARE banded relation
-# (band key = (frame_idx, band_idx, band_val), partitioned by band_idx)
-# plus the per-video frame-count relation the vote needs + _meta.json.
-# Arrivals probe with arrival-side-only compute; admitted videos fold
-# back cap-aware. At 100 TB the videos are never re-decoded — only two
-# BIGINTs per frame per band plus one (id, n_frames) row per video.
+# media, family ``layout.VIDEO`` of ``llm/layout.py``: the corpus
+# collapses to its capped FRAME-AWARE banding (bucket key = (_f,
+# band_idx, band_val), partitioned by band_idx) plus the per-video
+# frame-count relation the vote needs + _meta.json. Arrivals probe with
+# arrival-side-only compute; admitted videos fold back cap-aware. At
+# 100 TB the videos are never re-decoded — only two BIGINTs per frame
+# per band plus one (id, n_frames) row per video.
 
 VIDEO_PHASH_LAYOUT_PARAMS = {
     "bands": 4, "max_bucket": 64, "max_hamming": 3,
@@ -2659,53 +2569,13 @@ def write_video_phash_layout(
     """Persist the standing corpus's frame-aware banded fingerprint
     relation + the (id, n_frames) vote relation (one-time build; the
     occupancy cap is paid here, not per probe)."""
-    import json
-    import os
-
     p = {**VIDEO_PHASH_LAYOUT_PARAMS, **(params or {})}
-    h = frames.filter(F.col(hash_col).isNotNull()).select(
-        F.col(id_col).alias("_id"),
-        F.col(frame_col).alias("_f"),
-        F.col(nf_col).alias("_nf"),
-        F.col(hash_col).alias("_h"),
-    )
-    banded = _cap_video_bands(_video_bands(h, p["bands"]), p["max_bucket"])
-    # r14 (guide §2.6): two independent writes, two target dirs —
-    # overlap them; _meta.json lands last (completion marker)
-    from concurrent.futures import ThreadPoolExecutor
-
-    with ThreadPoolExecutor(max_workers=2) as pool:
-        f_band = pool.submit(
-            lambda: banded.write.partitionBy("band_idx").parquet(
-                os.path.join(path, "banding")
-            )
-        )
-        f_nf = pool.submit(
-            lambda: h.select("_id", "_nf").distinct().write.parquet(
-                os.path.join(path, "nframes")
-            )
-        )
-        f_band.result()
-        f_nf.result()
-    with open(os.path.join(path, "_meta.json"), "w") as f:
-        json.dump(p, f)
-
-
-def _read_video_phash_layout(spark, path: str):
-    import json
-    import os
-
-    from .dedup import _recover_aside
-
-    for sub in ("banding", "nframes"):
-        _recover_aside(os.path.join(path, sub))
-    with open(os.path.join(path, "_meta.json")) as f:
-        p = json.load(f)
-    return (
-        p,
-        spark.read.parquet(os.path.join(path, "banding")),
-        spark.read.parquet(os.path.join(path, "nframes")),
-    )
+    h = _hashes(frames, hash_col, id_col, frame_col, nf_col)
+    banded = _hash_bands(h.drop("_nf"), p["bands"])
+    layout.write(path, layout.VIDEO, {
+        "banding": layout.cap(banded, layout.VIDEO, p["max_bucket"]),
+        "nframes": h.select("_id", "_nf").distinct(),
+    }, p)
 
 
 def video_phash_admission(
@@ -2727,37 +2597,19 @@ def video_phash_admission(
     verify and the vote run on candidates only — zero corpus-sized
     recompute per batch, the :func:`phash_admission` contract with the
     frame vote on top."""
-    p, stored, stored_nf = _read_video_phash_layout(spark, path)
-    h = arrival_frames.filter(F.col(hash_col).isNotNull()).select(
-        F.col(id_col).alias("_id"),
-        F.col(frame_col).alias("_f"),
-        F.col(nf_col).alias("_nf"),
-        F.col(hash_col).alias("_h"),
-    )
-    a_band = _video_bands(h, p["bands"])
-    cand = (
-        a_band.alias("n")
-        .hint("broadcast")
-        .join(
-            stored.alias("o"),
-            (F.col("n._f") == F.col("o._f"))
-            & (F.col("n.band_idx") == F.col("o.band_idx"))
-            & (F.col("n.band_val") == F.col("o.band_val")),
-        )
-        .select(
-            F.col("n._id").alias("id_a"),
-            F.col("o._id").alias("id_b"),
-            F.col("n._f").alias("_f"),
-            F.col("n._h").alias("h_a"),
-            F.col("o._h").alias("h_b"),
-        )
-        .distinct()
-    )
+    p, stored, stored_nf = layout.read(spark, path, layout.VIDEO)
+    h = _hashes(arrival_frames, hash_col, id_col, frame_col, nf_col)
+    a_band = _hash_bands(h.drop("_nf"), p["bands"])
+    cand = _band_probe(a_band, stored, layout.VIDEO).select(
+        F.col("n._id").alias("id_a"),
+        F.col("o._id").alias("id_b"),
+        F.col("n._f").alias("_f"),
+        F.col("n._h").alias("h_a"),
+        F.col("o._h").alias("h_b"),
+        "hamming",
+    ).distinct()
     pairs = (
-        cand.filter(
-            F.bit_count(F.col("h_a").bitwiseXOR(F.col("h_b")))
-            <= p["max_hamming"]
-        )
+        cand.filter(F.col("hamming") <= p["max_hamming"])
         .groupBy("id_a", "id_b")
         .agg(F.count("*").alias("_nm"))
         .join(
@@ -2801,68 +2653,20 @@ def append_video_phash_layout(
     nf_col: str = "n_frames",
 ) -> None:
     """Fold admitted videos INTO the stored layout, cap-aware against
-    the EXISTING (frame, band) bucket occupancy (the
-    append_phash_layout discipline: one O(distinct-buckets)
-    aggregation, never a corpus-sized window; a bucket never exceeds
+    the EXISTING occupancy of the (frame, band) buckets the batch
+    touches (:func:`~.layout.cap_increment`; a bucket never exceeds
     max_bucket across any number of appends). The nframes relation
     appends wholesale — it is one row per video and the vote reads it
     by id."""
-    import os
-
-    from pyspark.sql import Window
-
-    p, stored, _nf = _read_video_phash_layout(spark, path)
-    h = new_frames.filter(F.col(hash_col).isNotNull()).select(
-        F.col(id_col).alias("_id"),
-        F.col(frame_col).alias("_f"),
-        F.col(nf_col).alias("_nf"),
-        F.col(hash_col).alias("_h"),
-    )
-    banded = _video_bands(h, p["bands"])
-    # r14 (guide §2.3/§3.2, arrival-side contract): occupancy only for
-    # the buckets THIS batch touches — broadcast semi-join the arrival's
-    # key set into the standing scan before aggregating, instead of a
-    # standing-corpus-sized groupBy per append (identical capped output:
-    # the left join only consulted the arrival's own keys).
-    keys = banded.select("_f", "band_idx", "band_val").distinct()
-    occupancy = (
-        stored.join(F.broadcast(keys), ["_f", "band_idx", "band_val"])
-        .groupBy("_f", "band_idx", "band_val")
-        .agg(F.count("*").alias("_n"))
-    )
-    capped_new = (
-        banded.withColumn(
-            "_rk",
-            F.row_number().over(
-                Window.partitionBy("_f", "band_idx", "band_val")
-                .orderBy("_id")
-            ),
-        )
-        .join(occupancy, ["_f", "band_idx", "band_val"], "left")
-        .filter(
-            F.col("_rk") + F.coalesce("_n", F.lit(0)) <= p["max_bucket"]
-        )
-        .drop("_rk", "_n")
-    )
-    # r13 (guide §2.6): the two appends are independent (different
-    # dirs, both derived from the batch + stored occupancy) — overlap
-    # them instead of paying two job latencies per micro-batch
-    from concurrent.futures import ThreadPoolExecutor
-
-    with ThreadPoolExecutor(max_workers=2) as pool:
-        f_band = pool.submit(
-            lambda: capped_new.write.mode("append")
-            .partitionBy("band_idx")
-            .parquet(os.path.join(path, "banding"))
-        )
-        f_nf = pool.submit(
-            lambda: h.select("_id", "_nf")
-            .distinct()
-            .write.mode("append")
-            .parquet(os.path.join(path, "nframes"))
-        )
-        f_band.result()
-        f_nf.result()
+    p, stored, _nf = layout.read(spark, path, layout.VIDEO)
+    h = _hashes(new_frames, hash_col, id_col, frame_col, nf_col)
+    banded = _hash_bands(h.drop("_nf"), p["bands"])
+    layout.append(spark, path, layout.VIDEO, {
+        "banding": layout.cap_increment(
+            banded, stored, p["max_bucket"], layout.VIDEO
+        ),
+        "nframes": h.select("_id", "_nf").distinct(),
+    })
 
 
 def compact_phash_layout(spark, path: str) -> None:
@@ -2870,17 +2674,12 @@ def compact_phash_layout(spark, path: str) -> None:
     the append path writes one file set per admitted micro-batch; this
     rewrites the banding relation back to a few files per band
     partition under the crash-safe rename-aside swap (see
-    :func:`~.dedup.compact_parquet_subdir`)."""
-    from .dedup import compact_parquet_subdir
-
-    compact_parquet_subdir(spark, path, "banding", partition_col="band_idx")
+    :func:`~.layout.compact_parquet_subdir`)."""
+    layout.compact(spark, path, layout.IMAGE)
 
 
 def compact_video_phash_layout(spark, path: str) -> None:
     """Small-files compaction for the video fingerprint layout (L94):
     banding (partitioned by band_idx) + the one-row-per-video nframes
     relation."""
-    from .dedup import compact_parquet_subdir
-
-    compact_parquet_subdir(spark, path, "banding", partition_col="band_idx")
-    compact_parquet_subdir(spark, path, "nframes", n_files=1)
+    layout.compact(spark, path, layout.VIDEO)

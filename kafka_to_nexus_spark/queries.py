@@ -1320,10 +1320,10 @@ _INC_ND_CAP = 8
 
 
 def _q_incremental_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import Window
     from pyspark.sql import functions as F
 
     from .llm import dedup as llm_dedup
+    from .llm import layout
 
     register_views(spark, sf_dir, ("documents",))
     docs = spark.table("documents")
@@ -1333,17 +1333,7 @@ def _q_incremental_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     banded = llm_dedup.banded_signatures(sig, bands=4, rows_per_band=2)
     new_b = banded.filter(is_new).alias("n").hint("broadcast")
-    old_b = (
-        banded.filter(~is_new)
-        .withColumn(
-            "_rk",
-            F.row_number().over(
-                Window.partitionBy("band", "band_key").orderBy("doc_id")
-            ),
-        )
-        .filter(F.col("_rk") <= _INC_ND_CAP)
-        .alias("o")
-    )
+    old_b = layout.cap(banded.filter(~is_new), layout.TEXT, _INC_ND_CAP).alias("o")
     cand_lsh = new_b.join(
         old_b,
         (F.col("n.band") == F.col("o.band"))
@@ -6640,7 +6630,7 @@ FROM hh a JOIN hh b
 # registry default: replay phash_near_dup's occupancy cap exactly —
 # explode the 4 disjoint 16-bit bands off the UNSIGNED hash, keep the
 # first _PHASH_MAX_BUCKET ids per (band_idx, band_val) bucket
-# (row_number ordered by id, the _cap_banding discipline), pair within
+# (row_number ordered by id, the layout.cap discipline), pair within
 # surviving buckets, exact bit_count verify
 ORACLE["image_phash_near_dup"] = _PHASH_DH_HEAD + f""",
 bands AS (

@@ -2,7 +2,8 @@
 
 Local-mode defaults match the test/bench harness (local[N], AQE on,
 Arrow on). On a real cluster the same builder applies — only master()
-and memory sizing change.
+and memory sizing change. The driver heap is ``SPARK_GRAFT_DRIVER_MEM``
+when set, else :func:`default_driver_memory`.
 """
 
 from __future__ import annotations
@@ -10,6 +11,28 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import SparkSession
+
+
+def _mem_total_bytes() -> int | None:
+    """The machine's MemTotal, or None where /proc/meminfo has none."""
+    try:
+        with open("/proc/meminfo") as f:
+            for line in f:
+                if line.startswith("MemTotal:"):
+                    return int(line.split()[1]) * 1024
+    except OSError:
+        pass
+    return None
+
+
+def default_driver_memory(mem_total=_mem_total_bytes) -> str:
+    """Half the machine's memory, between 1g and 16g: in local mode the
+    driver JVM is the whole engine, and the rest of the box stays for
+    Python workers and the page cache. 16g when memory is unknown."""
+    total = mem_total()
+    if total is None:
+        return "16g"
+    return f"{max(1, min(16, total // 2**31))}g"
 
 
 def get_spark(
@@ -33,7 +56,10 @@ def get_spark(
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_GRAFT_DRIVER_MEM") or default_driver_memory(),
+        )
         .config("spark.ui.enabled", "false")
     )
     for k, v in (extra_conf or {}).items():

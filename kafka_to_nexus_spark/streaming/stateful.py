@@ -1148,9 +1148,10 @@ def _read_admission_state(spark, bloom_layout: str, neardup_layout: str) -> dict
     :class:`AdmissionSession` builds it ONCE, persists the relations,
     and advances them incrementally per fold (VERDICT r11 #5)."""
     from ..llm import dedup as llm_dedup
+    from ..llm import layout
 
     meta, params, words = llm_dedup.read_bloom_layout(spark, bloom_layout)
-    nd_p, band, fp, sh = llm_dedup._read_neardup_layout(spark, neardup_layout)
+    nd_p, band, fp, sh = layout.read(spark, neardup_layout, layout.TEXT)
     return {
         "bloom_meta": meta, "bloom_params": params, "words": words,
         "nd_params": nd_p, "band": band, "fp": fp, "sh": sh,
@@ -1316,6 +1317,7 @@ def _fold_appends(
     import os
 
     from ..llm import dedup as llm_dedup
+    from ..llm import layout
 
     admitted = ledger.filter(F.col("doc_id").isin(admitted_ids))
     banded, fp, sh = llm_dedup._neardup_projections(admitted)
@@ -1325,16 +1327,11 @@ def _fold_appends(
          os.path.join(bloom_dir, "words"), None),
         ("params", llm_dedup._bloom_key_rows(admitted, "fp", state["bloom_params"]),
          os.path.join(bloom_dir, "params"), None),
-        ("band", llm_dedup._cap_increment(banded, state["band"], cap),
-         os.path.join(neardup_layout, "banding"), "band"),
+        ("band", layout.cap_increment(banded, state["band"], cap, layout.TEXT),
+         os.path.join(neardup_layout, "banding"), layout.TEXT.partition_by("banding")),
         ("fp", fp, os.path.join(neardup_layout, "fingerprints"), None),
         ("sh", sh, os.path.join(neardup_layout, "shingle_hashes"), None),
     ]
-
-
-def _append(df: DataFrame, path: str, partition_by: str | None = None) -> None:
-    writer = df.write.mode("append")
-    (writer.partitionBy(partition_by) if partition_by else writer).parquet(path)
 
 
 def _transaction(
@@ -1372,6 +1369,7 @@ def _transaction(
 
     from .. import runner
     from ..llm import dedup as llm_dedup
+    from ..llm import layout
 
     ledger = _arrival_ledger(
         state, batch, text_col, id_col, source_col
@@ -1382,7 +1380,7 @@ def _transaction(
         if name in keep:
             # dict assignment from a pool thread is GIL-atomic
             df = kept[name] = df.localCheckpoint()
-        _append(df, path, partition_by)
+        layout.append_relation(df, path, partition_by)
 
     try:
         admitted_ids = _decide_or_reuse(

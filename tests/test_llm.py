@@ -2212,6 +2212,59 @@ def test_bloom_layout_append_equals_rebuild(spark, bloom_corpus, tmp_path):
     assert all(got[1000 + i] for i in range(20))
 
 
+@pytest.mark.parametrize("family", ["text", "image", "video"])
+def test_banded_layout_append_equals_rebuild(spark, tmp_path, family):
+    """A layout built from A and then appended B, every id in B above
+    every id in A, equals a build from A ∪ B relation by relation, as
+    multisets: the increment cap fills each bucket's remaining budget in
+    id order, which is where the build-time cap puts B's rows."""
+    from collections import Counter
+
+    from kafka_to_nexus_spark.llm import layout as llm_layout
+
+    H = lambda i, f: ((i * 0x9E3779B97F4A7C15 + f * 0x517CC1B7) % (1 << 62))
+    if family == "text":
+        fam = llm_layout.TEXT
+        write, append = dedup.write_neardup_banding_layout, dedup.append_neardup_banding
+        make = lambda ids: spark.createDataFrame(
+            [(i, f"the quick brown fox {i % 7} jumps over dog {i % 5}")
+             for i in ids], "doc_id long, text string")
+    elif family == "image":
+        fam = llm_layout.IMAGE
+        write, append = multimodal.write_phash_layout, multimodal.append_phash_layout
+        make = lambda ids: spark.createDataFrame(
+            [(i, H(i % 6, 0) ^ (i % 3)) for i in ids],
+            "media_id long, dhash64 long")
+    else:
+        fam = llm_layout.VIDEO
+        write, append = (multimodal.write_video_phash_layout,
+                         multimodal.append_video_phash_layout)
+        make = lambda ids: spark.createDataFrame(
+            [(i, f, 2, H(i % 4, f) ^ (i % 3)) for i in ids for f in range(2)],
+            "media_id long, frame_idx int, n_frames int, dhash long")
+    params = {"max_bucket": 3}
+    grown, rebuilt = str(tmp_path / "grown"), str(tmp_path / "rebuilt")
+    write(make(range(20)), grown, params=params)
+    append(spark, grown, make(range(20, 40)))
+    write(make(range(40)), rebuilt, params=params)
+
+    def rows(df):
+        cols = sorted(df.columns)
+        return Counter(
+            tuple(tuple(v) if isinstance(v, list) else v for v in r)
+            for r in df.select(*cols).collect()
+        )
+
+    meta_g, *got = llm_layout.read(spark, grown, fam)
+    meta_r, *want = llm_layout.read(spark, rebuilt, fam)
+    assert meta_g == meta_r
+    for rel, g, w in zip(fam.relations, got, want):
+        assert rows(g) == rows(w), rel.name
+    # the cap binds: some bucket of the rebuilt banding is full
+    occ = want[0].groupBy(*fam.keys).count().agg(F.max("count")).first()[0]
+    assert occ == params["max_bucket"], occ
+
+
 def test_bloom_layout_records_and_enforces_hash_engine(spark, bloom_corpus, tmp_path):
     """ADVICE-r10: the stored layout must pin its position engine. An
     xxhash64-built layout records hash_engine in _meta.json, appends fold
@@ -2924,7 +2977,9 @@ def test_phash_layout_cap_holds_across_appends(spark, tmp_path):
                 [(100 + wave * 10 + i, 0) for i in range(10)],
                 "media_id long, dhash64 long"),
         )
-    _p, stored = multimodal._read_phash_layout(spark, layout)
+    from kafka_to_nexus_spark.llm import layout as llm_layout
+
+    _p, stored = llm_layout.read(spark, layout, llm_layout.IMAGE)
     occ = stored.groupBy("band_idx", "band_val").count().agg(
         F.max("count")).first()[0]
     assert occ <= 12, occ
@@ -3220,7 +3275,9 @@ def test_video_phash_layout_cap_holds_across_appends(spark, tmp_path):
     for wave in range(3):
         multimodal.append_video_phash_layout(
             spark, layout, mk(range(100 + wave * 10, 110 + wave * 10)))
-    _p, stored, _nf = multimodal._read_video_phash_layout(spark, layout)
+    from kafka_to_nexus_spark.llm import layout as llm_layout
+
+    _p, stored, _nf = llm_layout.read(spark, layout, llm_layout.VIDEO)
     occ = stored.groupBy("_f", "band_idx", "band_val").count().agg(
         F.max("count")).first()[0]
     assert occ <= 12, occ

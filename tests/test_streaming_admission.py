@@ -652,26 +652,110 @@ def test_admission_session_views_equal_layout_dirs_after_folds(spark, tmp_path):
 
 def test_cap_increment_matches_python_model(spark):
     """The capped banding increment keeps, per bucket, the first
-    ``max_bucket - occupancy`` arrivals in doc_id order, where occupancy
-    counts the standing rows of that bucket (repeats included)."""
+    ``max_bucket - occupancy`` arrivals in id order, where occupancy
+    counts the standing rows of that bucket (repeats included) — for the
+    text, image and video bucket keys, with every banded column carried
+    and one bucket already at its cap."""
     import random
     from collections import Counter
 
-    rng = random.Random(7)
-    stored = [(i, rng.randrange(3), f"k{rng.randrange(5)}") for i in range(40)]
-    stored += stored[:5]  # a replayed append repeats standing rows
-    new = [(1000 + i, rng.randrange(3), f"k{rng.randrange(7)}") for i in range(50)]
-    schema = "doc_id long, band int, band_key string"
-    for max_bucket in (1, 4, 8):
-        got = dedup._cap_increment(
-            spark.createDataFrame(new, schema),
-            spark.createDataFrame(stored, schema),
-            max_bucket,
-        ).select("doc_id", "band", "band_key").collect()
-        occupancy = Counter((b, k) for _, b, k in stored)
-        want = []
-        for doc_id, b, k in sorted(new):
-            if occupancy[(b, k)] < max_bucket:
-                occupancy[(b, k)] += 1
-                want.append((doc_id, b, k))
-        assert sorted(map(tuple, got)) == want, max_bucket
+    from kafka_to_nexus_spark.llm import layout
+
+    shapes = [
+        (layout.TEXT, "doc_id long, band int, band_key string",
+         lambda i, rng, n: (i, rng.randrange(3), f"k{rng.randrange(n)}")),
+        (layout.IMAGE, "_id long, _h long, band_idx int, band_val long",
+         lambda i, rng, n: (i, rng.getrandbits(62), rng.randrange(3),
+                            rng.randrange(n))),
+        (layout.VIDEO,
+         "_id long, _f int, _h long, band_idx int, band_val long",
+         lambda i, rng, n: (i, rng.randrange(2), rng.getrandbits(62),
+                            rng.randrange(3), rng.randrange(n))),
+    ]
+    for family, schema, row in shapes:
+        cols = [c.split()[0] for c in schema.split(", ")]
+
+        def key(r):
+            return tuple(r[cols.index(k)] for k in family.keys)
+
+        rng = random.Random(7)
+        stored = [row(i, rng, 5) for i in range(40)]
+        stored += stored[:5]  # a replayed append repeats standing rows
+        new = [row(1000 + i, rng, 7) for i in range(50)]
+        # a bucket already at the largest cap, and arrivals into it
+        full = row(0, rng, 9)
+        stored += [(2000 + j, *full[1:]) for j in range(8)]
+        new += [(3000 + j, *full[1:]) for j in range(3)]
+        for max_bucket in (1, 4, 8):
+            got = layout.cap_increment(
+                spark.createDataFrame(new, schema),
+                spark.createDataFrame(stored, schema),
+                max_bucket,
+                family,
+            ).select(*cols).collect()
+            occupancy = Counter(key(r) for r in stored)
+            want = []
+            for r in sorted(new):
+                if occupancy[key(r)] < max_bucket:
+                    occupancy[key(r)] += 1
+                    want.append(r)
+            assert sorted(map(tuple, got)) == want, (family.keys, max_bucket)
+
+
+def _frames_df(spark, ids):
+    """Two frames per video, distinct fingerprints per (video, frame)."""
+    return spark.createDataFrame(
+        [(i, f, 2, (i * 0x9E3779B97F4A7C15 + f * 0x517CC1B7) % (1 << 62))
+         for i in ids for f in range(2)],
+        "media_id long, frame_idx int, n_frames int, dhash long",
+    )
+
+
+@pytest.mark.parametrize("call", [
+    "write_neardup_banding_layout",
+    "write_bloom_layout",
+    "write_phash_layout",
+    "write_video_phash_layout",
+    "append_video_phash_layout",
+    "video_admit_and_fold",
+])
+def test_layout_writes_join_callers_job_group(spark, tmp_path, call):
+    """Every Spark job of a layout build, a video append and a video
+    admission trigger, the concurrent relation writes included, runs in
+    the caller's job group, so cancelling the group reaches all of them;
+    none runs outside a group."""
+    from kafka_to_nexus_spark.llm import multimodal as mm
+
+    path = str(tmp_path / "layout")
+    if call in ("append_video_phash_layout", "video_admit_and_fold"):
+        mm.write_video_phash_layout(_frames_df(spark, range(10)), path)
+    run = {
+        "write_neardup_banding_layout":
+            lambda: dedup.write_neardup_banding_layout(_standing_df(spark), path),
+        "write_bloom_layout": lambda: dedup.write_bloom_layout(
+            _standing_df(spark).select(F.md5("text").alias("_fp")), path, "_fp"),
+        "write_phash_layout": lambda: mm.write_phash_layout(
+            _frames_df(spark, range(10)).select(
+                "media_id", F.col("dhash").alias("dhash64")), path),
+        "write_video_phash_layout":
+            lambda: mm.write_video_phash_layout(_frames_df(spark, range(10)), path),
+        "append_video_phash_layout": lambda: mm.append_video_phash_layout(
+            spark, path, _frames_df(spark, range(20, 25))),
+        "video_admit_and_fold": lambda: stateful.video_admit_and_fold(
+            spark, _frames_df(spark, [3, 30, 31]), 0, path, str(tmp_path / "dec")),
+    }[call]
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    bus = sc._jsc.sc().listenerBus()
+    bus.waitUntilEmpty()
+    ungrouped = set(tracker.getJobIdsForGroup(None))
+    group = f"test-layout-group-{call}"
+    sc.setJobGroup(group, "layout write job-group guard")
+    try:
+        run()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    bus.waitUntilEmpty()
+    assert set(tracker.getJobIdsForGroup(None)) == ungrouped
+    assert tracker.getJobIdsForGroup(group)
