@@ -195,12 +195,12 @@ def _run_e2e_streaming_neardup(spark, sf_dir: str, n_batches: int = 2) -> None:
         # batch-1 buckets are still live when batch 2 pairs against them
         # sharded bucket state: 6458 active buckets at sf0.1 cost ~1 ms of
         # per-state-group overhead EACH per micro-batch in the per-bucket
-        # form (the dominant e2e cost, measured r5); packing them
-        # 16-buckets-to-a-state-entry drops group invocations to
+        # form (the dominant e2e cost, measured r5); the operator's
+        # default shard packing drops group invocations to
         # O(bands x shards) with identical pair output (equality-tested)
         out = stateful.near_dup_candidates(
             sig, horizon="2 hours", watermark="1 second",
-            bands=2, rows_per_band=4, shards="auto")  # 4x4 partitions = 16
+            bands=2, rows_per_band=4)
         q = (out.writeStream.format("noop")
              .option("checkpointLocation", f"{work}/ckpt").start())
         try:
@@ -216,9 +216,9 @@ def _run_e2e_streaming_quota(spark, sf_dir: str, n_batches: int = 2) -> None:
     """Streaming per-source admission quota over the events table as a
     high-cardinality source stream (user_id as the source key, ~thousands
     of distinct sources at sf0.1): benches the sharded quota state
-    operator (shards="auto" — the 50k-source measurement showed the
-    per-source layout's group exchange IS the batch cost at high
-    cardinality; SCALE.md r7)."""
+    operator at its default shard count (the 50k-source measurement
+    showed a per-source layout's group exchange IS the batch cost at
+    high cardinality; SCALE.md r7)."""
     import shutil
     import tempfile
 
@@ -252,7 +252,7 @@ def _run_e2e_streaming_quota(spark, sf_dir: str, n_batches: int = 2) -> None:
                .schema("source_name string, event_id long, timestamp long")
                .option("maxFilesPerTrigger", 1).json(f"{indir}/in/*"))
         out = stateful.source_quota_stream(
-            raw.repartition(8), quota=5, shards="auto")
+            raw.repartition(8), quota=5)
         q = (out.writeStream.format("noop")
              .option("checkpointLocation", f"{work}/ckpt").start())
         try:
@@ -438,7 +438,7 @@ def _run_e2e_streaming_curation(spark, sf_dir: str, n_batches: int = 2) -> None:
                .option("maxFilesPerTrigger", 1).json(f"{indir}/in/*"))
         out = stateful.curation_stream(
             raw.repartition(8), quality_tau=0.3, pii_cap=2,
-            quota=40, shards="auto", watermark="10 minutes")
+            quota=40, watermark="10 minutes")
         q = (out.writeStream.format("noop")
              .option("checkpointLocation", f"{work}/ckpt").start())
         try:

@@ -1103,17 +1103,18 @@ def bloom_build(
     (bits_per_key per distinct key, rounded up to a word), so the build
     is one distinct + one word-keyed bit_or aggregation, both map-side
     combining; nothing touches the driver."""
-    params = (
-        df.agg(F.count_distinct(F.col(fp_col)).alias("n_keys"))
-        .select(
-            "n_keys",
-            F.greatest(
-                F.lit(63),
-                (F.ceil(F.col("n_keys") * bits_per_key / 63) * 63).cast("long"),
-            ).alias("m_bits"),
-        )
+    params = df.agg(F.count_distinct(F.col(fp_col)).alias("n_keys")).select(
+        "n_keys", _bloom_m_bits(F.col("n_keys"), bits_per_key).alias("m_bits")
     )
     return params, _bloom_fp_words(df, fp_col, params, k, hash_engine)
+
+
+def _bloom_m_bits(n_keys: Column, bits_per_key: int) -> Column:
+    """The filter width for ``n_keys`` distinct keys: ``bits_per_key``
+    bits per key, rounded up to a whole 63-bit word."""
+    return F.greatest(
+        F.lit(63), (F.ceil(n_keys * bits_per_key / 63) * 63).cast("long")
+    )
 
 
 def _bloom_fp_words(
@@ -1225,12 +1226,36 @@ def write_bloom_layout(
     rebuild, exactly like production Blooms."""
     if hash_engine not in _BLOOM_ENGINES:
         raise ValueError(f"unknown hash_engine {hash_engine!r}")
-    params, words = bloom_build(df, fp_col, k, bits_per_key, hash_engine)
-    layout.write(
-        path, layout.BLOOM, {"words": words, "params": params},
-        {"k": k, "bits_per_key": bits_per_key, "hash_engine": hash_engine},
-        mode="overwrite",
+    from pyspark.sql import Observation
+
+    from ..streaming.stateful import _release
+
+    # The distinct fingerprints are pinned once and counted by the same
+    # job, so n_keys and m_bits are literals: a lazy params relation would
+    # re-aggregate the corpus inside the words write, which needs m_bits.
+    obs = Observation()
+    keys = (
+        df.select(F.col(fp_col).alias("_fp"))
+        .distinct()
+        .observe(obs, F.count("_fp").alias("n_keys"))
+        .localCheckpoint()
     )
+    try:
+        n_keys = F.lit(obs.get["n_keys"]).cast("long")
+        m_bits = _bloom_m_bits(n_keys, bits_per_key)
+        params = df.sparkSession.range(1, numPartitions=1).select(
+            n_keys.alias("n_keys"), m_bits.alias("m_bits")
+        )
+        words = _bloom_word_rows(
+            keys, _BLOOM_ENGINES[hash_engine](F.col("_fp"), k, m_bits)
+        )
+        layout.write(
+            path, layout.BLOOM, {"words": words, "params": params},
+            {"k": k, "bits_per_key": bits_per_key, "hash_engine": hash_engine},
+            mode="overwrite",
+        )
+    finally:
+        _release(keys)
 
 
 def read_bloom_layout(spark, path: str) -> tuple[dict, DataFrame, DataFrame]:

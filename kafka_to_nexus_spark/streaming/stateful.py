@@ -404,13 +404,18 @@ def dedup_census(
 # arrived, and state stays TTL-bounded on unbounded streams.
 # ---------------------------------------------------------------------------
 
-# state per source: rows admitted so far (one long — O(sources) state,
-# like session_windows)
-_QUOTA_STATE = "admitted long"
-
-# state per shard when sharding: parallel arrays of in-shard sources and
-# their admitted counts (the quota twin of _SHARD_STATE)
+# state per shard: parallel arrays of in-shard sources and their admitted
+# counts
 _QUOTA_SHARD_STATE = "sources array<string>, admitted array<long>"
+
+#: default shard count of the keyed streaming operators. A constant, not a
+#: function of session conf: the shard is part of every state key, so a
+#: count derived from ``spark.sql.shuffle.partitions`` at query build
+#: would move keys between shards when a query restarts from its
+#: checkpoint under another partition count. 128 is the best point of
+#: SCALE.md's round-6 sweep (flat 19.4–19.7 s over 8–512 shards at 84k
+#: active buckets) and of its round-7 quota sweep (shards=128).
+DEFAULT_SHARDS = 128
 
 
 def _nsmallest_chunks(
@@ -430,39 +435,6 @@ def _nsmallest_chunks(
     )
 
 
-def _make_quota_fn(quota: int, cols: list, ts_col: str):
-    """Per-source quota state function (one long per source)."""
-
-    def update(
-        key: tuple,
-        pdfs: Iterator[pd.DataFrame],
-        state: GroupState,
-    ) -> Iterator[pd.DataFrame]:
-        before = state.get[0] if state.exists else 0
-        budget = quota - before
-        # applyInPandasWithState splits one group across multiple Arrow
-        # chunks (spark.sql.execution.arrow.maxRecordsPerBatch rows
-        # each), so event-time order must be decided across the WHOLE
-        # iterator, not per chunk: emit ONCE after it drains.
-        cand = None
-        for pdf in pdfs:
-            if budget <= 0 or not len(pdf):
-                continue  # keep draining; budget exhausted or empty chunk
-            cand = _nsmallest_chunks(cand, pdf, ts_col, budget)
-        if cand is not None and len(cand):
-            out = cand[cols].copy()
-            out["quota_rank"] = range(before + 1, before + 1 + len(cand))
-            # exhausted sources keep receiving rows every batch; skipping
-            # the no-op commit keeps the state-store delta at O(sources
-            # that admitted) instead of O(sources with data) (same lesson
-            # as the near-dup sharded state: unchanged entries must not
-            # rewrite)
-            state.update((before + len(cand),))
-            yield out
-
-    return update
-
-
 def _quota_state_key(src) -> str:
     """State-array key for a source value. The state schema stores string
     keys, but ``str(src)`` alone would collide a NULL source with a
@@ -476,19 +448,19 @@ def _quota_state_key(src) -> str:
        matching counts and silently re-admits every source up to quota
        again. Restart from a fresh checkpoint when upgrading (same
        contract as the minhash hash-family v2 note in
-       :mod:`kafka_to_nexus_spark.llm.dedup`); the unsharded per-source
-       form keys state by the grouping column itself and is unaffected."""
+       :mod:`kafka_to_nexus_spark.llm.dedup`)."""
     if src is None or (isinstance(src, float) and src != src) or src is pd.NA:
         return "\x00null"
     return "=" + str(src)
 
 
 def _make_quota_shard_fn(quota: int, cols: list, ts_col: str, source_col: str):
-    """Sharded twin of :func:`_make_quota_fn`: ONE state entry holds every
-    in-shard source's admitted count as parallel arrays. Per-source
-    admission semantics are identical (property-tested against the
-    per-source form); what changes is the state-store unit — millions of
-    one-long entries become O(shards) entries, so a micro-batch costs
+    """Quota state function of one shard: ONE state entry holds every
+    in-shard source's admitted count as parallel arrays. Admission per
+    source is that of one counter per source (property-tested against a
+    per-source reference model); what the packing changes is the
+    state-store unit — millions of one-long entries become O(shards)
+    entries, so a micro-batch costs
     O(shards) group invocations + commits instead of O(sources with
     data) (the near-dup shard packing's lesson: at 50k sources the
     per-group Arrow exchange WAS the batch cost). Sources are keyed by
@@ -539,25 +511,13 @@ def _make_quota_shard_fn(quota: int, cols: list, ts_col: str, source_col: str):
     return update
 
 
-def _resolve_shards(stream: DataFrame, shards) -> int | None:
-    """Shared ``shards`` argument contract: ``"auto"`` → 4 × the stateful
-    exchange's partition count (SCALE.md round-6 rule: ≥1 group per state
-    partition, 4× for skew headroom, over-provision measured free on the
-    8–512 plateau); int passes through; None keeps the finest-grained
-    per-key state; any other string is a hard error."""
-    if shards == "auto":
-        return 4 * int(
-            stream.sparkSession.conf.get("spark.sql.shuffle.partitions")
-        )
-    if shards is None:
-        return None
-    # a typo like "Auto" (or shards=0, which would make pmod(hash, 0)
-    # null and collapse every source into one state entry — or hard-fail
-    # under ANSI) must fail fast here, not as an obscure analysis error
+def _check_shards(shards) -> int:
+    """The ``shards`` argument contract: an int >= 1. Anything else (a
+    string, None, a bool, or shards=0, which would make pmod(hash, 0)
+    null and collapse every key into one state entry — or hard-fail
+    under ANSI) fails fast here, not as an obscure analysis error."""
     if isinstance(shards, bool) or not isinstance(shards, int) or shards < 1:
-        raise ValueError(
-            f"shards must be an int >= 1, None, or 'auto', got {shards!r}"
-        )
+        raise ValueError(f"shards must be an int >= 1, got {shards!r}")
     return shards
 
 
@@ -566,7 +526,7 @@ def source_quota_stream(
     quota: int,
     source_col: str = "source_name",
     ts_col: str = "timestamp",
-    shards: int | str | None = None,
+    shards: int = DEFAULT_SHARDS,
 ) -> DataFrame:
     """Per-source admission quota: pass through at most ``quota`` rows per
     source over the stream's lifetime, dropping the rest — the streaming
@@ -579,21 +539,26 @@ def source_quota_stream(
     (partition-race, same caveat :func:`dedup_stream` documents).
 
     Output = the input rows that clear the quota, plus ``quota_rank``
-    (1-based admission index per source). State is ONE long per source
-    with no timeout: a quota is a lifetime budget, and O(sources) state
-    matches the engine's per-source envelope elsewhere (session windows,
-    running stats). At 100 TB / millions of sources the state store
-    shards the counters across executors; each micro-batch group ships
-    only that batch's rows for the source.
+    (1-based admission index per source). State is one counter per
+    source with no timeout (a quota is a lifetime budget), packed
+    ``shards`` sources to a state entry: the grouping key is
+    ``pmod(xxhash64(source), shards)`` and each entry holds every
+    in-shard source's counter. A micro-batch then costs O(shards) group
+    invocations + commits instead of O(sources with data), which the
+    50k-source measurement (SCALE.md round 7) showed was about the whole
+    batch cost at high source cardinality.
 
-    ``shards`` opts into the packed state layout (contract as
-    :func:`near_dup_candidates`): group by ``hash(source) % shards``
-    instead of the source itself, one state entry per shard holding
-    every in-shard source's counter. Admission semantics are identical;
-    what drops is the per-micro-batch state-machine cost — O(shards)
-    group invocations + commits instead of O(sources with data), which
-    the 50k-source measurement showed was ~the entire batch cost at
-    high source cardinality. ``"auto"`` = 4 × shuffle partitions.
+    .. warning:: **state layout.** ``shards`` is part of every state
+       key, so a query must restart from its checkpoint with the
+       ``shards`` it was started with. Checkpoints of the older
+       per-source layout (``shards=None``, the old default) fail the
+       restart loudly with ``STATE_STORE_KEY_SCHEMA_NOT_COMPATIBLE``;
+       restart those from a fresh checkpoint. A query started under
+       the removed automatic count used 4 × the session's
+       ``spark.sql.shuffle.partitions`` at its start: restart it with
+       ``shards=`` that number, or from a fresh checkpoint — any other
+       count is accepted silently and re-admits every moved source up
+       to quota again.
     """
     if quota < 1:
         raise ValueError(f"quota must be >= 1, got {quota}")
@@ -602,17 +567,9 @@ def source_quota_stream(
         raise ValueError("input already has a quota_rank column")
     out_schema = StructType(fields + [StructField("quota_rank", LongType())])
     cols = [f.name for f in fields]
-    shards = _resolve_shards(stream, shards)
-    if shards is None:
-        return stream.groupBy(source_col).applyInPandasWithState(
-            _make_quota_fn(quota, cols, ts_col),
-            out_schema,
-            _QUOTA_STATE,
-            "append",
-            GroupStateTimeout.NoTimeout,
-        )
     sharded = stream.withColumn(
-        "__quota_shard", F.pmod(F.xxhash64(source_col), F.lit(shards))
+        "__quota_shard",
+        F.pmod(F.xxhash64(source_col), F.lit(_check_shards(shards))),
     )
     return sharded.groupBy("__quota_shard").applyInPandasWithState(
         _make_quota_shard_fn(quota, cols, ts_col, source_col),
@@ -631,91 +588,26 @@ NEAR_DUP_SCHEMA = StructType(
     ]
 )
 
-# state per (band, band_key) bucket: member doc ids + last event time (ns)
-_BUCKET_STATE = "docs array<long>, last long"
-
-
-def _make_bucket_fn(max_bucket: int, horizon_ms: int):
-    def update(
-        key: tuple[int, str],
-        pdfs: Iterator[pd.DataFrame],
-        state: GroupState,
-    ) -> Iterator[pd.DataFrame]:
-        if state.hasTimedOut:  # idle bucket past its horizon: evict
-            state.remove()
-            return
-        docs, last = (state.get if state.exists else ([], 0))
-        docs = list(docs)
-        prev_last, changed = last, False
-        rows: list[tuple[int, int]] = []  # (timestamp, doc_id)
-        for pdf in pdfs:
-            rows.extend(
-                (int(t), int(d))
-                for t, d in zip(pdf["timestamp"], pdf["doc_id"])
-                if not (pd.isna(t) or pd.isna(d))
-            )
-        if not rows and not state.exists:
-            # nothing valid ever seen for this bucket: creating state here
-            # would leave an entry with no armed timeout — never evictable
-            return
-        rows.sort()
-        pairs: list[tuple[int, int]] = []
-        seen = set(docs)
-        for t, d in rows:
-            last = max(last, t)
-            if d in seen:  # duplicate arrival of the same doc in the bucket
-                continue
-            # each arrival pairs against at most max_bucket members and
-            # membership is trimmed INSIDE the loop — a burst delivering a
-            # hot bucket in one micro-batch emits O(max_bucket * batch)
-            # pairs, never batch² (the cap exists exactly for that burst).
-            pairs.extend((min(d, o), max(d, o)) for o in docs)
-            docs.append(d)
-            seen.add(d)
-            changed = True
-            if len(docs) > max_bucket:
-                # keep the most recent members (the batch pipeline's
-                # analog is the lsh_candidate_pairs star cap)
-                del docs[0]
-        # skip the state-store write for batches that changed nothing
-        # (every arrival was a duplicate of an in-state member and the
-        # horizon clock didn't move): an unchanged bucket re-committed
-        # per batch is pure state-store churn
-        if changed or last != prev_last or not state.exists:
-            state.update((docs, last))
-            if last:
-                _set_clamped_timeout(state, last // 1_000_000 + horizon_ms)
-        if pairs:
-            yield pd.DataFrame(
-                {
-                    "id_a": [a for a, _ in pairs],
-                    "id_b": [b for _, b in pairs],
-                    "band": [int(key[0])] * len(pairs),
-                }
-            )
-
-    return update
-
-
-# state per (band, shard) when sharding: parallel arrays of in-shard
-# buckets — band_key, member doc ids, last event time (ns) per bucket
+# state per (band, shard): parallel arrays of in-shard buckets — band_key,
+# member doc ids, last event time (ns) per bucket
 _SHARD_STATE = (
     "keys array<string>, members array<array<long>>, lasts array<long>"
 )
 
 
 def _make_shard_fn(max_bucket: int, horizon_ms: int):
-    """Sharded twin of ``_make_bucket_fn``: ONE state entry holds every
-    in-shard bucket. Per-bucket pairing/cap/dedup semantics are identical
-    (property-tested against the per-bucket form); what changes is the
+    """Near-dup state function of one (band, shard): ONE state entry
+    holds every in-shard bucket. Pairing, cap and dedup per bucket are
+    those of one state entry per bucket (property-tested against a
+    per-bucket reference model); what the packing changes is the
     state-store unit — thousands of tiny per-bucket entries become
     O(shards) entries, so the per-micro-batch cost is O(shards) group
     invocations instead of O(active buckets) (measured 6458 buckets →
     ~1 ms of per-group overhead each at sf0.1: the dominant e2e cost).
-    Eviction trades the per-bucket EventTimeTimeout for sweep-on-call:
-    expired buckets are dropped AFTER arrivals are processed (matching
-    the per-bucket form, where a batch that delivers data suppresses the
-    timeout and still pairs against the outgoing members), plus a shard
+    Eviction is sweep-on-call instead of a per-bucket EventTimeTimeout:
+    expired buckets are dropped AFTER arrivals are processed (as with a
+    per-bucket timeout, which a batch that delivers data suppresses, so
+    arrivals still pair against the outgoing members), plus a shard
     timeout at the earliest in-shard expiry for idle shards."""
 
     def update(
@@ -768,12 +660,10 @@ def _make_shard_fn(max_bucket: int, horizon_ms: int):
             return
         rows.sort()
         pairs: list[tuple[int, int]] = []
-        # per-bucket batch-scoped seen sets, seeded from state members,
-        # matching _make_bucket_fn's dedup exactly: a doc evicted by the
-        # max_bucket cap that RE-ARRIVES later in the same micro-batch is
-        # still a duplicate (membership-scan `d in docs` would re-pair and
-        # re-append it after eviction — the one intra-batch divergence the
-        # per-bucket form does not have)
+        # per-bucket batch-scoped seen sets, seeded from state members: a
+        # doc evicted by the max_bucket cap that RE-ARRIVES later in the
+        # same micro-batch is still a duplicate (membership-scan `d in
+        # docs` would re-pair and re-append it after eviction)
         seen: dict[str, set[int]] = {}
         for t, bk, d in rows:
             docs, last = buckets.get(bk, ([], 0))
@@ -811,7 +701,7 @@ def near_dup_candidates(
     bands: int = 4,
     rows_per_band: int = 2,
     max_bucket: int = 64,
-    shards: int | str | None = None,
+    shards: int = DEFAULT_SHARDS,
 ) -> DataFrame:
     """Streaming LSH near-dup candidate pairs.
 
@@ -819,7 +709,7 @@ def near_dup_candidates(
     signature columns (``llm.dedup.minhash_signatures`` — a narrow map, so
     it composes with readStream). Signatures are banded
     (``llm.dedup.banded_signatures``) and keyed by (band, band_key); each
-    bucket's membership is an applyInPandasWithState entry, so a new doc
+    bucket's membership is applyInPandasWithState state, so a new doc
     pairs immediately with every in-horizon member of its buckets —
     exactly the batch bucket-join's candidates, emitted incrementally.
     Downstream dedups (id_a, id_b) across bands, as the batch pipeline
@@ -830,20 +720,24 @@ def near_dup_candidates(
     most-recent members (candidate recall inside a pathological bucket is
     traded for bounded state, the streaming analog of skew handling).
 
-    ``shards``: when set, buckets are packed ``shards``-to-a-state-entry
-    per band (grouping key = (band, hash(band_key) % shards)) instead of
-    one state entry per bucket. Pair semantics are identical
-    (property-tested); the per-micro-batch cost drops from O(active
-    buckets) state-group invocations (~1 ms each measured) to O(bands ×
-    shards) — the scale default for corpora whose active-bucket count is
-    much larger than the core count. ``"auto"`` resolves to 4 × the
-    stateful exchange's partition count (``spark.sql.shuffle.partitions``
-    at query start) — the SCALE.md round-6 rule: ≥1 group per state
-    partition for parallelism, 4× for skew headroom, and the measured
-    8–512 plateau (19.4–19.7 s at 84k active buckets) makes
-    over-provision free. None keeps the per-bucket form (finest-grained
-    eviction; the right shape for sparse key spaces — active buckets
-    comparable to the core count)."""
+    ``shards``: buckets are packed ``shards``-to-a-state-entry per band
+    (grouping key = (band, pmod(xxhash64(band_key), shards))), so the
+    per-micro-batch cost is O(bands × shards) state-group invocations
+    instead of O(active buckets) (~1 ms each measured). Pairs are those
+    of one entry per bucket (property-tested), and the shard count is
+    uncritical over the measured 8–512 range (SCALE.md round 6).
+
+    .. warning:: **state layout.** ``shards`` is part of every state
+       key, so a query must restart from its checkpoint with the
+       ``shards`` it was started with. Checkpoints of the older
+       per-bucket layout (``shards=None``, the old default) fail the
+       restart loudly with ``STATE_STORE_KEY_SCHEMA_NOT_COMPATIBLE``;
+       restart those from a fresh checkpoint. A query started under
+       the removed automatic count used 4 × the session's
+       ``spark.sql.shuffle.partitions`` at its start: restart it with
+       ``shards=`` that number, or from a fresh checkpoint — any other
+       count is accepted silently, and arrivals in every moved bucket
+       miss their standing members' pairs."""
     from pyspark.sql import functions as F
 
     from ..llm.dedup import banded_signatures
@@ -861,17 +755,9 @@ def near_dup_candidates(
     )
     with_time = _with_event_time(keyed, "timestamp", watermark)
     horizon_ms = _parse_duration_ns(horizon) // 1_000_000
-    shards = _resolve_shards(stream, shards)
-    if shards is None:
-        return with_time.groupBy("band", "band_key").applyInPandasWithState(
-            _make_bucket_fn(max_bucket, horizon_ms),
-            outputStructType=NEAR_DUP_SCHEMA,
-            stateStructType=_BUCKET_STATE,
-            outputMode="append",
-            timeoutConf=GroupStateTimeout.EventTimeTimeout,
-        )
     sharded = with_time.withColumn(
-        "shard", F.pmod(F.xxhash64("band_key"), F.lit(shards))
+        "shard",
+        F.pmod(F.xxhash64("band_key"), F.lit(_check_shards(shards))),
     )
     return sharded.groupBy("band", "shard").applyInPandasWithState(
         _make_shard_fn(max_bucket, horizon_ms),
@@ -891,7 +777,7 @@ def curation_stream(
     watermark: str = "10 minutes",
     quota: int | None = None,
     source_col: str = "source_name",
-    shards: int | str | None = None,
+    shards: int = DEFAULT_SHARDS,
 ) -> DataFrame:
     """Streaming twin of the batch composed curation pipeline (L54,
     ``curation_pipeline``) — the reference's own shape (continuous
@@ -1712,8 +1598,6 @@ def admission_stream(
     text_col: str = "text",
     id_col: str = "doc_id",
     source_col: str = "source",
-    cache_layouts: bool = True,
-    consolidate_every: int = 64,
 ):
     """foreachBatch admission over the stored layouts: each micro-batch
     runs the admit-and-fold transaction — decisions land in
@@ -1726,29 +1610,20 @@ def admission_stream(
     the already-folded layouts — see :func:`admit_and_fold` for the
     crash-window analysis.
 
-    ``cache_layouts=True`` (the steady-state default) runs the batches
-    through one :class:`AdmissionSession` — layout dirs are read once
-    and advanced incrementally in memory, instead of re-read per batch;
-    decisions are identical (the parity pytest runs the stream against
-    the per-batch-reread twin). The session rides the returned query as
+    The batches run through one :class:`AdmissionSession`: layout dirs
+    are read once and advanced incrementally in memory, instead of
+    re-read per batch; decisions are those of the per-batch-reread
+    :func:`admit_and_fold` (the parity pytest runs the stream against
+    it). The session rides the returned query as
     ``query._admission_session`` so callers can ``close()`` it after
     ``stop()``."""
-    session = None
-    if cache_layouts:
-        session = AdmissionSession(
-            stream.sparkSession, bloom_layout, neardup_layout,
-            quota, tau, text_col, id_col, source_col, consolidate_every,
-        )
+    session = AdmissionSession(
+        stream.sparkSession, bloom_layout, neardup_layout,
+        quota, tau, text_col, id_col, source_col,
+    )
 
     def sink(batch: DataFrame, batch_id: int) -> None:
-        if session is not None:
-            session.admit_and_fold(batch, batch_id, decisions_path)
-        else:
-            admit_and_fold(
-                batch.sparkSession, batch, batch_id,
-                bloom_layout, neardup_layout, decisions_path,
-                quota, tau, text_col, id_col, source_col,
-            )
+        session.admit_and_fold(batch, batch_id, decisions_path)
 
     query = (
         stream.writeStream.foreachBatch(sink)

@@ -4184,6 +4184,14 @@ def test_assign_portable_pandas_matches_expr_bitwise(spark):
             (4, [1.0]),             # short -> 3
             (5, [1.0, 0.0, 9.0]),   # long -> 3
             (6, [-0.0, -0.0]),      # all-(-0.0) dots tie -> 3
+            # infinities: inf * 0.0 is NaN, and a NaN dot is the greatest
+            # under both Spark's NaN ordering and numpy's argmax
+            (7, [float("inf"), 1.0]),    # dots inf, inf, NaN -> 7
+            (8, [float("-inf"), 1.0]),   # dots -inf, -inf, NaN -> 7
+            (9, [float("inf"), 0.0]),    # inf with a zero coordinate -> 7
+            (10, [0.0, float("inf")]),   # dots NaN, NaN, inf -> 3
+            (11, [float("inf"), float("inf")]),   # all dots NaN -> 3
+            (12, [float("-inf"), float("-inf")]),  # all dots NaN -> 3
         ],
         "vec_id long, v array<double>",
     )
@@ -4196,3 +4204,5 @@ def test_assign_portable_pandas_matches_expr_bitwise(spark):
     for vid, (e, p) in got.items():
         assert e == p, (vid, e, p)
     assert got[0] == (3, 3) and got[1] == (7, 7) and got[2] == (3, 3)
+    assert {v: got[v][0] for v in range(7, 13)} == {
+        7: 7, 8: 7, 9: 7, 10: 3, 11: 3, 12: 3}

@@ -5,15 +5,22 @@ how the reference domain-tests exercise the pipeline via the stub consumer."""
 from __future__ import annotations
 
 import json
+from collections.abc import Iterator
 
+import pandas as pd
 import pytest
 from pyspark.sql import functions as F
+from pyspark.sql.streaming.state import GroupState
 
 from conftest import DOMAIN_TEMPLATES
 from kafka_to_nexus_spark.plan import StartMessage
 from kafka_to_nexus_spark.sinks import staging
 from kafka_to_nexus_spark.sources.fixtures import messages_from_json
 from kafka_to_nexus_spark.streaming.job import StreamingJob
+from kafka_to_nexus_spark.streaming.stateful import (
+    _nsmallest_chunks,
+    _set_clamped_timeout,
+)
 
 NS = 1_000_000
 
@@ -973,13 +980,15 @@ def test_dedup_census_emits_counts_at_horizon(spark, tmp_path):
     assert not any(f == 400_000_000_000 for f, _ in got), got
 
 
-@pytest.mark.parametrize("shards", [None, 4])
+@pytest.mark.parametrize(
+    "shards", [{}, {"shards": 4}], ids=["default", "4"]
+)
 def test_streaming_near_dup_candidates_across_batches(spark, tmp_path, shards):
     """Streaming LSH candidates: a new doc pairs with every in-horizon
     member of its buckets the moment it arrives — intra-batch pairs in
     batch 1, cross-batch pairs in batch 2 — and the distinct (id_a, id_b)
-    set equals the batch pipeline's bucket-join candidates. Runs both
-    state layouts: per-bucket entries and the sharded packing."""
+    set equals the batch pipeline's bucket-join candidates. Runs the
+    default shard count and a small one."""
     import json as _json
     import os
     import time as _time
@@ -1017,7 +1026,7 @@ def test_streaming_near_dup_candidates_across_batches(spark, tmp_path, shards):
            .withColumnRenamed("timestamp", "event_ns"))
     out = stateful.near_dup_candidates(
         sig, id_col="document", ts_col="event_ns", horizon="10 minutes",
-        shards=shards)
+        **shards)
     q = (out.writeStream.format("memory").queryName("near_dup")
          .outputMode("append")
          .option("checkpointLocation", str(tmp_path / "ckpt"))
@@ -1105,9 +1114,118 @@ class _FakeGroupState:
         return 0
 
 
+# Reference models: one state entry per LSH bucket and one per source,
+# the per-key layouts the sharded state functions pack. The
+# twin-equivalence tests pin _make_shard_fn and _make_quota_shard_fn to
+# them, and the upgrade test writes a per-source checkpoint with one.
+
+# state per (band, band_key) bucket: member doc ids + last event time (ns)
+_BUCKET_STATE = "docs array<long>, last long"
+
+
+def _make_bucket_fn(max_bucket: int, horizon_ms: int):
+    def update(
+        key: tuple[int, str],
+        pdfs: Iterator[pd.DataFrame],
+        state: GroupState,
+    ) -> Iterator[pd.DataFrame]:
+        if state.hasTimedOut:  # idle bucket past its horizon: evict
+            state.remove()
+            return
+        docs, last = (state.get if state.exists else ([], 0))
+        docs = list(docs)
+        prev_last, changed = last, False
+        rows: list[tuple[int, int]] = []  # (timestamp, doc_id)
+        for pdf in pdfs:
+            rows.extend(
+                (int(t), int(d))
+                for t, d in zip(pdf["timestamp"], pdf["doc_id"])
+                if not (pd.isna(t) or pd.isna(d))
+            )
+        if not rows and not state.exists:
+            # nothing valid ever seen for this bucket: creating state here
+            # would leave an entry with no armed timeout — never evictable
+            return
+        rows.sort()
+        pairs: list[tuple[int, int]] = []
+        seen = set(docs)
+        for t, d in rows:
+            last = max(last, t)
+            if d in seen:  # duplicate arrival of the same doc in the bucket
+                continue
+            # each arrival pairs against at most max_bucket members and
+            # membership is trimmed INSIDE the loop — a burst delivering a
+            # hot bucket in one micro-batch emits O(max_bucket * batch)
+            # pairs, never batch² (the cap exists exactly for that burst).
+            pairs.extend((min(d, o), max(d, o)) for o in docs)
+            docs.append(d)
+            seen.add(d)
+            changed = True
+            if len(docs) > max_bucket:
+                # keep the most recent members (the batch pipeline's
+                # analog is the lsh_candidate_pairs star cap)
+                del docs[0]
+        # skip the state-store write for batches that changed nothing
+        # (every arrival was a duplicate of an in-state member and the
+        # horizon clock didn't move): an unchanged bucket re-committed
+        # per batch is pure state-store churn
+        if changed or last != prev_last or not state.exists:
+            state.update((docs, last))
+            if last:
+                _set_clamped_timeout(state, last // 1_000_000 + horizon_ms)
+        if pairs:
+            yield pd.DataFrame(
+                {
+                    "id_a": [a for a, _ in pairs],
+                    "id_b": [b for _, b in pairs],
+                    "band": [int(key[0])] * len(pairs),
+                }
+            )
+
+    return update
+
+
+# state per source: rows admitted so far (one long — O(sources) state,
+# like session_windows)
+_QUOTA_STATE = "admitted long"
+
+
+def _make_quota_fn(quota: int, cols: list, ts_col: str):
+    """Per-source quota state function (one long per source)."""
+
+    def update(
+        key: tuple,
+        pdfs: Iterator[pd.DataFrame],
+        state: GroupState,
+    ) -> Iterator[pd.DataFrame]:
+        before = state.get[0] if state.exists else 0
+        budget = quota - before
+        # applyInPandasWithState splits one group across multiple Arrow
+        # chunks (spark.sql.execution.arrow.maxRecordsPerBatch rows
+        # each), so event-time order must be decided across the WHOLE
+        # iterator, not per chunk: emit ONCE after it drains.
+        cand = None
+        for pdf in pdfs:
+            if budget <= 0 or not len(pdf):
+                continue  # keep draining; budget exhausted or empty chunk
+            cand = _nsmallest_chunks(cand, pdf, ts_col, budget)
+        if cand is not None and len(cand):
+            out = cand[cols].copy()
+            out["quota_rank"] = range(before + 1, before + 1 + len(cand))
+            # exhausted sources keep receiving rows every batch; skipping
+            # the no-op commit keeps the state-store delta at O(sources
+            # that admitted) instead of O(sources with data) (same lesson
+            # as the near-dup sharded state: unchanged entries must not
+            # rewrite)
+            state.update((before + len(cand),))
+            yield out
+
+    return update
+
+
 @pytest.mark.parametrize("seed", [0, 1, 2, 3])
 def test_bucket_pairing_matches_brute_force(seed):
-    """Property: feeding a bucket's rows through _make_bucket_fn in any
+    """Property: feeding one bucket's rows through _make_shard_fn in any
     batch split emits exactly the brute-force pair set of its distinct
     docs (uncapped), each pair once, regardless of arrival order or
     duplicate re-deliveries."""
@@ -1116,7 +1234,7 @@ def test_bucket_pairing_matches_brute_force(seed):
 
     import pandas as pd
 
-    from kafka_to_nexus_spark.streaming.stateful import _make_bucket_fn
+    from kafka_to_nexus_spark.streaming.stateful import _make_shard_fn
 
     rng = random.Random(seed)
     docs = rng.sample(range(100), rng.randint(2, 12))
@@ -1126,15 +1244,16 @@ def test_bucket_pairing_matches_brute_force(seed):
     n_batches = rng.randint(1, 4)
     batches = [rows[i::n_batches] for i in range(n_batches)]
 
-    fn = _make_bucket_fn(max_bucket=1000, horizon_ms=60_000)
+    fn = _make_shard_fn(max_bucket=1000, horizon_ms=60_000)
     state = _FakeGroupState()
     emitted = set()
     for batch in batches:
         if not batch:
             continue
         pdf = pd.DataFrame({"timestamp": [t for t, _ in batch],
+                            "band_key": ["k"] * len(batch),
                             "doc_id": [d for _, d in batch]})
-        for out in fn((0, "k"), iter([pdf]), state):
+        for out in fn((0, 0), iter([pdf]), state):
             emitted.update(zip(out["id_a"], out["id_b"]))
     expect = {(min(a, b), max(a, b)) for a, b in itertools.combinations(set(docs), 2)}
     assert emitted == expect
@@ -1146,17 +1265,17 @@ def test_bucket_cap_bounds_state_and_pairs():
     and a new arrival emits at most max_bucket pairs."""
     import pandas as pd
 
-    from kafka_to_nexus_spark.streaming.stateful import _make_bucket_fn
+    from kafka_to_nexus_spark.streaming.stateful import _make_shard_fn
 
-    fn = _make_bucket_fn(max_bucket=5, horizon_ms=60_000)
+    fn = _make_shard_fn(max_bucket=5, horizon_ms=60_000)
     state = _FakeGroupState()
     for i in range(30):
         pdf = pd.DataFrame({"timestamp": [1_000_000_000 * (i + 1)],
-                            "doc_id": [i]})
-        outs = list(fn((0, "k"), iter([pdf]), state))
+                            "band_key": ["k"], "doc_id": [i]})
+        outs = list(fn((0, 0), iter([pdf]), state))
         n_pairs = sum(len(o) for o in outs)
         assert n_pairs <= 5
-    assert len(state.get[0]) <= 5
+    assert len(state.get[1][0]) <= 5
 
 
 def test_bucket_cap_bounds_single_batch_burst():
@@ -1165,18 +1284,19 @@ def test_bucket_cap_bounds_single_batch_burst():
     pairs, not n² — and membership is trimmed as the loop runs."""
     import pandas as pd
 
-    from kafka_to_nexus_spark.streaming.stateful import _make_bucket_fn
+    from kafka_to_nexus_spark.streaming.stateful import _make_shard_fn
 
     n, cap = 200, 5
-    fn = _make_bucket_fn(max_bucket=cap, horizon_ms=60_000)
+    fn = _make_shard_fn(max_bucket=cap, horizon_ms=60_000)
     state = _FakeGroupState()
     pdf = pd.DataFrame({"timestamp": [1_000_000_000 * (i + 1) for i in range(n)],
+                        "band_key": ["k"] * n,
                         "doc_id": list(range(n))})
-    outs = list(fn((0, "k"), iter([pdf]), state))
+    outs = list(fn((0, 0), iter([pdf]), state))
     n_pairs = sum(len(o) for o in outs)
     assert n_pairs <= cap * n
     assert n_pairs < n * (n - 1) // 2  # strictly below the quadratic clique
-    assert len(state.get[0]) <= cap
+    assert len(state.get[1][0]) <= cap
 
 
 @pytest.mark.parametrize("seed", [0, 1, 2, 3])
@@ -1189,10 +1309,7 @@ def test_shard_fn_matches_per_bucket_fn(seed):
 
     import pandas as pd
 
-    from kafka_to_nexus_spark.streaming.stateful import (
-        _make_bucket_fn,
-        _make_shard_fn,
-    )
+    from kafka_to_nexus_spark.streaming.stateful import _make_shard_fn
 
     rng = random.Random(seed)
     bucket_keys = [f"bk{i}" for i in range(rng.randint(1, 5))]
@@ -1252,10 +1369,7 @@ def test_shard_fn_post_eviction_rearrival_is_duplicate():
     re-pair and re-append it)."""
     import pandas as pd
 
-    from kafka_to_nexus_spark.streaming.stateful import (
-        _make_bucket_fn,
-        _make_shard_fn,
-    )
+    from kafka_to_nexus_spark.streaming.stateful import _make_shard_fn
 
     # cap=2: docs 1,2,3 arrive (3 evicts 1), then doc 1 re-arrives with a
     # NEWER timestamp inside the same batch
@@ -1452,59 +1566,204 @@ def test_stop_retarget_rearms_partition_filter_and_latches_finished(spark, buffe
     assert job.state.finished
 
 
-def test_near_dup_candidates_auto_shards(spark, tmp_path):
-    """shards="auto" resolves to 4x the stateful exchange's partition
-    count (SCALE.md round-6 rule) and the query runs end-to-end with the
-    sharded state layout."""
-    import json
+# partition counts of the restart test: a shard count derived from them
+# (4 x partitions, the removed automatic count) would move keys
+_PARTS_BEFORE, _PARTS_AFTER = 2, 4
 
-    import pandas as pd
 
+def _moved_keys(spark, keys: list) -> list:
+    """The keys whose shard under 4 x _PARTS_BEFORE differs from their
+    shard under 4 x _PARTS_AFTER."""
+    df = spark.createDataFrame([(k,) for k in keys], "k string")
+    shard = [
+        F.pmod(F.xxhash64("k"), F.lit(4 * n)).alias(f"s{n}")
+        for n in (_PARTS_BEFORE, _PARTS_AFTER)
+    ]
+    return [
+        r.k for r in df.select("k", *shard).collect()
+        if r[f"s{_PARTS_BEFORE}"] != r[f"s{_PARTS_AFTER}"]
+    ]
+
+
+def _quota_restart_case(spark):
+    """Quota 2, sources whose shard would move: batch 1 exhausts every
+    source, so batch 2 admits nothing."""
+    from kafka_to_nexus_spark.streaming import stateful
+
+    sources = _moved_keys(spark, [f"src{i}" for i in range(40)])[:3]
+    assert len(sources) == 3
+    b1 = [f144(10_000 + i, float(i), source=s, offset=i)
+          for i, s in enumerate(sources * 2)]
+    b2 = [f144(20_000 + i, 100.0 + i, source=s, offset=10 + i)
+          for i, s in enumerate(sources * 2)]
+
+    def query(fixture_dir):
+        return stateful.source_quota_stream(
+            _file_stream(spark, fixture_dir), quota=2)
+
+    def write(fixture_dir, name, rows, seq):
+        _write_fixture(fixture_dir, name, rows, seq=seq)
+
+    return query, write, b1, b2
+
+
+def _near_dup_restart_case(spark):
+    """Four texts seen in batch 1 and again in batch 2; at least one of
+    their band keys would move shard."""
     from kafka_to_nexus_spark.llm import dedup as llm_dedup
     from kafka_to_nexus_spark.streaming import stateful
 
-    src = tmp_path / "in"
-    src.mkdir()
-    rows = [{"doc_id": i, "text": t, "timestamp": (i + 1) * 1_000_000_000}
-            for i, t in enumerate(["aaaa bbbb cccc"] * 3 + ["zzzz yyyy xxxx"])]
-    (src / "b0.json").write_text("\n".join(json.dumps(r) for r in rows))
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "2")
-    try:
+    texts = [
+        "the quick brown fox jumps over the lazy dog again and again",
+        "a stitch in time saves nine but only when the needle is sharp",
+        "streaming state must survive a restart from its checkpoint",
+        "every bucket of the banded signature keeps its standing members",
+    ]
+    b1 = [{"doc_id": i, "timestamp": (i + 1) * 1_000_000_000, "text": t}
+          for i, t in enumerate(texts)]
+    b2 = [{"doc_id": 10 + i, "timestamp": (20 + i) * 1_000_000_000, "text": t}
+          for i, t in enumerate(texts)]
+    keys = llm_dedup.banded_signatures(
+        llm_dedup.minhash_signatures(
+            spark.createDataFrame(
+                [(r["doc_id"], r["text"]) for r in b1],
+                "doc_id long, text string")),
+        "doc_id", 4, 2,
+    ).collect()
+    assert _moved_keys(spark, sorted({r.band_key for r in keys}))
+
+    def query(fixture_dir):
         raw = (spark.readStream
-               .schema("doc_id long, text string, timestamp long")
-               .json(str(src)))
+               .schema("doc_id long, timestamp long, text string")
+               .option("maxFilesPerTrigger", 1).json(str(fixture_dir)))
         sig = llm_dedup.minhash_signatures(raw, keep_cols=("timestamp",))
-        out = stateful.near_dup_candidates(
-            sig, horizon="1 hour", watermark="1 second", shards="auto")
-        work = tmp_path / "ckpt"
-        q = (out.writeStream.format("memory").queryName("auto_nd")
-             .option("checkpointLocation", str(work)).start())
+        return stateful.near_dup_candidates(
+            sig, horizon="1 hour", watermark="1 hour")
+
+    return query, _write_fixture_raw, b1, b2
+
+
+@pytest.mark.parametrize("case", ["source_quota_stream", "near_dup_candidates"])
+def test_keyed_state_survives_restart_at_other_partition_count(
+    spark, tmp_path, case
+):
+    """A keyed streaming operator restarted from its checkpoint under a
+    different spark.sql.shuffle.partitions continues its state exactly:
+    batch 1 at one partition count, a new query on the same checkpoint
+    runs batch 2 at another, and the output equals an uninterrupted
+    run's. The keys are chosen so that a shard count derived from the
+    partition count would move them to other state entries (quota:
+    re-admitted sources; near-dup: batch-2 docs missing their pairs)."""
+    query, write, b1, b2 = {
+        "source_quota_stream": _quota_restart_case,
+        "near_dup_candidates": _near_dup_restart_case,
+    }[case](spark)
+    prev = spark.conf.get("spark.sql.shuffle.partitions")
+
+    def run(fixture_dir, out, ckpt, parts):
+        spark.conf.set("spark.sql.shuffle.partitions", str(parts))
+        # file sink: the memory sink cannot recover from a checkpoint
+        q = (query(fixture_dir).writeStream.format("parquet")
+             .outputMode("append").option("path", str(out))
+             .option("checkpointLocation", str(ckpt)).start())
         try:
             q.processAllAvailable()
         finally:
             q.stop()
-        got = {(r.id_a, r.id_b) for r in spark.table("auto_nd").collect()}
-        # the three identical docs form a clique in at least one band
-        assert {(0, 1), (0, 2), (1, 2)} <= got
-        # state groups = (band, shard) with shard in [0, 4*partitions)
-        ckpt_state = work / "state"
-        assert ckpt_state.exists()
+
+    def rows(out):
+        return sorted(map(tuple, spark.read.parquet(str(out)).collect()),
+                      key=repr)
+
+    try:
+        whole = tmp_path / "whole_in"
+        whole.mkdir()
+        write(whole, "b1.json", b1, 0)
+        write(whole, "b2.json", b2, 1)
+        run(whole, tmp_path / "whole_out", tmp_path / "whole_ckpt",
+            _PARTS_BEFORE)
+
+        split = tmp_path / "split_in"
+        split.mkdir()
+        write(split, "b1.json", b1, 0)
+        run(split, tmp_path / "split_out", tmp_path / "split_ckpt",
+            _PARTS_BEFORE)
+        write(split, "b2.json", b2, 1)
+        run(split, tmp_path / "split_out", tmp_path / "split_ckpt",
+            _PARTS_AFTER)
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", prev)
+    want = rows(tmp_path / "whole_out")
+    assert want  # batch 1 admits / batch 2 pairs in the uninterrupted run
+    assert rows(tmp_path / "split_out") == want
+
+
+def test_per_source_quota_checkpoint_fails_loudly_on_sharded_restart(
+    spark, tmp_path
+):
+    """Upgrade path from the older per-source quota state layout: a
+    checkpoint written with one state entry per source (the reference
+    model, grouped by the source column) restarted with
+    source_quota_stream must fail with Spark's key-schema check, not
+    silently re-admit every source."""
+    from pyspark.sql.streaming.state import GroupStateTimeout
+    from pyspark.sql.types import LongType, StructField, StructType
+
+    from kafka_to_nexus_spark.streaming import stateful
+
+    fixture_dir = tmp_path / "in"
+    fixture_dir.mkdir()
+    ckpt, out = str(tmp_path / "ckpt"), str(tmp_path / "out")
+    _write_fixture(fixture_dir, "b1.json", [
+        f144(10_000, 1.0, source="A", offset=0),
+        f144(11_000, 2.0, source="B", offset=1)])
+
+    def start(frame):
+        return (frame.writeStream.format("parquet").outputMode("append")
+                .option("path", out).option("checkpointLocation", ckpt)
+                .start())
+
+    stream = _file_stream(spark, fixture_dir)
+    fields = list(stream.schema.fields)
+    per_source = stream.groupBy("source_name").applyInPandasWithState(
+        _make_quota_fn(2, [f.name for f in fields], "timestamp"),
+        StructType(fields + [StructField("quota_rank", LongType())]),
+        _QUOTA_STATE,
+        "append",
+        GroupStateTimeout.NoTimeout,
+    )
+    q = start(per_source)
+    try:
+        q.processAllAvailable()
+    finally:
+        q.stop()
+    assert len(spark.read.parquet(out).collect()) == 2
+
+    _write_fixture(fixture_dir, "b2.json", [
+        f144(12_000, 3.0, source="A", offset=2)], seq=1)
+    q = start(stateful.source_quota_stream(
+        _file_stream(spark, fixture_dir), quota=2))
+    try:
+        with pytest.raises(Exception,
+                           match="STATE_STORE_KEY_SCHEMA_NOT_COMPATIBLE"):
+            q.processAllAvailable()
+    finally:
+        q.stop()
 
 
 # ---------------------------------------------------------------------------
 # L44 streaming twin: per-source admission quota
 # ---------------------------------------------------------------------------
 
-@pytest.mark.parametrize("shards", [None, 2])
+@pytest.mark.parametrize(
+    "shards", [{}, {"shards": 2}], ids=["default", "2"]
+)
 def test_source_quota_stream_admits_first_n_per_source(spark, tmp_path, shards):
     """Quota of 2 per source across 2 micro-batches: batch-1 rows fill the
     budget in event-time order; batch-2 rows are admitted only with
     leftover budget (cross-batch monotone admission), and quota_rank
-    numbers admissions 1..k per source. Identical under both state
-    layouts: per-source entries and the sharded packing."""
+    numbers admissions 1..k per source. Identical under the default
+    shard count and a small one."""
     from kafka_to_nexus_spark.streaming import stateful
 
     fixture_dir = tmp_path / "in"
@@ -1524,8 +1783,8 @@ def test_source_quota_stream_admits_first_n_per_source(spark, tmp_path, shards):
     ], seq=1)
 
     out = stateful.source_quota_stream(
-        _file_stream(spark, fixture_dir), quota=2, shards=shards)
-    name = f"source_quota_{shards or 0}"
+        _file_stream(spark, fixture_dir), quota=2, **shards)
+    name = f"source_quota_{shards.get('shards', 0)}"
     q = (out.writeStream.format("memory").queryName(name)
          .outputMode("append")
          .option("checkpointLocation", str(tmp_path / "ckpt"))
@@ -1564,10 +1823,7 @@ def test_quota_shard_fn_matches_per_source_fn(seed):
 
     import pandas as pd
 
-    from kafka_to_nexus_spark.streaming.stateful import (
-        _make_quota_fn,
-        _make_quota_shard_fn,
-    )
+    from kafka_to_nexus_spark.streaming.stateful import _make_quota_shard_fn
 
     rng = random.Random(seed)
     sources = [f"s{i}" for i in range(rng.randint(1, 5))]
@@ -1708,18 +1964,18 @@ def test_source_quota_stream_rejects_bad_args(spark):
 def test_resolve_shards_rejects_nonpositive_ints(spark):
     """ADVICE r7: shards=0 flows into pmod(xxhash64(src), 0) — null shard
     keys collapse every source into one state entry (or hard-fail under
-    ANSI). Non-positive ints and bools must fail fast like bad strings."""
+    ANSI). Non-positive ints, bools, None and any string must fail
+    fast: the shard count is an int, fixed for the query's lifetime."""
     import pytest as _pytest
 
     from kafka_to_nexus_spark.schemas import MESSAGE_SCHEMA
     from kafka_to_nexus_spark.streaming import stateful
 
     df = spark.createDataFrame([], MESSAGE_SCHEMA)
-    for bad in (0, -3, True, 2.5):
+    for bad in (0, -3, True, 2.5, None, "auto"):
         with _pytest.raises(ValueError, match="shards"):
             stateful.source_quota_stream(df, quota=2, shards=bad)
-    assert stateful._resolve_shards(df, None) is None
-    assert stateful._resolve_shards(df, 8) == 8
+    assert stateful._check_shards(8) == 8
 
 
 def test_quota_state_key_null_vs_none_string():

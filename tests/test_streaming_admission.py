@@ -711,6 +711,15 @@ def _frames_df(spark, ids):
     )
 
 
+# Spark jobs of one Bloom layout build over the standing docs (local[4],
+# 4 shuffle partitions, AQE on): the distinct-fingerprint checkpoint that
+# also counts the keys, the words bit_or and the two relation writes, with
+# their AQE stage jobs. The params relation aggregating the corpus a
+# second time inside the words write measured 8. Raise this only with a
+# reason.
+MAX_JOBS_BLOOM_BUILD = 5
+
+
 @pytest.mark.parametrize("call", [
     "write_neardup_banding_layout",
     "write_bloom_layout",
@@ -723,7 +732,7 @@ def test_layout_writes_join_callers_job_group(spark, tmp_path, call):
     """Every Spark job of a layout build, a video append and a video
     admission trigger, the concurrent relation writes included, runs in
     the caller's job group, so cancelling the group reaches all of them;
-    none runs outside a group."""
+    none runs outside a group. The Bloom build stays in its job budget."""
     from kafka_to_nexus_spark.llm import multimodal as mm
 
     path = str(tmp_path / "layout")
@@ -758,4 +767,7 @@ def test_layout_writes_join_callers_job_group(spark, tmp_path, call):
         sc.setLocalProperty("spark.job.description", None)
     bus.waitUntilEmpty()
     assert set(tracker.getJobIdsForGroup(None)) == ungrouped
-    assert tracker.getJobIdsForGroup(group)
+    jobs = tracker.getJobIdsForGroup(group)
+    assert jobs
+    if call == "write_bloom_layout":
+        assert len(jobs) <= MAX_JOBS_BLOOM_BUILD, len(jobs)

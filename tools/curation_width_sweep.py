@@ -6,7 +6,7 @@ The r9 parity pin ran `curation_stream` on 2 micro-batches x 5k docs;
 this sweep composes it WITH the sharded per-source quota at the
 50k-source tier (the L44 sweep's scale point) and records steady-state
 batch cost and state size for BOTH stateful operators (the watermarked
-fingerprint dedup and the quota counters), at shards=None / 128 / auto.
+fingerprint dedup and the quota counters), at shards=32 / 128.
 
 Every synthesized doc is en-scored, above the quality threshold, PII-free
 and fingerprint-DISTINCT (a per-row unique word), so every row traverses
@@ -63,7 +63,7 @@ print(f"input: {N_SOURCES} sources x {ROWS_PER_SOURCE} rows x "
       f"{N_BATCHES} batches", flush=True)
 
 results = []
-for shards in (None, 128, "auto"):
+for shards in (32, 128):
     work = tempfile.mkdtemp(prefix="curation_width_")
     raw = (spark.readStream
            .schema("doc_id long, source_name string, timestamp long, "

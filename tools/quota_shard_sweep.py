@@ -42,7 +42,7 @@ print(f"input: {N_SOURCES} sources x {ROWS_PER_SOURCE} rows, 2 batches",
       flush=True)
 
 results = []
-for shards in (None, 128, "auto"):
+for shards in (32, 128):
     work = tempfile.mkdtemp(prefix="quota_scale_")
     raw = (spark.readStream
            .schema("source_name string, timestamp long, value double")

@@ -46,7 +46,7 @@ print(f"input: {total} docs, 2 batches", flush=True)
 spark.conf.set("spark.sql.shuffle.partitions", "32")
 
 results = []
-for shards in (None, 8, 32, 128, 512):
+for shards in (8, 32, 128, 512):
     work = tempfile.mkdtemp(prefix="nd_scale_")
     raw = (spark.readStream.schema("doc_id long, text string, timestamp long")
            .option("maxFilesPerTrigger", 4).json(f"{indir}/in/*"))
