@@ -8,18 +8,26 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 
-def _shard_bases(df: DataFrame, weight: Column, shard_col: str) -> DataFrame:
-    """One row per shard with the cumulative weight of all earlier shards.
+def _shard_bases(
+    df: DataFrame, weight: Column, shard_col: str, group_cols: Sequence[str] = ()
+) -> DataFrame:
+    """One row per (group, shard) with the cumulative weight of the group's
+    earlier shards.
 
-    The only global (no-PARTITION-BY) window here runs over the *aggregated*
-    per-shard totals — rows == number of Kafka partitions (≤ ~10⁴ even on a
-    100 TB topic), never over the stream itself.
+    The only window here runs over the *aggregated* per-shard totals —
+    rows == number of Kafka partitions (≤ ~10⁴ even on a 100 TB topic),
+    never over the stream itself.
     """
-    w = Window.orderBy(shard_col).rowsBetween(Window.unboundedPreceding, -1)
+    w = (
+        Window.partitionBy(*group_cols)
+        .orderBy(shard_col)
+        .rowsBetween(Window.unboundedPreceding, -1)
+    )
     return (
-        df.groupBy(shard_col)
+        df.groupBy(*group_cols, shard_col)
         .agg(F.sum(weight).alias("_shard_total"))
         .select(
+            *group_cols,
             shard_col,
             F.coalesce(F.sum("_shard_total").over(w), F.lit(0))
             .cast("long")
@@ -28,13 +36,48 @@ def _shard_bases(df: DataFrame, weight: Column, shard_col: str) -> DataFrame:
     )
 
 
+def sql_literal(value: str | int) -> str:
+    """``value`` as Spark SQL literal text: an int as itself, a string as
+    its UTF-8 bytes in hex, so no quote or escape rule can change it."""
+    if isinstance(value, str):
+        return f"CAST(X'{value.encode().hex()}' AS STRING)"
+    return str(int(value))
+
+
+def map_lookup(mapping: dict, key_cols: Sequence[str], default: int = 0) -> Column:
+    """``mapping`` (nested, one level per key column; long leaves) looked
+    up by ``key_cols``; ``default`` where a key is absent.
+
+    The map is one SQL literal expression: one py4j call however many
+    entries it holds, where ``F.create_map`` over ``F.lit`` pairs costs
+    about a dozen round trips per entry. Empty levels are left out."""
+
+    def literal(level: dict, depth: int) -> str | None:
+        leaf = depth == len(key_cols) - 1
+        entries = []
+        for k, v in level.items():
+            val = f"{int(v)}L" if leaf else literal(v, depth + 1)
+            if val is not None:
+                entries.append(f"{sql_literal(k)}, {val}")
+        return f"map({', '.join(entries)})" if entries else None
+
+    text = literal(mapping, 0)
+    if text is None:
+        return F.lit(default)
+    got = F.expr(text)
+    for c in key_cols:
+        got = F.element_at(got, F.col(c))
+    return F.coalesce(got, F.lit(default))
+
+
 def with_cumulative_before(
     df: DataFrame,
     weight: Column,
     out_col: str,
     shard_col: str = "partition",
     order_cols: Sequence[str] = ("offset",),
-    bases: dict[int, int] | None = None,
+    bases: dict | None = None,
+    group_col: str | None = None,
 ) -> DataFrame:
     """``out_col`` = sum of ``weight`` over all rows strictly before this row
     in global ``(shard, *order)`` arrival order — the reference's
@@ -47,26 +90,29 @@ def with_cumulative_before(
     reference gives: total order within a Kafka partition, partition-id
     order across partitions.
 
-    ``bases`` is ``{shard: weight of all earlier shards}`` when the caller
-    already has the per-shard totals (the runner and the micro-batch
-    processor get them from their one stats action,
-    ``operators.stats.partition_bases``); it rides as a map literal, so
-    the plan holds no extra subplan. Without it the bases come from a
-    broadcast join against the tiny per-shard totals relation, which
-    costs an aggregate, a global window over the totals and a broadcast.
+    ``group_col`` runs one independent counter per value of that column
+    (the grouped fast path's ``__source``: one frame, many sources).
+
+    ``bases`` is ``{shard: weight of all earlier shards}`` — with
+    ``group_col``, ``{group: {shard: base}}`` — when the caller already has
+    the per-shard totals (the runner and the micro-batch processor get them
+    from their one stats action, ``operators.stats.partition_bases``); it
+    rides as a map literal, so the plan holds no extra subplan. Without it
+    the bases come from a broadcast join against the tiny per-shard totals
+    relation, which costs an aggregate, a window over the totals and a
+    broadcast.
     """
+    groups = [group_col] if group_col else []
     if bases is None:
-        df = df.join(F.broadcast(_shard_bases(df, weight, shard_col)), on=shard_col)
-        base = F.col("_shard_base")
-    elif bases:
-        lookup = F.create_map(
-            *[x for s, b in bases.items() for x in (F.lit(s), F.lit(b).cast("long"))]
+        df = df.join(
+            F.broadcast(_shard_bases(df, weight, shard_col, groups)),
+            on=[*groups, shard_col],
         )
-        base = F.coalesce(F.element_at(lookup, F.col(shard_col)), F.lit(0))
+        base = F.col("_shard_base")
     else:
-        base = F.lit(0)
+        base = map_lookup(bases, [*groups, shard_col])
     within = (
-        Window.partitionBy(shard_col)
+        Window.partitionBy(*groups, shard_col)
         .orderBy(*order_cols)
         .rowsBetween(Window.unboundedPreceding, -1)
     )

@@ -42,9 +42,11 @@ def accepts_repeated_timestamps(module_id: str) -> bool:
 
 def group_streams(streams):
     """Split stream bindings into (groups, singles) for the 1000-source
-    fast path: same-module, same-shape-config, row-wise ("GROUPABLE")
-    bindings of size ≥ 2 run as ONE filter + transform + partitioned write
-    per module instead of one Spark-job pipeline per source. Identity keys
+    fast path: same-module, same-shape-config bindings whose transform
+    keeps sources apart ("GROUPABLE": row-wise, or per-source windows
+    like ev44's index) run, in groups of size ≥ 2, as ONE filter +
+    transform + partitioned write per module instead of one Spark-job
+    pipeline per source. Identity keys
     (topic/source) name the stream without changing the transform, so they
     are excluded from the shape key. Modules with per-source driver state
     (cue recurrences) or statics stay on the per-binding path."""

@@ -18,7 +18,9 @@ from the per-(source, partition) event counts of their one stats action
 (``operators.stats``), so the write plan holds no extra aggregate; called
 without them, ``transform`` derives them with a broadcast of the tiny
 per-partition totals. Exact parity with the reference's single-writer
-append order, no single-reducer sort.
+append order, no single-reducer sort. Banks without a cue run grouped
+(``modules.group_streams``): one frame keyed by ``__source``, one index
+per source, bases per (source, partition).
 """
 
 from __future__ import annotations
@@ -29,6 +31,9 @@ from pyspark.sql import functions as F
 from ..functions import with_cumulative_before
 
 ACCEPTS_REPEATED_TIMESTAMPS = True
+# per-source index from driver-side bases (no cross-row state a multi-source
+# frame would mix): banks without a cue run grouped (modules.group_streams)
+GROUPABLE = True
 WRITES_BUFFERED = False
 DEFAULTS = {"cue_interval": 100_000_000, "chunk_size": 1 << 20}
 
@@ -168,18 +173,26 @@ def cue_blocked(
 def transform(
     df: DataFrame,
     config: dict | None = None,
-    bases: dict[int, int] | None = None,
+    bases: dict | None = None,
 ) -> dict[str, DataFrame]:
     """``bases``: ``{partition: in-window events in lower partitions}`` for
     this source, when the caller has already counted them (see
-    ``with_cumulative_before``)."""
+    ``with_cumulative_before``). A frame keyed by ``__source`` (the grouped
+    fast path) holds several sources: each gets its own index, ``bases`` is
+    ``{source: {partition: base}}`` and both outputs keep ``__source``."""
     df = _drop_buffered(df)
+    keep = ["__source"] if "__source" in df.columns else []
     n_events = F.size("time_of_flight")
-    with_cum = with_cumulative_before(df, n_events, "_events_before", bases=bases)
+    with_cum = with_cumulative_before(
+        df, n_events, "_events_before", bases=bases,
+        group_col="__source" if keep else None,
+    )
     events = with_cum.select(
+        *keep,
         F.posexplode(F.arrays_zip("time_of_flight", "pixel_ids")).alias("_pos", "_e"),
         "_events_before",
     ).select(
+        *keep,
         F.col("_e.time_of_flight").alias("event_time_offset"),
         F.col("_e.pixel_ids").alias("event_id"),
         (F.col("_events_before") + F.col("_pos")).alias("_global_index"),
@@ -188,12 +201,14 @@ def transform(
     # (ev44_Writer.cpp writeImpl guards on CurrentNumberOfEvents > 0);
     # the events-before accounting above still counts every message.
     pulses = with_cum.filter(n_events > 0).select(
+        *keep,
         F.posexplode(F.col("reference_time")).alias("_pos", "event_time_zero"),
         F.coalesce(
             F.element_at(F.col("reference_time_index"), F.col("_pos") + 1), F.lit(0)
         ).alias("_rti"),
         "_events_before",
     ).select(
+        *keep,
         "event_time_zero",
         (F.col("_rti") + F.col("_events_before")).alias("event_index"),
     )

@@ -24,6 +24,8 @@ from collections.abc import Sequence
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..functions import sql_literal
+
 # Default envelope column names (schemas.MESSAGE_SCHEMA).
 TS = "timestamp"
 ORDER_COLS = ("partition", "offset")
@@ -46,9 +48,11 @@ def source_filter_many(
     df: DataFrame, schema_id: str, source_names: Sequence[str]
 ) -> DataFrame:
     """F1 over a whole source group in one predicate (schema equality +
-    IN-set) — the grouped fast path's scan filter."""
+    IN-set) — the grouped fast path's scan filter. The IN list is SQL text,
+    one py4j call for any group size (``isin`` makes several per name)."""
+    names = ", ".join(sql_literal(s) for s in source_names)
     return df.filter(
-        (F.col("schema") == schema_id) & F.col("source_name").isin(list(source_names))
+        (F.col("schema") == schema_id) & F.expr(f"source_name IN ({names})")
     )
 
 

@@ -112,6 +112,17 @@ def event_counts(stats: list[Row]) -> dict[tuple[str, str], dict[int, int]]:
     return counts
 
 
+def source_bases(
+    counts: dict[tuple[str, str], dict[int, int]], sources
+) -> dict[str, dict[int, int]]:
+    """``{source: partition_bases(...)}`` of the ev44 ``sources`` a grouped
+    pass indexes together (``counts`` from :func:`event_counts`); a source
+    without in-window rows has no entry (its base is 0)."""
+    return {
+        s: partition_bases(counts[("ev44", s)]) for s in sources if ("ev44", s) in counts
+    }
+
+
 def partition_bases(counts: dict[int, int]) -> dict[int, int]:
     """``{partition: events in all lower-numbered partitions}`` — the
     cross-partition offsets of the W2 index in partition-id order."""

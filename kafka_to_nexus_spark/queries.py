@@ -197,11 +197,12 @@ def _run_sql_materialized(
     SQL text — the cross-engine certificate — is untouched.
     Bit-identical by construction: the view holds exactly the rows the
     inlined subtree produces and every downstream operator consumes the
-    same relation. Paren matching is textual but QUOTE-AWARE (r14,
-    ADVICE r13 #1): parens inside single-quoted SQL string literals are
-    skipped (with '' escape handling), and a scanner that walks off the
-    end of the text raises a loud ValueError instead of mis-splicing
-    the query into wrong-but-parseable SQL."""
+    same relation. Paren matching is textual but QUOTE- AND
+    COMMENT-AWARE (r14, ADVICE r13 #1): parens inside single-quoted SQL
+    string literals (with '' escape handling), ``-- …`` line comments
+    and ``/* … */`` block comments are skipped, and a scanner that walks
+    off the end of the text raises a loud ValueError instead of
+    mis-splicing the query into wrong-but-parseable SQL."""
     import re as _re
 
     for nm in cte_names:
@@ -231,6 +232,15 @@ def _run_sql_materialized(
                             continue
                         break
                     i += 1
+            elif sql.startswith("--", i):
+                # line comment: resume at its newline (or the end)
+                nl = sql.find("\n", i)
+                i = n - 1 if nl < 0 else nl
+            elif sql.startswith("/*", i):
+                end = sql.find("*/", i + 2)
+                if end < 0:
+                    raise ValueError(f"unterminated block comment in CTE {nm!r}")
+                i = end + 1
             elif ch == "(":
                 depth += 1
             elif ch == ")":
@@ -240,8 +250,8 @@ def _run_sql_materialized(
             i += 1
         view = f"_mat_{tag}_{nm}"
         _fresh_ckpt(
-            spark, spark.sql(sql[: i + 1] + f" SELECT * FROM {nm}")
-        ).createOrReplaceTempView(view)
+            spark, spark.sql(sql[: i + 1] + f" SELECT * FROM {nm}"), view=view
+        )
         sql = sql[: start + 1] + f"SELECT * FROM {view}" + sql[i:]
     return spark.sql(sql)
 
@@ -1453,11 +1463,12 @@ LEFT JOIN best ON d.doc_id = best.id_a
 
 
 #: Eager localCheckpoints created inside registry query builders, keyed
-#: by applicationId (ADVICE r13 #3): checkpointed blocks pin executor
-#: storage OUTSIDE the cache manager, so they are registered here and
-#: released when the NEXT registry query builds (_with_ckpt_release) —
+#: by applicationId (ADVICE r13 #3), each with the temp view it backs, if
+#: any: checkpointed blocks pin executor storage OUTSIDE the cache
+#: manager, so they are registered here and released, their views
+#: dropped, when the NEXT registry query builds (_with_ckpt_release) —
 #: the _PIPELINE_PERSIST lifecycle extended to checkpoints.
-_CKPT_PERSIST: dict[str, list] = {}
+_CKPT_PERSIST: dict[str, list[tuple[DataFrame, str | None]]] = {}
 
 
 def _release_ckpt(df: DataFrame) -> None:
@@ -1475,15 +1486,22 @@ def _release_ckpt(df: DataFrame) -> None:
         pass
 
 
-def _fresh_ckpt(spark: SparkSession, df: DataFrame) -> DataFrame:
-    """localCheckpoint with tracked release (see _CKPT_PERSIST)."""
+def _fresh_ckpt(
+    spark: SparkSession, df: DataFrame, view: str | None = None
+) -> DataFrame:
+    """localCheckpoint with tracked release (see _CKPT_PERSIST),
+    registered as temp view ``view`` when one is given."""
     ck = df.localCheckpoint()
-    _CKPT_PERSIST.setdefault(spark.sparkContext.applicationId, []).append(ck)
+    if view is not None:
+        ck.createOrReplaceTempView(view)
+    _CKPT_PERSIST.setdefault(spark.sparkContext.applicationId, []).append((ck, view))
     return ck
 
 
 def _release_prior_ckpts(spark: SparkSession) -> None:
-    for df in _CKPT_PERSIST.pop(spark.sparkContext.applicationId, []):
+    for df, view in _CKPT_PERSIST.pop(spark.sparkContext.applicationId, []):
+        if view is not None:
+            spark.catalog.dropTempView(view)
         _release_ckpt(df)
 
 

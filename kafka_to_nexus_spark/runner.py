@@ -157,6 +157,17 @@ def grouped_summary(module, df: DataFrame, config: dict | None, group: list) -> 
     return values
 
 
+def has_summary(module_id: str, config: dict | None) -> bool:
+    """Whether a binding gets T6 aggregates: ``"meta_data": false``
+    suppresses them (f144_Writer.cpp:264,282), and ev44's one value,
+    ``events``, comes from the stats action (``job_metadata``)."""
+    return (
+        module_id != "ev44"
+        and hasattr(get_module(module_id), "aggregates")
+        and (config or {}).get("meta_data", True)
+    )
+
+
 def _plan_tasks(
     plan: Plan,
     windowed: DataFrame,
@@ -181,17 +192,13 @@ def _plan_tasks(
         if not accepts_repeated_timestamps(binding.module):
             src = filters.drop_repeated_timestamps(src)
         if binding.module == "ev44":
-            # ev44's T6 value, ``events``, comes from the stats action
-            # (job_metadata)
             counts = event_counts.get((binding.module, binding.source), {})
             outputs = module.transform(src, config, bases=stats.partition_bases(counts))
         else:
             outputs = module.transform(src, config)
-            # T6 summaries; "meta_data": false suppresses them
-            # (f144_Writer.cpp:264,282)
-            if hasattr(module, "aggregates") and (config or {}).get("meta_data", True):
-                agg_input = outputs.get("log", src)
-                tasks.append(partial(summary, module, agg_input, config, binding.path))
+        if has_summary(binding.module, config):
+            agg_input = outputs.get("log", src)
+            tasks.append(partial(summary, module, agg_input, config, binding.path))
         for dataset, df in outputs.items():
             order = staging.order_cols(binding.module, dataset, df.columns)
             if order:
@@ -211,12 +218,17 @@ def _plan_tasks(
     for (module_id, _shape), group in groups.items():
         module = get_module(module_id)
         config = group[0].config
-        src = filters.source_filter_many(windowed, module_id, [b.source for b in group])
+        sources = [b.source for b in group]
+        src = filters.source_filter_many(windowed, module_id, sources)
         if not accepts_repeated_timestamps(module_id):
             # already partitions by (schema, source) internally
             src = filters.drop_repeated_timestamps(src)
         keyed = src.withColumn("__source", F.col("source_name"))
-        outputs = module.transform(keyed, config)
+        if module_id == "ev44":
+            bases = stats.source_bases(event_counts, sources)
+            outputs = module.transform(keyed, config, bases=bases)
+        else:
+            outputs = module.transform(keyed, config)
         path_by_source = {b.source: b.path for b in group}
         for dataset, df in outputs.items():
             order = staging.order_cols(module_id, dataset, df.columns)
@@ -233,7 +245,7 @@ def _plan_tasks(
             tasks.append(partial(
                 staging.write_dataset_grouped, df, out_dir, path_by_source, dataset
             ))
-        if hasattr(module, "aggregates") and (config or {}).get("meta_data", True):
+        if has_summary(module_id, config):
             agg_input = outputs.get("log", keyed)
             tasks.append(partial(grouped_summary, module, agg_input, config, group))
         for b in group:

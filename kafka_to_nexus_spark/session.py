@@ -4,6 +4,18 @@ Local-mode defaults match the test/bench harness (local[N], AQE on,
 Arrow on). On a real cluster the same builder applies — only master()
 and memory sizing change. The driver heap is ``SPARK_GRAFT_DRIVER_MEM``
 when set, else :func:`default_driver_memory`.
+
+DataFrame-debugging origin capture
+(``spark.python.sql.dataFrameDebugging.enabled``) is off by default.
+PySpark's default wraps every ``functions``/``Column`` call in a call-site
+capture: 5–8 extra py4j round trips per expression (the active session, a
+conf read, setting and clearing the JVM's current origin), a stack walk,
+and an import of IPython into the driver. That makes the driver's work per
+job grow with the number of column expressions in the plan. Off, an
+``AnalysisException`` still names the failing expression but not the
+Python line that built it. When chasing one, turn capture back on for that
+session:
+``get_spark(extra_conf={"spark.python.sql.dataFrameDebugging.enabled": "true"})``.
 """
 
 from __future__ import annotations
@@ -61,9 +73,15 @@ def get_spark(
             os.environ.get("SPARK_GRAFT_DRIVER_MEM") or default_driver_memory(),
         )
         .config("spark.ui.enabled", "false")
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    # PySpark reads the debugging conf once per process and caches it;
+    # drop the cache so this session's value is the one that holds.
+    import pyspark.errors.utils as _errors_utils
+
+    _errors_utils._enable_debugging_cache = None
     return spark

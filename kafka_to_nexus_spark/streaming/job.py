@@ -46,11 +46,12 @@ from pathlib import Path
 from pyspark.sql import DataFrame, Row, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..functions import map_lookup
 from ..modules import accepts_repeated_timestamps, get_module, group_streams
 from ..operators import filters, quality, stats
 from ..plan import Plan, StartMessage, build_plan
 from ..plan.model import MS_TO_NS
-from ..runner import grouped_summary, job_metadata, run_tasks, summary
+from ..runner import grouped_summary, has_summary, job_metadata, run_tasks, summary
 from ..schemas import MESSAGE_SCHEMA
 from ..sinks import staging
 
@@ -179,32 +180,26 @@ def envelope_from_kafka_json(kafka_df: DataFrame) -> DataFrame:
 # Cross-batch state + micro-batch processor (K1 analog)
 # --------------------------------------------------------------------------
 
-def _drop_cross_batch_repeats(src: DataFrame, lasts: dict, key_expr) -> DataFrame:
+def _drop_cross_batch_repeats(
+    src: DataFrame, lasts: dict, key_cols: list[str]
+) -> DataFrame:
     """F4 across micro-batches: each (source, partition)'s FIRST row this
     batch (lag == null within the batch, so drop_repeated_timestamps keeps
     it) still repeats if its ts equals the last ts WRITTEN from that
     partition — the reference's one-SourceFilter-per-(source, partition)
     carry state. Shared by the grouped and singles paths (only the
-    ``lasts`` map key shape differs); the window spec is aligned with
-    drop_repeated_timestamps so its exchange + sort are reused and the
-    check costs no extra shuffle. The coalesce(-1) guards element_at's
-    null for partitions with no prior tail — ts == null would null the
-    predicate and silently drop the row."""
+    ``lasts`` map key shape differs: ``key_cols`` as in ``map_lookup``);
+    the window spec is aligned with drop_repeated_timestamps so its
+    exchange + sort are reused and the check costs no extra shuffle. The
+    -1 default stands in for partitions with no prior tail — ts == null
+    would null the predicate and silently drop the row."""
     if not lasts:
         return src
     w = Window.partitionBy(*filters.F4_SOURCE_COLS).orderBy(*filters.F4_ORDER_COLS)
-    last_map = F.create_map(*[F.lit(x) for kv in lasts.items() for x in kv])
+    last_ts = map_lookup(lasts, key_cols, default=-1)
     return (
         src.withColumn("_rn", F.row_number().over(w))
-        .filter(
-            ~(
-                (F.col("_rn") == 1)
-                & (
-                    F.col("timestamp")
-                    == F.coalesce(F.element_at(last_map, key_expr), F.lit(-1))
-                )
-            )
-        )
+        .filter(~((F.col("_rn") == 1) & (F.col("timestamp") == last_ts)))
         .drop("_rn")
     )
 
@@ -534,26 +529,39 @@ class StreamingJob:
                 src = filters.drop_repeated_timestamps(src)
                 # cross-batch repeat filter, group-wide: the last written
                 # ts per (source, partition) rides as a map literal keyed
-                # "source\x1fpartition" (see the per-binding variant below
-                # for the semantics)
+                # by source, then partition (see the per-binding variant
+                # below for the semantics)
                 group_sources = {b.source for b in group}
-                lasts = {
-                    f"{s}\x1f{p}": t
-                    for (m, s, p), t in st.last_written_ts.items()
-                    if m == module_id and s in group_sources
-                }
+                lasts: dict = {}
+                for (m, s, p), t in st.last_written_ts.items():
+                    if m == module_id and s in group_sources:
+                        lasts.setdefault(s, {})[p] = t
                 src = _drop_cross_batch_repeats(
-                    src,
-                    lasts,
-                    F.concat_ws(
-                        "\x1f", F.col("source_name"), F.col("partition")
-                    ),
+                    src, lasts, ["source_name", "partition"]
                 )
                 for (m, s, p), tail in tails.items():
                     if m == module_id and tail is not None and s in group_sources:
                         st.last_written_ts[(m, s, p)] = int(tail)
             keyed = src.withColumn("__source", F.col("source_name"))
-            outputs = module.transform(keyed, config)
+            sources = [b.source for b in group]
+            if module_id == "ev44":
+                outputs = module.transform(
+                    keyed, config, bases=stats.source_bases(event_counts, sources)
+                )
+                # W2: shift each source's indices by its cumulative count
+                written_before = map_lookup(
+                    {s: st.events_written.get((module_id, s), 0) for s in sources},
+                    ["__source"],
+                )
+                outputs["pulses"] = outputs["pulses"].withColumn(
+                    "event_index", F.col("event_index") + written_before
+                )
+                for s in sources:
+                    st.events_written[(module_id, s)] = st.events_written.get(
+                        (module_id, s), 0
+                    ) + sum(event_counts.get((module_id, s), {}).values())
+            else:
+                outputs = module.transform(keyed, config)
             # write only the sources with data this batch; absent members'
             # dirs come from earlier batches or finalize's backfill
             path_by_source = {b.source: b.path for b in members}
@@ -589,9 +597,7 @@ class StreamingJob:
                     for (m, s, p), t in st.last_written_ts.items()
                     if (m, s) == key
                 }
-                src = _drop_cross_batch_repeats(
-                    src, lasts, F.col("partition")
-                )
+                src = _drop_cross_batch_repeats(src, lasts, ["partition"])
                 for (m, s, p), tail in tails.items():
                     if (m, s) == key and tail is not None:
                         st.last_written_ts[(m, s, p)] = int(tail)
@@ -852,7 +858,6 @@ class StreamingJob:
         job_info, metadata_values, group_attrs = self._meta_base()
         agg_bindings: list = []
         for binding in self.plan.streams:
-            module = get_module(binding.module)
             written = self._written_datasets.get(staging.stream_key(binding), [])
             # K4: cumulative cue from the staged log in staging order
             cue_interval = (binding.config or {}).get("cue_interval")
@@ -876,15 +881,8 @@ class StreamingJob:
                 )
                 if "cue" not in written:
                     written.append("cue")
-            # T6 job-summary aggregates from staged output (ev44's events
-            # counter already comes from _meta_base); "meta_data": false
-            # suppresses them (f144_Writer.cpp:264,282)
-            if (
-                binding.module != "ev44"
-                and hasattr(module, "aggregates")
-                and "log" in written
-                and (binding.config or {}).get("meta_data", True)
-            ):
+            # T6 job-summary aggregates from staged output
+            if "log" in written and has_summary(binding.module, binding.config):
                 agg_bindings.append(binding)
 
         # T6 aggregates over staged logs, with the batch runner's helpers:
@@ -892,16 +890,20 @@ class StreamingJob:
         # reduced) staged logs and run ONE grouped aggregate job, instead
         # of one read+aggregate+collect job per stream — O(module-groups)
         # finalize jobs at 1000 sources.
-        def staged_log(b) -> DataFrame:
-            return self.spark.read.parquet(
-                str(staging.dataset_dir(self.out_dir, b.path, "log"))
-            )
+        def staged_log(b, schema=None) -> DataFrame:
+            reader = self.spark.read if schema is None else self.spark.read.schema(schema)
+            return reader.parquet(str(staging.dataset_dir(self.out_dir, b.path, "log")))
 
         agg_groups, agg_singles = group_streams(agg_bindings)
         tasks = []
         for (module_id, _shape), group in agg_groups.items():
+            # one module and config shape, so one staged schema: infer it
+            # once (a footer read per log) and hand it to the other reads
+            first = staged_log(group[0])
             log = reduce(DataFrame.unionByName, [
-                staged_log(b).withColumn("__source", F.lit(b.source)) for b in group
+                (first if b is group[0] else staged_log(b, first.schema))
+                .withColumn("__source", F.lit(b.source))
+                for b in group
             ])
             tasks.append(partial(
                 grouped_summary, get_module(module_id), log, group[0].config, group

@@ -1,5 +1,7 @@
 from __future__ import annotations
 
+import contextlib
+import itertools
 import os
 import sys
 from pathlib import Path
@@ -31,6 +33,43 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir() -> str:
     return str(TESTDATA / "sf0.001")
+
+
+class Py4jCalls:
+    """Round trips of a :func:`count_py4j` block. ``n`` counts calls and
+    constructions, not the object releases py4j sends when Python frees a
+    ``JavaObject``: those follow the collector's timing, not the block's
+    own work."""
+
+    n = 0
+
+
+@contextlib.contextmanager
+def count_py4j():
+    """Count the driver's py4j round trips inside the block: every
+    ``ClientServerConnection.send_command`` call but object releases, on
+    any thread (the fan-out's pool threads included). Yields a
+    :class:`Py4jCalls` whose count is final once the block exits."""
+    from py4j import protocol
+    from py4j.clientserver import ClientServerConnection
+
+    release = protocol.MEMORY_COMMAND_NAME + protocol.MEMORY_DEL_SUBCOMMAND_NAME
+    calls = Py4jCalls()
+    ticks = itertools.count()
+    send = ClientServerConnection.send_command
+
+    def counted(self, command):
+        # itertools.count is atomic under the GIL, so safe from pool threads
+        if not command.startswith(release):
+            next(ticks)
+        return send(self, command)
+
+    ClientServerConnection.send_command = counted
+    try:
+        yield calls
+    finally:
+        ClientServerConnection.send_command = send
+        calls.n = next(ticks)
 
 
 def union_find_components(edges, vertices) -> dict:

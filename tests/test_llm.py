@@ -4135,6 +4135,50 @@ def test_run_sql_materialized_quote_aware_and_bounded(spark):
         Q._run_sql_materialized(spark, "c AS (SELECT 'x", ("c",), "qa")
 
 
+def test_run_sql_materialized_skips_comments(spark):
+    """The CTE paren scanner skips ``-- …`` line comments and
+    ``/* … */`` block comments, so a paren inside a comment cannot end
+    (or keep open) a CTE body; an unterminated block comment is a loud
+    error."""
+    import pytest
+
+    from kafka_to_nexus_spark import queries as Q
+
+    sql = (
+        "WITH\n"
+        "c AS (SELECT 1 AS n -- note: ( is unbalanced here\n"
+        "      , 2 AS m /* and ) here ( too */),\n"
+        "d AS (SELECT n + m AS s FROM c)\n"
+        "SELECT c.n, c.m, d.s FROM c CROSS JOIN d"
+    )
+    inline = sorted(map(tuple, spark.sql(sql).collect()))
+    mat = sorted(
+        map(tuple, Q._run_sql_materialized(spark, sql, ("c",), "cm").collect())
+    )
+    assert mat == inline == [(1, 2, 3)]
+    with pytest.raises(ValueError, match="unterminated block comment"):
+        Q._run_sql_materialized(spark, "c AS (SELECT 1 /* (", ("c",), "cm")
+
+
+def test_registry_build_drops_prior_materialized_views(spark):
+    """The ``_mat_*`` temp views a registry build registers are dropped,
+    with their checkpoints, when the next registry build starts."""
+    from kafka_to_nexus_spark import queries as Q
+
+    sql = "WITH\nc AS (SELECT 1 AS n)\nSELECT n FROM c"
+
+    def build(tag):
+        return Q._with_ckpt_release(
+            lambda spark, sf_dir: Q._run_sql_materialized(spark, sql, ("c",), tag)
+        )
+
+    assert build("first")(spark, "").collect()[0].n == 1
+    assert spark.catalog.tableExists("_mat_first_c")
+    assert build("second")(spark, "").collect()[0].n == 1
+    assert not spark.catalog.tableExists("_mat_first_c")
+    assert spark.catalog.tableExists("_mat_second_c")
+
+
 def test_pq_train_portable_error_paths(spark):
     """r14 (ADVICE r13 #4): empty input raises a loud ValueError (not a
     bare IndexError), and an explicitly-passed indivisible dim raises

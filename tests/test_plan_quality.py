@@ -251,6 +251,41 @@ def test_cumulative_index_matches_global_window(spark):
     assert got_bases == want
 
 
+def test_grouped_cumulative_index_matches_per_group_window(spark):
+    """With ``group_col`` every group runs its own counter: the broadcast
+    form and the driver-side ``{group: {shard: base}}`` form both equal a
+    per-group running sum in global (partition, offset) order."""
+    from pyspark.sql import Window
+    from pyspark.sql import functions as F
+
+    from kafka_to_nexus_spark.functions import with_cumulative_before
+    from kafka_to_nexus_spark.operators.stats import partition_bases
+
+    env = _envelope_fixture(spark, n=300, parts=7).withColumn(
+        "__source", F.concat(F.lit("s"), (F.col("offset") % 3).cast("string"))
+    )
+    weight = F.size("timestamps")
+    totals: dict = {}
+    for r in env.groupBy("__source", "partition").agg(F.sum(weight).alias("n")).collect():
+        totals.setdefault(r["__source"], {})[r["partition"]] = r["n"]
+    w = (Window.partitionBy("__source").orderBy("partition", "offset")
+         .rowsBetween(Window.unboundedPreceding, -1))
+    want = {
+        r["offset"]: r["cum"]
+        for r in env.withColumn(
+            "cum", F.coalesce(F.sum(weight).over(w), F.lit(0)).cast("long")
+        ).collect()
+    }
+    for bases in (None, {s: partition_bases(t) for s, t in totals.items()}):
+        got = {
+            r["offset"]: r["cum"]
+            for r in with_cumulative_before(
+                env, weight, "cum", bases=bases, group_col="__source"
+            ).collect()
+        }
+        assert got == want, bases is None
+
+
 # ---------------------------------------------------------------------------
 # New-op plan shapes: SRP, k-means assignment, decontamination
 # ---------------------------------------------------------------------------

@@ -328,6 +328,77 @@ def test_grouped_path_repeat_dedup_per_partition(spark, tmp_path):
     assert job.state.last_written_ts[("f144", "src_a", 0)] == 13_000_000_000
 
 
+def test_grouped_finalize_aggregates_per_source(spark, tmp_path):
+    """finalize's grouped T6 aggregate reads every staged log of a group
+    with the first log's schema: each source still gets the min, max and
+    mean of its own rows across batches."""
+    structure = {"children": [{
+        "name": "entry", "type": "group",
+        "children": [
+            {"name": n, "type": "group",
+             "children": [{"module": "f144",
+                           "config": {"topic": "t", "source": n}}]}
+            for n in ("a", "b", "c")
+        ],
+    }]}
+    start = StartMessage(
+        job_id="grouped-t6", filename="f", nexus_structure=structure,
+        start_time_ms=10_000, stop_time_ms=60_000,
+    )
+    job = StreamingJob(spark, start, str(tmp_path / "out"))
+    job.process_batch(messages_from_json(spark, [
+        f144(11_000, 1.0, source="a", offset=0),
+        f144(11_000, 10.0, source="b", offset=1),
+    ]), 0)
+    job.process_batch(messages_from_json(spark, [
+        f144(12_000, 5.0, source="a", offset=2),
+        f144(12_000, 30.0, source="c", offset=3),
+    ]), 1)
+    job.finalize()
+    vals = staging.read_meta(job.out_dir)["metadata_values"]
+    for src, (lo, hi, mean) in {
+        "a": (1.0, 5.0, 3.0), "b": (10.0, 10.0, 10.0), "c": (30.0, 30.0, 30.0)
+    }.items():
+        assert vals[f"/entry/{src}/minimum_value"] == lo
+        assert vals[f"/entry/{src}/maximum_value"] == hi
+        assert vals[f"/entry/{src}/average_value"] == pytest.approx(mean)
+
+
+def test_single_path_repeat_dedup_per_partition(spark, tmp_path):
+    """The per-binding path's cross-batch repeat filter keys its
+    last-written map by partition: a lone f144 source's partition-1
+    boundary repeat is dropped, while the same ts arriving first on
+    partition 0 passes."""
+    structure = {"children": [{
+        "name": "entry", "type": "group",
+        "children": [{"name": "a", "type": "group",
+                      "children": [{"module": "f144",
+                                    "config": {"topic": "t", "source": "src_a"}}]}],
+    }]}
+    start = StartMessage(
+        job_id="single-f4", filename="f", nexus_structure=structure,
+        start_time_ms=10_000, stop_time_ms=60_000,
+    )
+    job = StreamingJob(spark, start, str(tmp_path / "out"))
+
+    def msg(ts, value, part, offset):
+        return {"schema": "f144", "topic": "t", "source_name": "src_a",
+                "partition": part, "offset": offset,
+                "kafka_timestamp": ts, "timestamp": ts, "value": value}
+
+    job.process_batch(messages_from_json(
+        spark, [msg(11_000, 1.0, 0, 0), msg(12_000, 2.0, 1, 0)]), 0)
+    job.process_batch(messages_from_json(
+        spark, [msg(12_000, 3.0, 0, 1),     # p0's last is 11_000 → keep
+                msg(12_000, 99.0, 1, 1)]),  # p1 boundary repeat → drop
+        1)
+    job.finalize()
+
+    log = read_dataset(spark, job, "/entry/a", "log")
+    assert sorted(r.value for r in log.collect()) == [1.0, 2.0, 3.0]
+    assert job.state.last_written_ts[("f144", "src_a", 0)] == 12_000_000_000
+
+
 def test_streaming_matches_batch_runner_output(spark, tmp_path):
     """Equivalence invariant: the same messages, run through the batch
     runner vs split across streaming micro-batches, stage identical
