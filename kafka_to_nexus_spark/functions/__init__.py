@@ -44,9 +44,11 @@ def sql_literal(value: str | int) -> str:
     return str(int(value))
 
 
-def map_lookup(mapping: dict, key_cols: Sequence[str], default: int = 0) -> Column:
+def map_lookup(
+    mapping: dict, key_cols: Sequence[str], default: int | None = 0
+) -> Column:
     """``mapping`` (nested, one level per key column; long leaves) looked
-    up by ``key_cols``; ``default`` where a key is absent.
+    up by ``key_cols``; ``default`` where a key is absent (``None``: null).
 
     The map is one SQL literal expression: one py4j call however many
     entries it holds, where ``F.create_map`` over ``F.lit`` pairs costs
@@ -67,7 +69,7 @@ def map_lookup(mapping: dict, key_cols: Sequence[str], default: int = 0) -> Colu
     got = F.expr(text)
     for c in key_cols:
         got = F.element_at(got, F.col(c))
-    return F.coalesce(got, F.lit(default))
+    return got if default is None else F.coalesce(got, F.lit(default))
 
 
 def with_cumulative_before(

@@ -40,21 +40,25 @@ def accepts_repeated_timestamps(module_id: str) -> bool:
     return getattr(REGISTRY[module_id], "ACCEPTS_REPEATED_TIMESTAMPS", False)
 
 
-def group_streams(streams):
-    """Split stream bindings into (groups, singles) for the 1000-source
-    fast path: same-module, same-shape-config bindings whose transform
-    keeps sources apart ("GROUPABLE": row-wise, or per-source windows
-    like ev44's index) run, in groups of size ≥ 2, as ONE filter +
-    transform + partitioned write per module instead of one Spark-job
-    pipeline per source. Identity keys
-    (topic/source) name the stream without changing the transform, so they
-    are excluded from the shape key. Modules with per-source driver state
-    (cue recurrences) or statics stay on the per-binding path."""
-    import json as _json
+def group_streams(streams) -> list[list]:
+    """Partition stream bindings into source groups, in plan order; every
+    binding runs in exactly one group, and each group runs as ONE filter +
+    transform + partitioned write per dataset, however many sources it
+    holds (the 1000-source fast path).
 
-    groups: dict[tuple[str, str], list] = {}
-    singles: list = []
-    for b in streams:
+    Same-module, same-shape-config bindings share a group when the
+    module's transform keeps sources apart ("GROUPABLE": row-wise, or
+    per-source windows like ev44's index). Identity keys (topic/source)
+    name the stream without changing the transform, so they are excluded
+    from the shape key. A binding with per-source driver state (a cue
+    recurrence) or statics, and every binding of a source bound more than
+    once in a group, is a group of one: the grouped write keys its
+    partition dirs and aggregate rows by source name."""
+    import json as _json
+    from collections import Counter
+
+    shared: dict[object, list] = {}
+    for i, b in enumerate(streams):
         module = REGISTRY.get(b.module)
         cfg = b.config or {}
         if (
@@ -64,29 +68,15 @@ def group_streams(streams):
             and not hasattr(module, "statics")
         ):
             shape = {k: v for k, v in cfg.items() if k not in ("topic", "source")}
-            groups.setdefault(
-                (b.module, _json.dumps(shape, sort_keys=True)), []
-            ).append(b)
+            key = (b.module, _json.dumps(shape, sort_keys=True))
         else:
-            singles.append(b)
-    # The grouped write keys its partition-dir renames and aggregate rows by
-    # source name, so a source may appear at most ONCE per group. Two
-    # bindings with the same (module, source) at different paths are legal
-    # plans (one PV written into two groups) — route every binding of a
-    # duplicated source to the per-binding path, where each path gets its
-    # own write.
-    for key, members in list(groups.items()):
-        seen: dict[str, int] = {}
-        for b in members:
-            seen[b.source] = seen.get(b.source, 0) + 1
-        dup = {s for s, n in seen.items() if n > 1}
-        if dup:
-            keep = [b for b in members if b.source not in dup]
-            singles.extend(b for b in members if b.source in dup)
-            if keep:
-                groups[key] = keep
-            else:
-                groups.pop(key)
-    for key in [k for k, v in groups.items() if len(v) == 1]:
-        singles.extend(groups.pop(key))
-    return groups, singles
+            key = i
+        shared.setdefault(key, []).append(b)
+    groups: list[list] = []
+    for members in shared.values():
+        seen = Counter(b.source for b in members)
+        unique = [b for b in members if seen[b.source] == 1]
+        if unique:
+            groups.append(unique)
+        groups.extend([b] for b in members if seen[b.source] > 1)
+    return groups

@@ -10,15 +10,11 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..functions import map_lookup
 from ..schemas import SEVERITY_CODES
 
 ACCEPTS_REPEATED_TIMESTAMPS = False
 GROUPABLE = True  # row-wise map - multi-source safe with a passthrough key
-
-
-def severity_code(col):
-    mapping = F.create_map(*[F.lit(x) for kv in SEVERITY_CODES.items() for x in kv])
-    return F.element_at(mapping, col).cast("short")
 
 
 def transform(df: DataFrame, config: dict | None = None) -> dict[str, DataFrame]:
@@ -26,7 +22,9 @@ def transform(df: DataFrame, config: dict | None = None) -> dict[str, DataFrame]
     out = df.select(
         *keep,
         F.col("timestamp").alias("alarm_time"),
-        severity_code(F.col("severity")).alias("alarm_severity"),
+        map_lookup(SEVERITY_CODES, ["severity"], default=None)
+        .cast("short")
+        .alias("alarm_severity"),
         F.coalesce(F.nullif(F.col("message"), F.lit("")), F.lit("NO ALARM MESSAGE")).alias(
             "alarm_message"
         ),

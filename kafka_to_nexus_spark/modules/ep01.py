@@ -10,15 +10,11 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..functions import map_lookup
 from ..schemas import CONNECTION_INFO_CODES
 
 ACCEPTS_REPEATED_TIMESTAMPS = False
 GROUPABLE = True  # row-wise map - multi-source safe with a passthrough key
-
-
-def status_code(col):
-    mapping = F.create_map(*[F.lit(x) for kv in CONNECTION_INFO_CODES.items() for x in kv])
-    return F.element_at(mapping, col).cast("short")
 
 
 def transform(df: DataFrame, config: dict | None = None) -> dict[str, DataFrame]:
@@ -26,6 +22,8 @@ def transform(df: DataFrame, config: dict | None = None) -> dict[str, DataFrame]
     out = df.select(
         *keep,
         F.col("timestamp").alias("connection_status_time"),
-        status_code(F.col("connection_status")).alias("connection_status"),
+        map_lookup(CONNECTION_INFO_CODES, ["connection_status"], default=None)
+        .cast("short")
+        .alias("connection_status"),
     )
     return {"status": out}

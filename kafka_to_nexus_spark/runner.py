@@ -1,7 +1,8 @@
 """Batch job runner — the ``file-maker`` equivalent (SURVEY.md §3.2).
 
-Executes a full job: StartMessage → plan → one filtered scan → per-stream
-module transforms → staged columnar output + hierarchical metadata.
+Executes a full job: StartMessage → plan → one filtered scan → one
+module transform per source group → staged columnar output + hierarchical
+metadata.
 
 Execution shape (Spark-first), one incremental plan per job like a
 Structured Streaming trigger:
@@ -17,13 +18,17 @@ Structured Streaming trigger:
   window as a tiny local relation; the event counts give ev44's
   ``events`` value and its cross-partition index bases, so no write plan
   recomputes them.
+- One binding path: every stream binding runs in a source group
+  (``modules.group_streams``), and a group may have one member. A group
+  is one source filter, one transform over a frame keyed by
+  ``__source`` and one partitioned write per dataset.
 - Flat fan-out (``run_tasks``, shared with ``StreamingJob``): every
-  (binding, dataset) write and every remaining T6 aggregate collect is its
+  (group, dataset) write and every remaining T6 aggregate collect is its
   own task on one thread pool, so the scheduler interleaves their stages;
   tasks return their metadata values, and pool threads inherit the
   caller's job group.
 - One job-output surface with the live path: the T6 aggregates
-  (``summary``/``grouped_summary``) and the job metadata
+  (``grouped_summary``) and the job metadata
   (``job_metadata``) are computed here for both job paths, and the staged
   dataset format (order table, stream keys) lives in ``sinks.staging``.
 - All plan work is driver-side Python; all data movement is DataFrames;
@@ -126,12 +131,6 @@ def _prefixed(path: str, values: dict) -> dict:
     return {f"{path}/{name}": value for name, value in values.items()}
 
 
-def summary(module, df: DataFrame, config: dict | None, path: str) -> dict:
-    """T6 job-summary aggregates of one binding."""
-    rows = module.aggregates(df, config).collect()
-    return _prefixed(path, rows[0].asDict()) if rows else {}
-
-
 def _statics(module, df: DataFrame, config: dict | None, path: str) -> dict:
     return _prefixed(path, module.statics(df, config))
 
@@ -142,10 +141,10 @@ def grouped_summary(module, df: DataFrame, config: dict | None, group: list) -> 
     rows = module.aggregates(df, config, group_key="__source").collect()
     by_source = {r["__source"]: r.asDict() for r in rows}
     values: dict[str, object] = {}
-    # groupBy drops zero-row sources, but the per-binding path's global
-    # aggregate still yields one row for them (None min/max, 0 counts).
-    # Emit the identical row for parity — computed once from an empty
-    # slice and shared by every empty source.
+    # groupBy drops zero-row sources, but a source's T6 values always
+    # exist: emit the global aggregate of no rows (None min/max, 0
+    # counts), computed once from an empty slice and shared by every
+    # empty source.
     empty_row: dict[str, object] | None = None
     for b in group:
         got = by_source.get(b.source)
@@ -168,54 +167,35 @@ def has_summary(module_id: str, config: dict | None) -> bool:
     )
 
 
+def source_keyed(df: DataFrame, group: list) -> DataFrame:
+    """A transform output with its ``__source`` key column. Row-wise and
+    per-source outputs carry it through from the input; the rest (cue
+    tables, ad00/da00 frames) only ever come from a group of one, whose
+    source is a literal."""
+    if "__source" in df.columns:
+        return df
+    assert len(group) == 1, [b.source for b in group]
+    return df.withColumn("__source", F.lit(group[0].source))
+
+
 def _plan_tasks(
     plan: Plan,
     windowed: DataFrame,
     out_dir: str,
     event_counts: dict[tuple[str, str], dict[int, int]],
 ) -> tuple[list, dict[str, list[str]]]:
-    """Build the job's fan-out on the driver: one task per (binding,
+    """Build the job's fan-out on the driver: one task per (source group,
     dataset) write and per T6 aggregate or statics collect. Returns the
     tasks and the datasets staged per stream.
 
-    Same-module, same-shape, row-wise bindings are grouped into one pass
-    each (modules.group_streams); everything else takes the per-binding
-    path."""
+    Every binding runs in a source group (modules.group_streams): one
+    filter + transform + partitionBy write per dataset and one grouped
+    aggregate job per group, however many sources it holds, so the plan
+    is O(groups) per job regardless of source count."""
     tasks: list = []
     stream_outputs: dict[str, list[str]] = {}
-    groups, singles = group_streams(plan.streams)
-
-    for binding in singles:
-        module = get_module(binding.module)
-        config = binding.config
-        src = filters.source_filter(windowed, binding.module, binding.source)
-        if not accepts_repeated_timestamps(binding.module):
-            src = filters.drop_repeated_timestamps(src)
-        if binding.module == "ev44":
-            counts = event_counts.get((binding.module, binding.source), {})
-            outputs = module.transform(src, config, bases=stats.partition_bases(counts))
-        else:
-            outputs = module.transform(src, config)
-        if has_summary(binding.module, config):
-            agg_input = outputs.get("log", src)
-            tasks.append(partial(summary, module, agg_input, config, binding.path))
-        for dataset, df in outputs.items():
-            order = staging.order_cols(binding.module, dataset, df.columns)
-            if order:
-                df = df.orderBy(*order)
-            df = df.drop(*staging.HELPER_COLS)
-            tasks.append(partial(staging.write_dataset, df, out_dir, binding.path, dataset))
-        # write-once statics (da00 constants)
-        if hasattr(module, "statics"):
-            tasks.append(partial(_statics, module, src, config, binding.path))
-        stream_outputs[staging.stream_key(binding)] = list(outputs)
-
-    # 1000-source fast path: same-module same-config row-wise bindings run
-    # as ONE filter + transform + partitionBy write (plus one grouped
-    # aggregate job), instead of one Spark job pipeline per source. The
-    # per-source path degrades linearly in job-scheduler overhead; this
-    # path is O(modules) per job regardless of source count.
-    for (module_id, _shape), group in groups.items():
+    for group in group_streams(plan.streams):
+        module_id = group[0].module
         module = get_module(module_id)
         config = group[0].config
         sources = [b.source for b in group]
@@ -231,12 +211,12 @@ def _plan_tasks(
             outputs = module.transform(keyed, config)
         path_by_source = {b.source: b.path for b in group}
         for dataset, df in outputs.items():
+            df = source_keyed(df, group)
             order = staging.order_cols(module_id, dataset, df.columns)
             if order:
                 # repartition BY SOURCE first: each source then lands whole
-                # in one task, so sortWithinPartitions gives the same
-                # per-source global order the per-binding path gets from
-                # orderBy (and one ordered part file per source dir) —
+                # in one task, so sortWithinPartitions gives it a global
+                # order (and one ordered part file per source dir) —
                 # without it, a source spanning tasks concatenates part
                 # files in task order and the packed time axis is not
                 # monotone
@@ -248,6 +228,11 @@ def _plan_tasks(
         if has_summary(module_id, config):
             agg_input = outputs.get("log", keyed)
             tasks.append(partial(grouped_summary, module, agg_input, config, group))
+        # write-once statics (da00 constants); statics keep a binding in
+        # a group of its own
+        if hasattr(module, "statics"):
+            (b,) = group
+            tasks.append(partial(_statics, module, keyed, config, b.path))
         for b in group:
             stream_outputs[staging.stream_key(b)] = list(outputs)
     return tasks, stream_outputs

@@ -192,9 +192,9 @@ def write_dataset_grouped_batched(
 ) -> None:
     """Streaming variant of :func:`write_dataset_grouped`: one write
     partitioned by (source, batch); each produced ``batch=N`` directory
-    REPLACES its target — the same idempotent-replay semantics the
-    per-stream path gets from dynamic partition overwrite, for the whole
-    source group in one Spark job."""
+    REPLACES its target, so a replayed micro-batch rewrites only its own
+    batch and the staged output stays idempotent under failure/restart
+    (plain append would duplicate the crashed attempt's files)."""
     import shutil
     import tempfile
     from urllib.parse import unquote
@@ -216,21 +216,6 @@ def write_dataset_grouped_batched(
                 bdir.rename(tgt)
     finally:
         shutil.rmtree(tmp, ignore_errors=True)
-
-
-def write_dataset_batched(
-    df: DataFrame, out_dir: str | Path, group_path: str, dataset: str
-) -> None:
-    """Per-binding live write: dynamic partition overwrite on ``batch``, so
-    a replayed micro-batch rewrites ONLY its own partition and the staged
-    output stays idempotent under failure/restart (plain append would
-    duplicate the crashed attempt's files)."""
-    (
-        df.write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("batch")
-        .parquet(str(dataset_dir(out_dir, group_path, dataset)))
-    )
 
 
 def write_meta(

@@ -9,16 +9,18 @@ Shape:
 - decode: envelope columns from the Kafka value — binary FlatBuffers via
   the pure-Python runtime (``fbs`` package, default) or the JSON fixture
   encoding, both behind the same envelope contract;
-- sink: ``foreachBatch`` → the batch runner's per-stream pipeline and job
-  output surface: the ``operators.stats`` scan action, the source filters
-  and module transforms, the write fan-out (``runner.run_tasks``), the T6
-  aggregates (``runner.summary``/``grouped_summary``, here over the staged
+- sink: ``foreachBatch`` → the batch runner's binding path and job
+  output surface: the ``operators.stats`` scan action, one source filter
+  and module transform per source group (``modules.group_streams``; a
+  group may have one member), the write fan-out (``runner.run_tasks``),
+  the T6 aggregates (``runner.grouped_summary``, here over the staged
   logs at finalize), the job metadata (``runner.job_metadata``) and the
   staged-dataset format (``sinks.staging``). What stays live-only is what
-  differs in meaning: the cross-batch F4 repeat carry, the cue derived
-  from the staged log at finalize, first-message statics, batch-keyed
-  idempotent overwrite, and the two pieces of genuinely cross-batch state
-  the reference keeps (SURVEY.md §7 "hard parts"):
+  differs in meaning, all of it inside the same group loop and keyed per
+  member: the cross-batch F4 repeat carry, the ev44 cue carry and the cue
+  derived from the staged log at finalize, first-message statics,
+  batch-keyed idempotent overwrite, and the two pieces of genuinely
+  cross-batch state the reference keeps (SURVEY.md §7 "hard parts"):
     * F3 as-of buffer — latest pre-start message per source, emitted when
       the first in-window message arrives or at stop
       (src/Stream/SourceFilter.cpp:61-66);
@@ -47,11 +49,11 @@ from pyspark.sql import DataFrame, Row, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..functions import map_lookup
-from ..modules import accepts_repeated_timestamps, get_module, group_streams
+from ..modules import accepts_repeated_timestamps, ev44, get_module, group_streams
 from ..operators import filters, quality, stats
 from ..plan import Plan, StartMessage, build_plan
 from ..plan.model import MS_TO_NS
-from ..runner import grouped_summary, has_summary, job_metadata, run_tasks, summary
+from ..runner import grouped_summary, has_summary, job_metadata, run_tasks, source_keyed
 from ..schemas import MESSAGE_SCHEMA
 from ..sinks import staging
 
@@ -180,23 +182,21 @@ def envelope_from_kafka_json(kafka_df: DataFrame) -> DataFrame:
 # Cross-batch state + micro-batch processor (K1 analog)
 # --------------------------------------------------------------------------
 
-def _drop_cross_batch_repeats(
-    src: DataFrame, lasts: dict, key_cols: list[str]
-) -> DataFrame:
+def _drop_cross_batch_repeats(src: DataFrame, lasts: dict) -> DataFrame:
     """F4 across micro-batches: each (source, partition)'s FIRST row this
     batch (lag == null within the batch, so drop_repeated_timestamps keeps
     it) still repeats if its ts equals the last ts WRITTEN from that
     partition — the reference's one-SourceFilter-per-(source, partition)
-    carry state. Shared by the grouped and singles paths (only the
-    ``lasts`` map key shape differs: ``key_cols`` as in ``map_lookup``);
-    the window spec is aligned with drop_repeated_timestamps so its
-    exchange + sort are reused and the check costs no extra shuffle. The
-    -1 default stands in for partitions with no prior tail — ts == null
-    would null the predicate and silently drop the row."""
+    carry state. ``lasts`` is ``{source: {partition: ts}}`` for a source
+    group, looked up with ``map_lookup``; the window spec is aligned with
+    drop_repeated_timestamps so its exchange + sort are reused and the
+    check costs no extra shuffle. The -1 default stands in for partitions
+    with no prior tail — ts == null would null the predicate and silently
+    drop the row."""
     if not lasts:
         return src
     w = Window.partitionBy(*filters.F4_SOURCE_COLS).orderBy(*filters.F4_ORDER_COLS)
-    last_ts = map_lookup(lasts, key_cols, default=-1)
+    last_ts = map_lookup(lasts, ["source_name", "partition"], default=-1)
     return (
         src.withColumn("_rn", F.row_number().over(w))
         .filter(~((F.col("_rn") == 1) & (F.col("timestamp") == last_ts)))
@@ -509,14 +509,17 @@ class StreamingJob:
         tails = tails or {}
         event_counts = event_counts or {}
         tasks: list = []
-        groups, singles = group_streams(self.plan.streams)
 
-        # -- 1000-source fast path: one filter + transform + partitioned
-        # write per same-shape module group, instead of one Spark-job
-        # pipeline per source per batch (see modules.group_streams).
-        for (module_id, _shape), group in groups.items():
+        # One filter + transform + partitioned write per source group and
+        # dataset, however many sources the group holds (see
+        # modules.group_streams); per-source state lives in maps keyed by
+        # source, or in a member of a group of one.
+        for group in group_streams(self.plan.streams):
+            module_id = group[0].module
             module = get_module(module_id)
             config = group[0].config
+            sources = [b.source for b in group]
+            group_sources = set(sources)
             members = (
                 group
                 if present is None
@@ -527,51 +530,58 @@ class StreamingJob:
             )
             if not accepts_repeated_timestamps(module_id):
                 src = filters.drop_repeated_timestamps(src)
-                # cross-batch repeat filter, group-wide: the last written
-                # ts per (source, partition) rides as a map literal keyed
-                # by source, then partition (see the per-binding variant
-                # below for the semantics)
-                group_sources = {b.source for b in group}
+                # cross-batch repeat filter: the last written ts per
+                # (source, partition) rides as a map literal keyed by
+                # source, then partition
                 lasts: dict = {}
                 for (m, s, p), t in st.last_written_ts.items():
                     if m == module_id and s in group_sources:
                         lasts.setdefault(s, {})[p] = t
-                src = _drop_cross_batch_repeats(
-                    src, lasts, ["source_name", "partition"]
-                )
+                src = _drop_cross_batch_repeats(src, lasts)
                 for (m, s, p), tail in tails.items():
                     if m == module_id and tail is not None and s in group_sources:
                         st.last_written_ts[(m, s, p)] = int(tail)
             keyed = src.withColumn("__source", F.col("source_name"))
-            sources = [b.source for b in group]
+            if hasattr(module, "statics"):
+                for b in members:
+                    self._capture_statics(module, b, keyed)
+            if (config or {}).get("cue_interval"):
+                # The batch-local cue would be meaningless across micro-
+                # batches: the cumulative cue is carried below (ev44) or
+                # derived from the staged log at finalize (the rest), so
+                # the interval must not trigger per-batch cue work: ev44's
+                # cue_blocked is EAGER (persist + per-block collect) and
+                # f144's cue path runs with_row_index's two-pass shuffle
+                # just to have its output discarded. Strip the trigger for
+                # the transform call only — finalize reads binding.config.
+                config = {k: v for k, v in config.items() if k != "cue_interval"}
             if module_id == "ev44":
                 outputs = module.transform(
                     keyed, config, bases=stats.source_bases(event_counts, sources)
                 )
                 # W2: shift each source's indices by its cumulative count
-                written_before = map_lookup(
-                    {s: st.events_written.get((module_id, s), 0) for s in sources},
-                    ["__source"],
-                )
+                before = {s: st.events_written.get((module_id, s), 0) for s in sources}
                 outputs["pulses"] = outputs["pulses"].withColumn(
-                    "event_index", F.col("event_index") + written_before
+                    "event_index", F.col("event_index") + map_lookup(before, ["__source"])
                 )
+                for b in members:
+                    cue = self._ev44_cue(b, keyed, before[b.source])
+                    if cue is not None:
+                        outputs["cue"] = cue
                 for s in sources:
-                    st.events_written[(module_id, s)] = st.events_written.get(
-                        (module_id, s), 0
-                    ) + sum(event_counts.get((module_id, s), {}).values())
+                    st.events_written[(module_id, s)] = before[s] + sum(
+                        event_counts.get((module_id, s), {}).values()
+                    )
             else:
                 outputs = module.transform(keyed, config)
             # write only the sources with data this batch; absent members'
             # dirs come from earlier batches or finalize's backfill
             path_by_source = {b.source: b.path for b in members}
             for dataset, df in outputs.items():
-                if dataset == "cue":
-                    continue
                 if members:
                     tasks.append(partial(
                         staging.write_dataset_grouped_batched,
-                        staging.with_batch_order(df, batch_seq),
+                        staging.with_batch_order(source_keyed(df, group), batch_seq),
                         self.out_dir, path_by_source, dataset,
                     ))
                 for b in group:
@@ -579,138 +589,60 @@ class StreamingJob:
                     if dataset not in written:
                         written.append(dataset)
 
-        for binding in singles:
-            module = get_module(binding.module)
-            src = filters.source_filter(windowed, binding.module, binding.source)
-            key = (binding.module, binding.source)
-            is_present = present is None or key in present
-            if not accepts_repeated_timestamps(binding.module):
-                src = filters.drop_repeated_timestamps(src)
-                # cross-batch repeat: each partition's FIRST row this
-                # batch (lag == null within its partition, so the window
-                # op keeps it) still repeats if its ts equals the last ts
-                # written from THAT partition — per-partition carry state,
-                # like the reference's one SourceFilter per
-                # (source, partition).
-                lasts = {
-                    p: t
-                    for (m, s, p), t in st.last_written_ts.items()
-                    if (m, s) == key
-                }
-                src = _drop_cross_batch_repeats(src, lasts, ["partition"])
-                for (m, s, p), tail in tails.items():
-                    if (m, s) == key and tail is not None:
-                        st.last_written_ts[(m, s, p)] = int(tail)
-            # W5: constants refined from the source's FIRST message
-            # (da00_Writer.cpp:92-130) — one driver action per present
-            # batch until every declared constant has resolved (a
-            # data-less first message must not latch a constant as
-            # permanently missing). check_consistency=True: the batch is
-            # being read anyway, matching the reference's always-verify.
-            if hasattr(module, "statics") and is_present:
-                prev = st.statics_by_path.get(binding.path)
-                expected = (
-                    module.statics_names(binding.config)
-                    if hasattr(module, "statics_names")
-                    else None
-                )
-                unresolved = prev is None or (
-                    expected is not None
-                    and any(not prev.get(n) for n in expected)
-                )
-                if unresolved:
-                    got = module.statics(
-                        src, binding.config, check_consistency=True
-                    )
-                    # first capture wins: merge only still-missing keys
-                    merged = dict(prev or {})
-                    for name, value in got.items():
-                        if not merged.get(name) and value not in (None, []):
-                            merged[name] = value
-                    st.statics_by_path[binding.path] = merged
-            cfg = binding.config
-            if (cfg or {}).get("cue_interval"):
-                # The batch-local "cue" output is dropped below and
-                # recomputed at finalize (cross-batch carry for ev44;
-                # staged-log derivation for the rest), so the interval
-                # must not trigger per-batch cue work: ev44's cue_blocked
-                # is EAGER (persist + per-block collect) and f144's cue
-                # path runs with_row_index's two-pass shuffle just to
-                # have its output discarded. Strip the trigger for the
-                # transform call only — finalize reads binding.config.
-                cfg = {k: v for k, v in cfg.items() if k != "cue_interval"}
-            counts = event_counts.get(key, {})
-            if binding.module == "ev44":
-                # W2 index bases from this batch's per-partition counts
-                outputs = module.transform(
-                    src, cfg, bases=stats.partition_bases(counts)
-                )
-            else:
-                outputs = module.transform(src, cfg)
-            written = self._written_datasets.setdefault(staging.stream_key(binding), [])
-            for dataset, df in outputs.items():
-                if dataset == "cue":
-                    # batch-local cue indices are meaningless across
-                    # micro-batches; the cumulative cue table is derived
-                    # from the staged log at finalize()
-                    continue
-                # W2: shift this batch's indices by the cumulative count
-                if binding.module == "ev44" and dataset == "pulses":
-                    df = df.withColumn(
-                        "event_index",
-                        F.col("event_index") + F.lit(st.events_written.get(key, 0)),
-                    )
-                if is_present:
-                    tasks.append(partial(
-                        staging.write_dataset_batched,
-                        staging.with_batch_order(df, batch_seq),
-                        self.out_dir, binding.path, dataset,
-                    ))
-                if dataset not in written:
-                    written.append(dataset)
-            if binding.module == "ev44":
-                # K4 streaming cue: run the threshold recurrence for this
-                # batch with the carried writer state (EventsWritten /
-                # LastCueIndex); cue rows are ≈ batch_events/interval — a
-                # bounded driver collect — and stage like any dataset.
-                interval = (binding.config or {}).get("cue_interval")
-                if interval and is_present:
-                    from ..modules import ev44 as ev44_mod
-
-                    block = (binding.config or {}).get("cue_block_size")
-                    cue_fn = ev44_mod.cue_blocked if block else ev44_mod.cue
-                    kw = {"block_size": int(block)} if block else {}
-                    cue_rows = cue_fn(
-                        src,
-                        binding.config,
-                        events_base=st.events_written.get(key, 0),
-                        last_cue=st.cue_last.get(key, -1),
-                        **kw,
-                    ).collect()
-                    if cue_rows:
-                        st.cue_last[key] = max(r["cue_index"] for r in cue_rows)
-                        cue_df = (
-                            self.spark.createDataFrame(
-                                cue_rows, "cue_index long, cue_timestamp_zero long"
-                            )
-                            .withColumn("_row_order", F.col("cue_index"))
-                            .withColumn("batch", F.lit(batch_seq))
-                        )
-                        tasks.append(partial(
-                            staging.write_dataset_batched,
-                            cue_df, self.out_dir, binding.path, "cue",
-                        ))
-                        if "cue" not in written:
-                            written.append("cue")
-                st.events_written[key] = st.events_written.get(key, 0) + sum(
-                    counts.values()
-                )
-
-        # One write per (binding, dataset), all independent Spark jobs over
+        # One write per (group, dataset), all independent Spark jobs over
         # the same persisted batch, on the job's shared fan-out. State
         # mutation stayed above, on one thread.
         run_tasks(self.spark, tasks)
         return bool(tasks)  # did this batch stage anything new?
+
+    def _capture_statics(self, module, binding, src: DataFrame) -> None:
+        """W5: constants refined from the source's FIRST message
+        (da00_Writer.cpp:92-130) — one driver action per present batch
+        until every declared constant has resolved (a data-less first
+        message must not latch a constant as permanently missing).
+        check_consistency=True: the batch is being read anyway, matching
+        the reference's always-verify."""
+        prev = self.state.statics_by_path.get(binding.path)
+        expected = (
+            module.statics_names(binding.config)
+            if hasattr(module, "statics_names")
+            else None
+        )
+        unresolved = prev is None or (
+            expected is not None and any(not prev.get(n) for n in expected)
+        )
+        if not unresolved:
+            return
+        got = module.statics(src, binding.config, check_consistency=True)
+        # first capture wins: merge only still-missing keys
+        merged = dict(prev or {})
+        for name, value in got.items():
+            if not merged.get(name) and value not in (None, []):
+                merged[name] = value
+        self.state.statics_by_path[binding.path] = merged
+
+    def _ev44_cue(self, binding, src: DataFrame, events_base: int) -> DataFrame | None:
+        """K4 streaming cue of one present ev44 binding with a
+        ``cue_interval``: the threshold recurrence for this batch with the
+        carried writer state (EventsWritten / LastCueIndex); cue rows are
+        ≈ batch_events/interval — a bounded driver collect — and stage
+        like any dataset. None when the batch crosses no threshold."""
+        config = binding.config or {}
+        if not config.get("cue_interval"):
+            return None
+        key = (binding.module, binding.source)
+        block = config.get("cue_block_size")
+        cue_fn = ev44.cue_blocked if block else ev44.cue
+        kw = {"block_size": int(block)} if block else {}
+        rows = cue_fn(
+            src, config, events_base=events_base,
+            last_cue=self.state.cue_last.get(key, -1), **kw,
+        ).collect()
+        if not rows:
+            return None
+        self.state.cue_last[key] = max(r["cue_index"] for r in rows)
+        cue = self.spark.createDataFrame(rows, "cue_index long, cue_timestamp_zero long")
+        return cue.withColumn("_row_order", F.col("cue_index"))
 
     def _meta_base(self) -> tuple[dict, dict, list]:
         """Metadata shared by live snapshots and finalize: the job
@@ -894,9 +826,8 @@ class StreamingJob:
             reader = self.spark.read if schema is None else self.spark.read.schema(schema)
             return reader.parquet(str(staging.dataset_dir(self.out_dir, b.path, "log")))
 
-        agg_groups, agg_singles = group_streams(agg_bindings)
         tasks = []
-        for (module_id, _shape), group in agg_groups.items():
+        for group in group_streams(agg_bindings):
             # one module and config shape, so one staged schema: infer it
             # once (a footer read per log) and hand it to the other reads
             first = staged_log(group[0])
@@ -906,12 +837,8 @@ class StreamingJob:
                 for b in group
             ])
             tasks.append(partial(
-                grouped_summary, get_module(module_id), log, group[0].config, group
+                grouped_summary, get_module(group[0].module), log, group[0].config, group
             ))
-        tasks += [
-            partial(summary, get_module(b.module), staged_log(b), b.config, b.path)
-            for b in agg_singles
-        ]
         metadata_values.update(run_tasks(self.spark, tasks))
 
         staging.write_meta(

@@ -86,6 +86,28 @@ def test_al00_empty_message_default(spark):
     assert out[0].alarm_message == "NO ALARM MESSAGE"
 
 
+def test_ep01_al00_unknown_codes_stay_null(spark):
+    """A status or severity name outside the schema's code table writes
+    null, not a code: only the known names map to numbers."""
+    def msg(schema, offset, **payload):
+        return {"schema": schema, "topic": "t", "source_name": "s", "offset": offset,
+                "timestamp": 10_100 + offset, "kafka_timestamp": 10_100 + offset,
+                **payload}
+
+    df = messages_from_json(spark, [
+        msg("ep01", 0, connection_status="ConnectionInfo::CONNECTED"),
+        msg("ep01", 1, connection_status="ConnectionInfo::HALF_OPEN"),
+        msg("al00", 2, severity="Severity::MAJOR", message="m"),
+        msg("al00", 3, severity="Severity::CATASTROPHIC", message="m"),
+    ])
+    status = ep01.transform(df.filter("schema = 'ep01'"))["status"]
+    alarms = al00.transform(df.filter("schema = 'al00'"))["alarms"]
+    assert [r.connection_status for r in status.orderBy("connection_status_time").collect()] == [2, None]
+    assert [r.alarm_severity for r in alarms.orderBy("alarm_time").collect()] == [2, None]
+    assert dict(status.dtypes)["connection_status"] == "smallint"
+    assert dict(alarms.dtypes)["alarm_severity"] == "smallint"
+
+
 def test_ev44_explode_and_index(spark):
     rows = [
         {"schema": "ev44", "topic": "t", "source_name": "d", "kafka_timestamp": 11_000,

@@ -277,9 +277,9 @@ def test_grouped_same_module_sources_match_per_source_semantics(spark, tmp_path)
 def test_duplicate_source_bindings_each_get_full_data(spark, tmp_path):
     """One PV bound into two different groups (same module, same source,
     two paths) is a legal plan: both datasets must receive the full stream.
-    The grouped fast path keys renames/aggregates by source name, so
-    duplicated sources must fall back to the per-binding path — a collapsed
-    duplicate would leave one path's dataset silently empty."""
+    The grouped write keys renames/aggregates by source name, so each
+    binding of a duplicated source must run in a source group of its own —
+    a collapsed duplicate would leave one path's dataset silently empty."""
     from kafka_to_nexus_spark.modules import group_streams
     from kafka_to_nexus_spark.sources.fixtures import messages_from_json
 
@@ -330,22 +330,22 @@ def test_duplicate_source_bindings_each_get_full_data(spark, tmp_path):
 
     streams = [B("f144", "s1", "p1"), B("f144", "s1", "p2"),
                B("f144", "s2", "p3"), B("f144", "s3", "p4")]
-    groups, singles = group_streams(streams)
-    grouped = [b for v in groups.values() for b in v]
-    assert {b.path for b in singles} >= {"p1", "p2"}
-    assert all(b.source != "s1" for b in grouped)
-    # the non-duplicated sources still group together
-    assert {b.source for b in grouped} == {"s2", "s3"}
+    groups = group_streams(streams)
+    group_of = {b.path: i for i, g in enumerate(groups) for b in g}
+    assert sorted(group_of) == ["p1", "p2", "p3", "p4"]
+    assert group_of["p1"] != group_of["p2"]
+    # the non-duplicated sources still group together, and only they do
+    assert {b.path for b in groups[group_of["p3"]]} == {"p3", "p4"}
 
 
 @pytest.mark.parametrize("modules_mix", [
-    ["f144"], ["f144", "al00"], ["ep01", "f144", "se00"],
+    ["f144"], ["f144", "al00"], ["ep01", "f144", "se00"], ["ev44", "f144"],
 ])
 def test_grouped_path_equivalent_to_per_source(spark, tmp_path, modules_mix, monkeypatch):
     """Equivalence guard for the 1000-source fast path: for mixed
-    multi-source jobs, the grouped and per-source paths must produce
-    identical staged datasets (row multisets per stream) and identical
-    job metadata."""
+    multi-source jobs, shared source groups and one group per binding
+    must produce identical staged datasets (row multisets per stream) and
+    identical job metadata."""
     import kafka_to_nexus_spark.modules as M
     import kafka_to_nexus_spark.runner as R
     from kafka_to_nexus_spark.sources.fixtures import messages_from_json
@@ -371,6 +371,9 @@ def test_grouped_path_equivalent_to_per_source(spark, tmp_path, modules_mix, mon
                 base.update(values=[float(m), float(m + 1)],
                             packet_timestamp=(10_000 + m * 37) * 1_000_000,
                             time_delta=1000.0)
+            elif mod == "ev44":
+                base.update(partition=k % 2, time_of_flight=list(range(m % 4)),
+                            pixel_ids=[m * 10 + j for j in range(m % 4)])
             rows.append(base)
             m += 1
     children = [
@@ -387,7 +390,7 @@ def test_grouped_path_equivalent_to_per_source(spark, tmp_path, modules_mix, mon
     def run_with(path_name, force_per_source):
         if force_per_source:
             monkeypatch.setattr(M, "group_streams",
-                                lambda streams: ({}, list(streams)))
+                                lambda streams: [[b] for b in streams])
             monkeypatch.setattr(R, "group_streams", M.group_streams)
         else:
             monkeypatch.undo()
@@ -703,11 +706,11 @@ def test_zero_message_job_reports_zero_metrics(spark, tmp_path):
 # each with its AQE stage jobs. Per-bank ev44 writes with a global
 # ``orderBy`` range sort issued 29; raise this only with a reason.
 MAX_JOBS_2_BANKS_3_PVS = 19
-# py4j calls the driver makes for the same job (1462 measured; object
+# py4j calls the driver makes for the same job (1382 measured; object
 # deletes, which follow the garbage collector, are not counted). With
 # PySpark's per-expression origin capture on and one ev44 pipeline per
-# bank it made 4050.
-MAX_PY4J_2_BANKS_3_PVS = 1500
+# bank it made 4050; with ep01/al00 code maps built from F.lit pairs, 1462.
+MAX_PY4J_2_BANKS_3_PVS = 1382
 
 
 def _guard_job(spark, tmp_path, banks: list[str], group: str):
@@ -772,14 +775,15 @@ def test_run_job_decodes_once_and_bounds_spark_jobs(spark, tmp_path):
 def test_run_job_driver_work_independent_of_bank_count(spark, tmp_path):
     """ev44 banks without a cue run as one grouped pass per dataset, and
     their source list and index bases ride as one SQL literal each, so a
-    16-bank job issues exactly as many Spark jobs and py4j round trips as
-    a 2-bank one."""
+    1-bank and a 16-bank job issue exactly as many Spark jobs and py4j
+    round trips as a 2-bank one."""
+    _, jobs1, py4j1 = _guard_job(spark, tmp_path, ["bank0"], "test-banks-1")
     _, jobs2, py4j2 = _guard_job(spark, tmp_path, ["bank0", "bank1"], "test-banks-2")
     _, jobs16, py4j16 = _guard_job(
         spark, tmp_path, [f"bank{i}" for i in range(16)], "test-banks-16"
     )
-    assert 0 < len(jobs16) == len(jobs2), (len(jobs16), len(jobs2))
-    assert 0 < py4j16 == py4j2, (py4j16, py4j2)
+    assert 0 < len(jobs1) == len(jobs2) == len(jobs16), (len(jobs1), len(jobs2), len(jobs16))
+    assert 0 < py4j1 == py4j2 == py4j16, (py4j1, py4j2, py4j16)
 
 
 # ---------------------------------------------------------------------------
@@ -793,10 +797,10 @@ def test_run_job_driver_work_independent_of_bank_count(spark, tmp_path):
 MAX_JOBS_LIVE_BATCH_1_BANK_3_PVS = 9
 
 
-def test_process_batch_jobs_join_callers_job_group(spark, tmp_path):
-    """Every Spark job of one micro-batch, the concurrent dataset writes
-    included, runs in the caller's job group, so cancelling the group
-    reaches all of them; none runs outside a group."""
+def _live_batch_jobs(spark, tmp_path, banks: list[str], group: str):
+    """Run one ``process_batch`` of a live job over ``banks`` and 3 PVs in
+    job group ``group``; return the job and the group's Spark job ids
+    after checking no job of the batch ran outside a group."""
     from kafka_to_nexus_spark import fbs
     from kafka_to_nexus_spark.streaming.job import StreamingJob
 
@@ -804,21 +808,20 @@ def test_process_batch_jobs_join_callers_job_group(spark, tmp_path):
     items = []
     for k in range(20):
         ms = 10_050 + 20 * k
-        items.append(_ev44_item("bank0", k % 2, ms, k % 4, k))
+        items += [_ev44_item(b, (k + i) % 2, ms, k % 4, k) for i, b in enumerate(banks)]
         items += [{"schema": "f144", "topic": "motion", "partition": 0,
                    "source_name": pv, "timestamp": ms, "value": float(k)} for pv in pvs]
-    start = StartMessage(job_id="live-group", filename="f",
-                         nexus_structure=_structure(pvs, ["bank0"]),
+    start = StartMessage(job_id=group, filename="f",
+                         nexus_structure=_structure(pvs, banks),
                          start_time_ms=10_100, stop_time_ms=11_000)
     envelope = fbs.decode_kafka_flatbuffers(_binary_kafka_df(spark, items))
-    job = StreamingJob(spark, start, str(tmp_path / "live"))
+    job = StreamingJob(spark, start, str(tmp_path / group))
 
     sc = spark.sparkContext
     tracker = sc.statusTracker()
     bus = sc._jsc.sc().listenerBus()
     bus.waitUntilEmpty()
     ungrouped = set(tracker.getJobIdsForGroup(None))
-    group = "test-live-batch-group"
     sc.setJobGroup(group, "live batch job-group guard")
     try:
         job.process_batch(envelope, 0)
@@ -826,10 +829,26 @@ def test_process_batch_jobs_join_callers_job_group(spark, tmp_path):
         sc.setLocalProperty("spark.jobGroup.id", None)
         sc.setLocalProperty("spark.job.description", None)
     bus.waitUntilEmpty()
-    assert job.state.events_written[("ev44", "bank0")] > 0
     assert set(tracker.getJobIdsForGroup(None)) == ungrouped
-    jobs = tracker.getJobIdsForGroup(group)
+    return job, tracker.getJobIdsForGroup(group)
+
+
+def test_process_batch_jobs_join_callers_job_group(spark, tmp_path):
+    """Every Spark job of one micro-batch, the concurrent dataset writes
+    included, runs in the caller's job group, so cancelling the group
+    reaches all of them; none runs outside a group."""
+    job, jobs = _live_batch_jobs(spark, tmp_path, ["bank0"], "test-live-batch-group")
+    assert job.state.events_written[("ev44", "bank0")] > 0
     assert 0 < len(jobs) <= MAX_JOBS_LIVE_BATCH_1_BANK_3_PVS, len(jobs)
+
+
+def test_process_batch_jobs_independent_of_bank_count(spark, tmp_path):
+    """The live twin of the batch bank-count check: a micro-batch of a
+    1-bank job runs as many Spark jobs as one of a 2-bank job, since
+    both write their banks as one group per dataset."""
+    _, jobs1 = _live_batch_jobs(spark, tmp_path, ["bank0"], "test-live-banks-1")
+    _, jobs2 = _live_batch_jobs(spark, tmp_path, ["bank0", "bank1"], "test-live-banks-2")
+    assert 0 < len(jobs1) == len(jobs2), (len(jobs1), len(jobs2))
 
 
 def test_live_grouped_ev44_matches_batch_job(spark, tmp_path):
@@ -969,3 +988,108 @@ def test_batch_and_live_job_metadata_match(spark, tmp_path):
     assert json.loads(json.dumps(mv, default=str)) == batch_meta["metadata_values"]
     for key in ("metadata_values", "group_attributes", "job"):
         assert batch_meta[key] == live_meta[key], key
+
+
+def test_unshareable_bindings_stage_alike_batch_and_live(spark, tmp_path):
+    """Bindings that never share a source group (a cue interval, da00
+    statics, ad00, the ``test`` no-op module and one f144 source bound at
+    two paths) stage the same rows per dataset and publish the same
+    metadata values from ``run_job`` and from a live job of two
+    micro-batches plus ``finalize``. The f144 cue equals ``cue_table``
+    over the time-indexed staged log, and the ev44 cue equals the
+    reference threshold loop (``ev44._emit_cues``) over the input."""
+    import pandas as pd
+    from pyspark.sql import functions as F
+
+    from kafka_to_nexus_spark.functions import cue_table, with_row_index
+    from kafka_to_nexus_spark.modules import ev44 as ev44_mod
+    from kafka_to_nexus_spark.sources.fixtures import messages_from_json
+    from kafka_to_nexus_spark.streaming.job import StreamingJob
+
+    def binding(name, module, source, **cfg):
+        return {"type": "group", "name": name, "children": [
+            {"module": module, "config": {"topic": "t", "source": source, **cfg}}]}
+
+    structure = {"children": [{"type": "group", "name": "entry", "children": [
+        binding("pv_cue", "f144", "pv_cue", cue_interval=3),
+        binding("bank_cue", "ev44", "bank_cue", cue_interval=7),
+        binding("cam", "ad00", "cam"),
+        binding("hist", "da00", "hist", variables=[{"name": "signal"}],
+                constants=[{"name": "edges"}]),
+        binding("tpl", "test", "tpl"),
+        binding("dup1", "f144", "pv_dup"),
+        binding("dup2", "f144", "pv_dup"),
+    ]}]}
+    msgs = []
+    for k in range(12):
+        ms = 10_100 + 100 * k
+        msgs.append({"schema": "f144", "source_name": "pv_cue", "timestamp": ms,
+                     "value": float(k)})
+        msgs.append({"schema": "f144", "source_name": "pv_dup", "timestamp": ms,
+                     "value": float(100 + k)})
+        n = (k * 5) % 4 + 1 if k % 5 else 0  # some messages carry no events
+        msgs.append({"schema": "ev44", "source_name": "bank_cue", "timestamp": ms,
+                     "reference_time": [ms], "reference_time_index": [0],
+                     "time_of_flight": [10 * k + j for j in range(n)],
+                     "pixel_ids": [100 * k + j for j in range(n)]})
+        if k % 3 == 0:
+            msgs.append({"schema": "ad00", "source_name": "cam", "timestamp": ms,
+                         "data": [[k, k + 1], [k + 2, k + 3]]})
+            msgs.append({"schema": "da00", "source_name": "hist", "timestamp": ms,
+                         "variables": [
+                             {"name": "signal", "unit": "counts", "axes": ["x"],
+                              "shape": [2], "data": [float(k), float(k + 1)]},
+                             {"name": "edges", "unit": "mm", "axes": ["x"],
+                              "shape": [3], "data": [float(k), k + 0.5, k + 1.0]},
+                         ]})
+    for off, m in enumerate(msgs):
+        m.update(topic="t", partition=0, offset=off, kafka_timestamp=m["timestamp"])
+    start = StartMessage(job_id="one-member", filename="f", nexus_structure=structure,
+                         start_time_ms=10_000, stop_time_ms=20_000)
+
+    envelope = messages_from_json(spark, msgs)
+    res = run_job(spark, start, envelope, str(tmp_path / "batch"))
+    split = 10_700 * 10**6
+    live = StreamingJob(spark, start, str(tmp_path / "live"))
+    live.process_batch(envelope.filter(F.col("timestamp") < split), 0)
+    live.process_batch(envelope.filter(F.col("timestamp") >= split), 1)
+    live.finalize()
+
+    def staged(out_dir) -> dict:
+        got = {}
+        for ds in sorted((tmp_path / out_dir / "data").glob("*/*")):
+            df = spark.read.parquet(str(ds)).drop(*staging.BATCH_ORDER_COLS)
+            got[f"{ds.parent.name}/{ds.name}"] = sorted(
+                tuple(r) for r in df.select(sorted(df.columns)).collect()
+            )
+        return got
+
+    want, got = staged("batch"), staged("live")
+    assert want.keys() == got.keys()
+    assert not any(k.startswith("entry__tpl/") for k in want)
+    for key in want:
+        assert got[key] == want[key], key
+    assert {"entry__dup1/log", "entry__dup2/log", "entry__cam/frames",
+            "entry__hist/frames", "entry__pv_cue/cue", "entry__bank_cue/cue"} <= want.keys()
+    assert want["entry__dup1/log"] == want["entry__dup2/log"]
+    assert len(want["entry__dup1/log"]) == 12
+    live_values = staging.read_meta(live.out_dir)["metadata_values"]
+    assert json.loads(json.dumps(res.metadata_values, default=str)) == live_values
+    assert res.metadata_values["/entry/hist/edges"] == [0.0, 0.5, 1.0]
+    assert res.metadata_values["/entry/dup2/minimum_value"] == 100.0
+
+    log = spark.read.parquet(str(staging.dataset_dir(res.out_dir, "entry/pv_cue", "log")))
+    f144_cue = cue_table(with_row_index(log, order_cols=("time",)), 3)
+    assert want["entry__pv_cue/cue"] == sorted(tuple(r) for r in f144_cue.collect())
+    assert len(want["entry__pv_cue/cue"]) == 4
+
+    ev = [m for m in msgs if m["schema"] == "ev44" and m["time_of_flight"]]
+    after = pd.Series([len(m["time_of_flight"]) for m in ev]).cumsum()
+    last_ts = [m["timestamp"] * 10**6 + m["time_of_flight"][-1] for m in ev]
+    ev44_cue = ev44_mod._emit_cues(
+        pd.DataFrame({"_events_after": after, "_last_event_ts": last_ts}), 7, -1
+    )
+    assert want["entry__bank_cue/cue"] == sorted(
+        (int(i), int(t)) for i, t in ev44_cue.itertuples(index=False)
+    )
+    assert len(want["entry__bank_cue/cue"]) >= 2

@@ -365,7 +365,7 @@ def test_grouped_finalize_aggregates_per_source(spark, tmp_path):
 
 
 def test_single_path_repeat_dedup_per_partition(spark, tmp_path):
-    """The per-binding path's cross-batch repeat filter keys its
+    """A one-member source group's cross-batch repeat filter keys its
     last-written map by partition: a lone f144 source's partition-1
     boundary repeat is dropped, while the same ts arriving first on
     partition 0 passes."""
