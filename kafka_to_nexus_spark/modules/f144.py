@@ -53,31 +53,30 @@ def transform(df: DataFrame, config: dict | None = None) -> dict[str, DataFrame]
 def aggregates(
     df: DataFrame, config: dict | None = None, group_key: str | None = None
 ) -> DataFrame:
-    """Running min/max/mean over written values → job-summary metadata (T6).
-    mean = sum/count exactly as the reference accumulates it
-    (f144_Writer.cpp:265-287). Partial aggregation (map-side combine) makes
-    this a near-free pass at scale. With ``group_key`` the SAME aggregate
-    runs once for a whole group of sources (one job collecting one tiny
-    row per source, instead of one job per source)."""
+    """The job summary (T6) as the mergeable partial ``runner.Summary``
+    folds and finishes: min, max, sum and count of the written values
+    (f144_Writer.cpp:265-287). Partial aggregation (map-side combine)
+    makes this a near-free pass at scale. With ``group_key`` the SAME
+    aggregate runs once for a whole group of sources (one job collecting
+    one tiny row per source, instead of one job per source)."""
     from pyspark.sql.types import ArrayType
 
     if isinstance(df.schema["value"].dataType, ArrayType):
-        # array PVs: min/max/mean over every ELEMENT written, matching the
-        # reference's per-message CValuesInfo accumulation over the whole
-        # array (f144_Writer.cpp:265-276)
+        # array PVs: over every ELEMENT written, matching the reference's
+        # per-message CValuesInfo accumulation over the whole array
+        # (f144_Writer.cpp:265-276)
         aggs = [
             F.min(F.array_min("value")).alias("minimum_value"),
             F.max(F.array_max("value")).alias("maximum_value"),
-            (
-                F.sum(F.aggregate("value", F.lit(0.0), lambda a, x: a + x))
-                / F.sum(F.size("value"))
-            ).alias("average_value"),
+            F.sum(F.aggregate("value", F.lit(0.0), lambda a, x: a + x)).alias("value_sum"),
+            F.sum(F.size("value")).alias("value_count"),
         ]
     else:
         aggs = [
             F.min("value").alias("minimum_value"),
             F.max("value").alias("maximum_value"),
-            (F.sum("value") / F.count("value")).alias("average_value"),
+            F.sum("value").alias("value_sum"),
+            F.count("value").alias("value_count"),
         ]
     if group_key is not None:
         return df.groupBy(group_key).agg(*aggs)

@@ -23,14 +23,14 @@ Structured Streaming trigger:
   is one source filter, one transform over a frame keyed by
   ``__source`` and one partitioned write per dataset.
 - Flat fan-out (``run_tasks``, shared with ``StreamingJob``): every
-  (group, dataset) write and every remaining T6 aggregate collect is its
-  own task on one thread pool, so the scheduler interleaves their stages;
-  tasks return their metadata values, and pool threads inherit the
-  caller's job group.
-- One job-output surface with the live path: the T6 aggregates
-  (``grouped_summary``) and the job metadata
-  (``job_metadata``) are computed here for both job paths, and the staged
-  dataset format (order table, stream keys) lives in ``sinks.staging``.
+  (group, dataset) write and every T6 summary collect is its own task
+  on one thread pool, so the scheduler interleaves their stages; tasks
+  return metadata values, and pool threads inherit the caller's job group.
+- One job-output surface with the live path: the T6 summary partials
+  (``grouped_summary``, finished by ``Summary.finish``) and the job
+  metadata (``job_metadata``) are computed here for both job paths, and
+  the staged dataset format (order table, stream keys) lives in
+  ``sinks.staging``.
 - All plan work is driver-side Python; all data movement is DataFrames;
   nothing in the data path collects to the driver. The stats rows and the
   job-summary aggregates (T6) are tiny per-source rows and are the only
@@ -39,10 +39,12 @@ Structured Streaming trigger:
 
 from __future__ import annotations
 
+import operator
 import time
 from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass, field
 from functools import partial
+from typing import NamedTuple
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -135,29 +137,53 @@ def _statics(module, df: DataFrame, config: dict | None, path: str) -> dict:
     return _prefixed(path, module.statics(df, config))
 
 
+class Summary(NamedTuple):
+    """One source's T6 summary as a mergeable partial: min, max, sum and
+    count of the values written, the reference's running accumulators
+    (f144_Writer.cpp:265-287). The empty partial finishes to None
+    min/max/mean."""
+
+    minimum_value: object = None
+    maximum_value: object = None
+    value_sum: object = None
+    value_count: int = 0
+
+    def merge(self, other: Summary) -> Summary:
+        def fold(fn, a, b):
+            return b if a is None else a if b is None else fn(a, b)
+
+        def nan_greatest(v):
+            return (v != v, v)  # Spark orders NaN above every number
+
+        return Summary(
+            fold(partial(min, key=nan_greatest), self.minimum_value, other.minimum_value),
+            fold(partial(max, key=nan_greatest), self.maximum_value, other.maximum_value),
+            fold(operator.add, self.value_sum, other.value_sum),
+            self.value_count + other.value_count,
+        )
+
+    def finish(self, path: str) -> dict:
+        """The binding's metadata values under ``path``; mean = sum/count."""
+        return _prefixed(path, {
+            "minimum_value": self.minimum_value,
+            "maximum_value": self.maximum_value,
+            "average_value": self.value_sum / self.value_count
+            if self.value_count and self.value_sum is not None else None,
+        })
+
+
 def grouped_summary(module, df: DataFrame, config: dict | None, group: list) -> dict:
-    """T6 aggregates of a whole source group in one grouped collect;
-    ``df`` carries the source name in ``__source``."""
+    """T6 partials of a whole source group in one grouped collect,
+    ``{binding path: Summary}``; ``df`` carries the source name in
+    ``__source``. groupBy drops zero-row sources, which get the empty
+    partial without a Spark job."""
     rows = module.aggregates(df, config, group_key="__source").collect()
-    by_source = {r["__source"]: r.asDict() for r in rows}
-    values: dict[str, object] = {}
-    # groupBy drops zero-row sources, but a source's T6 values always
-    # exist: emit the global aggregate of no rows (None min/max, 0
-    # counts), computed once from an empty slice and shared by every
-    # empty source.
-    empty_row: dict[str, object] | None = None
-    for b in group:
-        got = by_source.get(b.source)
-        if got is None:
-            if empty_row is None:
-                empty_row = module.aggregates(df.limit(0), config).collect()[0].asDict()
-            got = empty_row
-        values.update(_prefixed(b.path, {k: v for k, v in got.items() if k != "__source"}))
-    return values
+    by_source = {r["__source"]: Summary(*(r[f] for f in Summary._fields)) for r in rows}
+    return {b.path: by_source.get(b.source, Summary()) for b in group}
 
 
 def has_summary(module_id: str, config: dict | None) -> bool:
-    """Whether a binding gets T6 aggregates: ``"meta_data": false``
+    """Whether a binding gets a T6 summary: ``"meta_data": false``
     suppresses them (f144_Writer.cpp:264,282), and ev44's one value,
     ``events``, comes from the stats action (``job_metadata``)."""
     return (
@@ -185,12 +211,12 @@ def _plan_tasks(
     event_counts: dict[tuple[str, str], dict[int, int]],
 ) -> tuple[list, dict[str, list[str]]]:
     """Build the job's fan-out on the driver: one task per (source group,
-    dataset) write and per T6 aggregate or statics collect. Returns the
+    dataset) write and per T6 summary or statics collect. Returns the
     tasks and the datasets staged per stream.
 
     Every binding runs in a source group (modules.group_streams): one
     filter + transform + partitionBy write per dataset and one grouped
-    aggregate job per group, however many sources it holds, so the plan
+    summary job per group, however many sources it holds, so the plan
     is O(groups) per job regardless of source count."""
     tasks: list = []
     stream_outputs: dict[str, list[str]] = {}
@@ -288,7 +314,8 @@ def run_job(
     job_info, metadata_values, group_attrs = job_metadata(
         start, plan, {k: sum(c.values()) for k, c in event_counts.items()}
     )
-    metadata_values.update(fanned)
+    for key, got in fanned.items():  # a summary partial is keyed by its path
+        metadata_values.update(got.finish(key) if isinstance(got, Summary) else {key: got})
     staging.write_meta(
         out_dir, plan, job_info, stream_outputs, metadata_values,
         extra_group_attributes=group_attrs,

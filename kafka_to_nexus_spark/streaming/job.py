@@ -13,20 +13,23 @@ Shape:
   output surface: the ``operators.stats`` scan action, one source filter
   and module transform per source group (``modules.group_streams``; a
   group may have one member), the write fan-out (``runner.run_tasks``),
-  the T6 aggregates (``runner.grouped_summary``, here over the staged
-  logs at finalize), the job metadata (``runner.job_metadata``) and the
+  the T6 summary partials (``runner.grouped_summary``, one more task of
+  each batch's fan-out), the job metadata (``runner.job_metadata``) and the
   staged-dataset format (``sinks.staging``). What stays live-only is what
   differs in meaning, all of it inside the same group loop and keyed per
   member: the cross-batch F4 repeat carry, the ev44 cue carry and the cue
   derived from the staged log at finalize, first-message statics,
-  batch-keyed idempotent overwrite, and the two pieces of genuinely
-  cross-batch state the reference keeps (SURVEY.md §7 "hard parts"):
+  batch-keyed idempotent overwrite, and the genuinely cross-batch state
+  the reference keeps (SURVEY.md §7 "hard parts"):
     * F3 as-of buffer — latest pre-start message per source, emitted when
       the first in-window message arrives or at stop
       (src/Stream/SourceFilter.cpp:61-66);
     * W2 cumulative event index — events written so far per source
-      (src/WriterModule/ev44/ev44_Writer.cpp:107-117).
-  Both are tiny (one row / one counter per source) and live on the driver,
+      (src/WriterModule/ev44/ev44_Writer.cpp:107-117);
+    * T6 running summary — min/max/sum/count per source, each batch's
+      partials folded in, so finalize never re-reads the staged logs
+      (src/WriterModule/f144/f144_Writer.cpp:265-287).
+  All are tiny (a row or a few numbers per source) and live on the driver,
   exactly like the reference's single-writer state; everything bulky stays
   distributed.
 - stop: driver watchdog ends the query once a batch shows event times past
@@ -41,8 +44,8 @@ config assembly, exercised wherever a broker exists.
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field
-from functools import partial, reduce
+from dataclasses import dataclass, field, fields
+from functools import partial
 from pathlib import Path
 
 from pyspark.sql import DataFrame, Row, SparkSession, Window
@@ -53,7 +56,7 @@ from ..modules import accepts_repeated_timestamps, ev44, get_module, group_strea
 from ..operators import filters, quality, stats
 from ..plan import Plan, StartMessage, build_plan
 from ..plan.model import MS_TO_NS
-from ..runner import grouped_summary, has_summary, job_metadata, run_tasks, source_keyed
+from ..runner import Summary, grouped_summary, has_summary, job_metadata, run_tasks, source_keyed
 from ..schemas import MESSAGE_SCHEMA
 from ..sinks import staging
 
@@ -206,26 +209,33 @@ def _drop_cross_batch_repeats(src: DataFrame, lasts: dict) -> DataFrame:
 
 @dataclass
 class StreamingJobState:
-    """The only cross-batch state the reference keeps, one entry per source:
-    the buffered pre-start message and the cumulative event count."""
+    """The cross-batch state the reference keeps, per source: the buffered
+    pre-start message, the cumulative event count, the repeat and cue
+    carries and the running f144 accumulators.
+
+    Upgrade note: a state file written before ``summary_by_path`` existed
+    has no summaries for its staged batches, so loading one with
+    ``batches_processed > 0`` raises rather than finalize wrong
+    min/max/mean values; rerun such a job into a fresh output directory."""
 
     asof_buffer: dict[tuple[str, str], Row] = field(default_factory=dict)
     asof_emitted: set = field(default_factory=set)
     events_written: dict[tuple[str, str], int] = field(default_factory=dict)
     # K4 ev44 cue state: LastCueIndex per source (ev44_Writer.h:51)
     cue_last: dict[tuple[str, str], int] = field(default_factory=dict)
-    # F4 across micro-batches: ts of the last row written per dedup'ing
-    # source — the reference's SourceFilter keeps this across polls
-    # (SourceFilter.cpp:90-95), so a repeat straddling a batch boundary
-    # must still be dropped.
-    # F4 carry across batches, keyed (module, source, partition) — the
-    # reference keeps one SourceFilter (and so one repeated-ts state) per
-    # (source, partition)
+    # F4 carry across micro-batches: ts of the last row written per
+    # (module, source, partition) — the reference keeps one SourceFilter,
+    # and so one repeated-ts state, per (source, partition) across polls
+    # (SourceFilter.cpp:90-95): a repeat straddling a batch boundary must
+    # still be dropped
     last_written_ts: dict[tuple[str, str, int], int] = field(default_factory=dict)
     # W5 da00 first-message constants: batch mode folds them inside
     # run_job; streaming captures them on the source's first present batch
     # (path → {dataset: value}; {} marks a done, constant-free binding)
     statics_by_path: dict[str, dict] = field(default_factory=dict)
+    # T6 running accumulators (f144_Writer.cpp:265-287): the folded
+    # runner.Summary partial per binding path, finished at finalize
+    summary_by_path: dict[str, Summary] = field(default_factory=dict)
     batches_processed: int = 0
     # highest Spark batch_id fully processed AND state-saved — replays of
     # completed batches (restart between state save and checkpoint commit)
@@ -238,6 +248,8 @@ class StreamingJobState:
 
 
 STATE_FILE = "_stream_state.json"
+# state maps keyed by tuples, stored as [key, value] pairs
+_TUPLE_KEYED = ("asof_buffer", "events_written", "cue_last", "last_written_ts")
 
 
 def _save_job_state(state: StreamingJobState, out_dir: str) -> None:
@@ -248,22 +260,14 @@ def _save_job_state(state: StreamingJobState, out_dir: str) -> None:
     import json as _json
     import os as _os
 
-    def buf_dict(row) -> dict:
-        return row if isinstance(row, dict) else row.asDict(recursive=True)
-
-    payload = {
-        "asof_buffer": [[list(k), buf_dict(v)] for k, v in state.asof_buffer.items()],
-        "asof_emitted": [list(k) for k in state.asof_emitted],
-        "events_written": [[list(k), v] for k, v in state.events_written.items()],
-        "cue_last": [[list(k), v] for k, v in state.cue_last.items()],
-        "last_written_ts": [[list(k), v] for k, v in state.last_written_ts.items()],
-        "statics_by_path": state.statics_by_path,
-        "batches_processed": state.batches_processed,
-        "last_spark_batch_id": state.last_spark_batch_id,
-        "max_event_time_ns": state.max_event_time_ns,
-        "finished": state.finished,
-        "metrics": state.metrics,
+    payload = {f.name: getattr(state, f.name) for f in fields(state)}
+    payload["asof_buffer"] = {
+        k: row if isinstance(row, dict) else row.asDict(recursive=True)
+        for k, row in state.asof_buffer.items()
     }
+    for name in _TUPLE_KEYED:
+        payload[name] = [[list(k), v] for k, v in payload[name].items()]
+    payload["asof_emitted"] = [list(k) for k in state.asof_emitted]
     target = Path(out_dir) / STATE_FILE
     # a batch with no in-window rows schedules no write job, so the state
     # save may be the first thing to touch the output directory
@@ -280,27 +284,20 @@ def _load_job_state(out_dir: str) -> StreamingJobState | None:
     if not path.exists():
         return None
     raw = _json.loads(path.read_text())
-    st = StreamingJobState()
-    st.asof_buffer = {tuple(k): v for k, v in raw["asof_buffer"]}
-    st.asof_emitted = {tuple(k) for k in raw["asof_emitted"]}
-    st.events_written = {tuple(k): v for k, v in raw["events_written"]}
-    st.cue_last = {tuple(k): v for k, v in raw.get("cue_last", [])}
-    # pre-partition-keyed state files carried (module, source) 2-tuples;
-    # map them to partition 0 so a restart on newer code loads instead of
-    # crashing on unpack. For the common one-partition-per-source layout
-    # partition 0 is exact; a multi-partition source under the OLD format
-    # had a single (already partition-ambiguous) carry value anyway.
-    st.last_written_ts = {
-        (tuple(k) if len(k) == 3 else (k[0], k[1], 0)): v
-        for k, v in raw["last_written_ts"]
+    if "summary_by_path" not in raw and raw["batches_processed"] > 0:
+        raise ValueError(
+            f"{path} has no 'summary_by_path': it predates the running f144 "
+            "summaries, so its staged batches have none to resume; rerun the "
+            "job into a fresh output directory"
+        )
+    for name in _TUPLE_KEYED:
+        raw[name] = {tuple(k): v for k, v in raw.get(name, [])}
+    raw["asof_emitted"] = {tuple(k) for k in raw["asof_emitted"]}
+    raw["summary_by_path"] = {
+        p: Summary(*v) for p, v in raw.get("summary_by_path", {}).items()
     }
-    st.statics_by_path = raw.get("statics_by_path", {})
-    st.batches_processed = raw["batches_processed"]
-    st.last_spark_batch_id = raw.get("last_spark_batch_id", -1)
-    st.max_event_time_ns = raw["max_event_time_ns"]
-    st.finished = raw["finished"]
-    st.metrics.update(raw["metrics"])
-    return st
+    raw["metrics"] = {**quality.ZERO_METRICS, **raw["metrics"]}
+    return StreamingJobState(**raw)
 
 
 class StreamingJob:
@@ -433,12 +430,12 @@ class StreamingJob:
             # so do the event counts the ev44 index bases come from.
             wrote = self._write_streams(
                 in_window,
+                present,
                 tails={
                     (r["schema"], r["source_name"], r["partition"]): r["tail_ts"]
                     for r in scan
                 },
                 event_counts=stats.event_counts(scan),
-                present=present,
             )
 
             # stop watchdog against the folded max event time (F6/F7)
@@ -494,16 +491,16 @@ class StreamingJob:
     def _write_streams(
         self,
         windowed: DataFrame,
+        present: set[tuple[str, str]],
         tails: dict[tuple[str, str, int], int | None] | None = None,
         event_counts: dict[tuple[str, str], dict[int, int]] | None = None,
-        present: set[tuple[str, str]] | None = None,
     ) -> bool:
-        """``present`` (from the stats action) lists the sources with
-        in-window rows this batch; bindings outside it keep their lazy
-        plan-building and dataset registration (finalize's backfill relies
-        on the registry) but skip the staging-write job — an idle source
-        costs zero Spark jobs per batch. ``None`` = write everything (the
-        finalize buffered-flush path)."""
+        """``present`` lists the ``(module, source)`` keys with rows in
+        ``windowed`` (from the stats action, or finalize's buffered
+        flush); bindings outside it keep their lazy plan-building and
+        dataset registration (finalize's backfill relies on the registry)
+        but skip the staging-write and summary jobs — an idle source costs
+        zero Spark jobs per batch."""
         st = self.state
         batch_seq = st.batches_processed
         tails = tails or {}
@@ -520,11 +517,7 @@ class StreamingJob:
             config = group[0].config
             sources = [b.source for b in group]
             group_sources = set(sources)
-            members = (
-                group
-                if present is None
-                else [b for b in group if (module_id, b.source) in present]
-            )
+            members = [b for b in group if (module_id, b.source) in present]
             src = filters.source_filter_many(
                 windowed, module_id, [b.source for b in (members or group)]
             )
@@ -577,6 +570,10 @@ class StreamingJob:
             # write only the sources with data this batch; absent members'
             # dirs come from earlier batches or finalize's backfill
             path_by_source = {b.source: b.path for b in members}
+            if members and has_summary(module_id, config):
+                tasks.append(partial(
+                    grouped_summary, module, outputs.get("log", keyed), config, members
+                ))
             for dataset, df in outputs.items():
                 if members:
                     tasks.append(partial(
@@ -589,10 +586,14 @@ class StreamingJob:
                     if dataset not in written:
                         written.append(dataset)
 
-        # One write per (group, dataset), all independent Spark jobs over
-        # the same persisted batch, on the job's shared fan-out. State
-        # mutation stayed above, on one thread.
-        run_tasks(self.spark, tasks)
+        # One write per (group, dataset) and one summary per group, all
+        # independent Spark jobs over the same persisted batch, on the
+        # job's shared fan-out. State mutation stayed on this thread: above,
+        # and the summary partials below, folded only once every write of
+        # the batch has landed.
+        partials = run_tasks(self.spark, tasks)
+        for path, got in partials.items():
+            st.summary_by_path[path] = st.summary_by_path.get(path, Summary()).merge(got)
         return bool(tasks)  # did this batch stage anything new?
 
     def _capture_statics(self, module, binding, src: DataFrame) -> None:
@@ -648,7 +649,7 @@ class StreamingJob:
         """Metadata shared by live snapshots and finalize: the job
         metadata batch and live jobs publish (``runner.job_metadata``, with the
         cumulative ev44 event counters) plus the first-message statics.
-        The finalize-only surface (cue derivation, T6 aggregates,
+        The finalize-only surface (cue derivation, T6 finishing,
         empty-dataset backfill) stays in finalize() — a snapshot must not
         mutate job state."""
         job_info, metadata_values, group_attrs = job_metadata(
@@ -748,14 +749,14 @@ class StreamingJob:
     def finalize(self) -> None:
         """At stop: emit still-unconsumed buffered rows (SourceFilter
         flushes its buffer at finish, SourceFilter.cpp:53,61-66), derive
-        cumulative cue tables from the staged logs, and write the
-        hierarchical metadata so a staged streaming directory packs exactly
-        like a batch one."""
+        cumulative cue tables from the staged logs, finish the running T6
+        summaries, and write the hierarchical metadata so a staged
+        streaming directory packs exactly like a batch one."""
         st = self.state
         remaining = set(st.asof_buffer) - st.asof_emitted
         buffered = self._buffered_df(remaining)
         if buffered is not None:
-            self._write_streams(buffered, present=remaining)
+            self._write_streams(buffered, remaining)
             st.asof_emitted.update(remaining)
 
         # Grouped writes emit no partition dir for a source with zero rows
@@ -788,7 +789,6 @@ class StreamingJob:
         # shared-with-snapshot surface (group attrs, statics, ev44 event
         # counters, mdat) + the finalize-only additions below
         job_info, metadata_values, group_attrs = self._meta_base()
-        agg_bindings: list = []
         for binding in self.plan.streams:
             written = self._written_datasets.get(staging.stream_key(binding), [])
             # K4: cumulative cue from the staged log in staging order
@@ -813,33 +813,10 @@ class StreamingJob:
                 )
                 if "cue" not in written:
                     written.append("cue")
-            # T6 job-summary aggregates from staged output
+            # T6: finish the running partial the batches folded
             if "log" in written and has_summary(binding.module, binding.config):
-                agg_bindings.append(binding)
-
-        # T6 aggregates over staged logs, with the batch runner's helpers:
-        # same-module same-shape bindings union their (tiny, already-
-        # reduced) staged logs and run ONE grouped aggregate job, instead
-        # of one read+aggregate+collect job per stream — O(module-groups)
-        # finalize jobs at 1000 sources.
-        def staged_log(b, schema=None) -> DataFrame:
-            reader = self.spark.read if schema is None else self.spark.read.schema(schema)
-            return reader.parquet(str(staging.dataset_dir(self.out_dir, b.path, "log")))
-
-        tasks = []
-        for group in group_streams(agg_bindings):
-            # one module and config shape, so one staged schema: infer it
-            # once (a footer read per log) and hand it to the other reads
-            first = staged_log(group[0])
-            log = reduce(DataFrame.unionByName, [
-                (first if b is group[0] else staged_log(b, first.schema))
-                .withColumn("__source", F.lit(b.source))
-                for b in group
-            ])
-            tasks.append(partial(
-                grouped_summary, get_module(group[0].module), log, group[0].config, group
-            ))
-        metadata_values.update(run_tasks(self.spark, tasks))
+                summary = st.summary_by_path.get(binding.path, Summary())
+                metadata_values.update(summary.finish(binding.path))
 
         staging.write_meta(
             self.out_dir, self.plan, job_info, self._written_datasets,

@@ -21,6 +21,7 @@ from kafka_to_nexus_spark.modules import (
     tdct,
 )
 from kafka_to_nexus_spark.operators import filters
+from kafka_to_nexus_spark.runner import Summary
 from kafka_to_nexus_spark.sources.fixtures import messages_from_file, messages_from_json
 
 NS = 1_000_000
@@ -45,10 +46,10 @@ def test_f144_golden(spark, writer_modules_df):
     rows = sorted(out.collect(), key=lambda r: r.time)
     assert [r.value for r in rows] == [10.0, 15.0]
     assert [r.time for r in rows] == [10_100_000_000, 10_110_000_000]
-    agg = f144.aggregates(out).collect()[0]
-    assert agg.minimum_value == 10.0
-    assert agg.maximum_value == 15.0
-    assert agg.average_value == 12.5
+    agg = Summary(*f144.aggregates(out).collect()[0]).finish("pv")
+    assert agg["pv/minimum_value"] == 10.0
+    assert agg["pv/maximum_value"] == 15.0
+    assert agg["pv/average_value"] == 12.5
 
 
 def test_f144_dtype_cast(spark):

@@ -363,10 +363,12 @@ def test_grouped_path_equivalent_to_per_source(spark, tmp_path, modules_mix, mon
             if mod == "f144":
                 base["value"] = float(m)
             elif mod == "al00":
-                base.update(severity=["OK", "MINOR", "MAJOR"][m % 3],
+                base.update(severity=["Severity::OK", "Severity::MINOR",
+                                      "Severity::MAJOR"][m % 3],
                             message=f"msg{m}" if m % 2 else "")
             elif mod == "ep01":
-                base["connection_status"] = ["CONNECTED", "DISCONNECTED"][m % 2]
+                base["connection_status"] = ["ConnectionInfo::CONNECTED",
+                                             "ConnectionInfo::DISCONNECTED"][m % 2]
             elif mod == "se00":
                 base.update(values=[float(m), float(m + 1)],
                             packet_timestamp=(10_000 + m * 37) * 1_000_000,
@@ -533,6 +535,34 @@ def test_f144_array_pv_staged_and_aggregated(spark, tmp_path):
     with hdf5lib.File(str(hdf), "r") as f:
         arr = f["/entry/wave/value"][:]
         assert arr.shape == (2, 3) and arr[1][2] == 9.0
+
+
+def test_summary_merge_matches_one_spark_aggregate(spark):
+    """Folding per-chunk T6 partials with ``Summary.merge`` gives the
+    partial Spark computes over all the rows at once, NaN included:
+    Spark orders NaN above every number, so it wins max and loses min."""
+    from kafka_to_nexus_spark.modules import f144
+    from kafka_to_nexus_spark.runner import Summary
+
+    nan = float("nan")
+    chunks = [[3.0, -1.0], [nan], [7.5, nan, 2.0], []]
+
+    def partial_of(values):
+        df = spark.createDataFrame([(v,) for v in values], "value double")
+        return Summary(*f144.aggregates(df).collect()[0])
+
+    merged = Summary()
+    for chunk in chunks:
+        merged = merged.merge(partial_of(chunk))
+    whole = partial_of([v for chunk in chunks for v in chunk])
+    assert merged.minimum_value == whole.minimum_value == -1.0
+    assert whole.maximum_value != whole.maximum_value  # NaN
+    assert merged.maximum_value != merged.maximum_value
+    assert merged.value_count == whole.value_count == 6
+    assert merged.value_sum != merged.value_sum and whole.value_sum != whole.value_sum
+    assert Summary().merge(Summary()).finish("p") == {
+        "p/minimum_value": None, "p/maximum_value": None, "p/average_value": None,
+    }
 
 
 def test_grouped_path_packs_monotone_time_across_partitions(spark, tmp_path):
@@ -706,11 +736,12 @@ def test_zero_message_job_reports_zero_metrics(spark, tmp_path):
 # each with its AQE stage jobs. Per-bank ev44 writes with a global
 # ``orderBy`` range sort issued 29; raise this only with a reason.
 MAX_JOBS_2_BANKS_3_PVS = 19
-# py4j calls the driver makes for the same job (1382 measured; object
+# py4j calls the driver makes for the same job (1138 measured; object
 # deletes, which follow the garbage collector, are not counted). With
 # PySpark's per-expression origin capture on and one ev44 pipeline per
-# bank it made 4050; with ep01/al00 code maps built from F.lit pairs, 1462.
-MAX_PY4J_2_BANKS_3_PVS = 1382
+# bank it made 4050; with ep01/al00 code maps built from F.lit pairs, 1462;
+# with the stats action's aggregates built column by column, 1382.
+MAX_PY4J_2_BANKS_3_PVS = 1138
 
 
 def _guard_job(spark, tmp_path, banks: list[str], group: str):
@@ -792,9 +823,15 @@ def test_run_job_driver_work_independent_of_bank_count(spark, tmp_path):
 
 # Spark jobs one process_batch of a 1-bank + 3-PV live job runs (local[4],
 # 4 shuffle partitions, AQE on): the stats collect, the grouped f144 log
-# write and the 2 ev44 writes, each with its AQE stage jobs. Raise this
-# only with a reason.
-MAX_JOBS_LIVE_BATCH_1_BANK_3_PVS = 9
+# write, the 2 ev44 writes and the grouped f144 summary collect, each with
+# its AQE stage jobs. Raise this only with a reason. It was 9 before the
+# T6 summary moved from finalize into each batch: the summary's collect
+# and its 2 stage jobs add 3.
+MAX_JOBS_LIVE_BATCH_1_BANK_3_PVS = 12
+# Spark jobs finalize runs for such a job with no cue and no pending
+# buffered row: it finishes the summaries the batches folded, backfills
+# empty datasets driver-side and writes the metadata, all without Spark.
+MAX_JOBS_LIVE_FINALIZE = 0
 
 
 def _live_batch_jobs(spark, tmp_path, banks: list[str], group: str):
@@ -840,6 +877,33 @@ def test_process_batch_jobs_join_callers_job_group(spark, tmp_path):
     job, jobs = _live_batch_jobs(spark, tmp_path, ["bank0"], "test-live-batch-group")
     assert job.state.events_written[("ev44", "bank0")] > 0
     assert 0 < len(jobs) <= MAX_JOBS_LIVE_BATCH_1_BANK_3_PVS, len(jobs)
+
+
+def test_live_finalize_runs_no_spark_job(spark, tmp_path):
+    """Stop-to-file of a live job without a cue or a pending buffered row
+    submits at most MAX_JOBS_LIVE_FINALIZE Spark jobs, in its job group
+    or outside it: the T6 values come from the summary partials each
+    batch folded, not from the staged logs."""
+    job, _ = _live_batch_jobs(spark, tmp_path, ["bank0"], "test-live-finalize-batch")
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    bus = sc._jsc.sc().listenerBus()
+    bus.waitUntilEmpty()
+    ungrouped = set(tracker.getJobIdsForGroup(None))
+    sc.setJobGroup("test-live-finalize", "live finalize guard")
+    try:
+        job.finalize()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    bus.waitUntilEmpty()
+    jobs = set(tracker.getJobIdsForGroup("test-live-finalize"))
+    jobs |= set(tracker.getJobIdsForGroup(None)) - ungrouped
+    assert len(jobs) <= MAX_JOBS_LIVE_FINALIZE, sorted(jobs)
+    vals = staging.read_meta(job.out_dir)["metadata_values"]
+    # the buffered pre-start row (k=2) opens each log
+    assert vals["/entry/pv0/minimum_value"] == 2.0
+    assert vals["/entry/pv0/maximum_value"] == 19.0
 
 
 def test_process_batch_jobs_independent_of_bank_count(spark, tmp_path):

@@ -329,9 +329,9 @@ def test_grouped_path_repeat_dedup_per_partition(spark, tmp_path):
 
 
 def test_grouped_finalize_aggregates_per_source(spark, tmp_path):
-    """finalize's grouped T6 aggregate reads every staged log of a group
-    with the first log's schema: each source still gets the min, max and
-    mean of its own rows across batches."""
+    """Each batch folds one grouped T6 partial per source into the job
+    state and finalize finishes them: each source still gets the min, max
+    and mean of its own rows across batches."""
     structure = {"children": [{
         "name": "entry", "type": "group",
         "children": [
@@ -362,6 +362,152 @@ def test_grouped_finalize_aggregates_per_source(spark, tmp_path):
         assert vals[f"/entry/{src}/minimum_value"] == lo
         assert vals[f"/entry/{src}/maximum_value"] == hi
         assert vals[f"/entry/{src}/average_value"] == pytest.approx(mean)
+
+
+def _summary_job_start(job_id: str) -> StartMessage:
+    """Two scalar PVs and one that never sends (one source group), and an
+    array PV of three elements."""
+    children = [
+        {"name": n, "type": "group",
+         "children": [{"module": "f144", "config": {"topic": "t", "source": f"pv:{n}"}}]}
+        for n in ("a", "b", "quiet")
+    ]
+    children.append({"name": "wave", "type": "group", "children": [{
+        "module": "f144",
+        "config": {"topic": "t", "source": "pv:wave", "array_size": 3},
+    }]})
+    return StartMessage(
+        job_id=job_id, filename="f",
+        nexus_structure={"children": [{"name": "entry", "type": "group",
+                                       "children": children}]},
+        start_time_ms=10_000, stop_time_ms=60_000,
+    )
+
+
+def _wave(ts_ms, values, offset):
+    return {"schema": "f144", "topic": "t", "source_name": "pv:wave",
+            "kafka_timestamp": ts_ms, "timestamp": ts_ms, "values": values,
+            "offset": offset}
+
+
+# micro-batches of the running-summary tests: pre-start rows (pv:a's
+# latest is emitted with its first in-window row; pv:b never sends in
+# window, so finalize flushes its buffered row), a repeated timestamp
+# within a batch and one straddling the restart before batch 2
+_SUMMARY_BATCHES = [
+    [f144(8_000, 7.0, "pv:a", 0), f144(9_000, -2.0, "pv:a", 1),
+     f144(9_500, 100.0, "pv:b", 2), f144(11_000, 1.0, "pv:a", 3),
+     _wave(11_000, [1.0, 2.0, 3.0], 4)],
+    [f144(12_000, 5.0, "pv:a", 5), f144(12_000, 99.0, "pv:a", 6),
+     _wave(12_000, [4.0, 5.0, 9.0], 7)],
+    [f144(12_000, 50.0, "pv:a", 8), f144(13_000, 3.0, "pv:a", 9),
+     _wave(13_000, [0.5, 6.0, 2.0], 10)],
+]
+
+
+def test_running_summary_matches_batch_twin(spark, tmp_path):
+    """The live T6 values are running partials, never re-read from the
+    staged logs: folded over several batches, across a restart (a new
+    StreamingJob over the same output directory), with completed batches
+    replayed (skipped, so not counted twice), a buffered pre-start row
+    flushed at finalize, repeated timestamps dropped, an array PV over
+    every element and a source with no rows (None min/max/mean), they
+    equal a batch ``run_job`` over the same messages."""
+    from kafka_to_nexus_spark.runner import run_job
+
+    out = str(tmp_path / "live")
+    start = _summary_job_start("running-t6")
+    first = StreamingJob(spark, start, out)
+    for i, rows in enumerate(_SUMMARY_BATCHES[:2]):
+        first.process_batch(messages_from_json(spark, rows), i)
+    job = StreamingJob(spark, start, out)  # restart
+    job.process_batch(messages_from_json(spark, _SUMMARY_BATCHES[2]), 2)
+    for i, rows in enumerate(_SUMMARY_BATCHES):  # replays of completed batches
+        job.process_batch(messages_from_json(spark, rows), i)
+        StreamingJob(spark, start, out).process_batch(messages_from_json(spark, rows), i)
+    job.finalize()
+    live = staging.read_meta(out)["metadata_values"]
+
+    twin = run_job(
+        spark, start,
+        messages_from_json(spark, [r for rows in _SUMMARY_BATCHES for r in rows]),
+        str(tmp_path / "twin"),
+    ).metadata_values
+    want = {
+        "a": (-2.0, 5.0, 7.0 / 4),  # -2 (buffered), 1, 5, 3
+        "b": (100.0, 100.0, 100.0),
+        "quiet": (None, None, None),
+        "wave": (0.5, 9.0, 32.5 / 9),
+    }
+    for name, (lo, hi, mean) in want.items():
+        for vals in (live, twin):
+            assert vals[f"/entry/{name}/minimum_value"] == lo, name
+            assert vals[f"/entry/{name}/maximum_value"] == hi, name
+            assert vals[f"/entry/{name}/average_value"] == (
+                None if mean is None else pytest.approx(mean)
+            ), name
+
+
+def test_state_file_round_trips_every_field(tmp_path):
+    """Every ``StreamingJobState`` field survives save and load with a
+    non-default value: a field left out of the state file fails here."""
+    from dataclasses import fields
+
+    from kafka_to_nexus_spark.operators import quality
+    from kafka_to_nexus_spark.runner import Summary
+    from kafka_to_nexus_spark.streaming.job import (
+        StreamingJobState, _load_job_state, _save_job_state,
+    )
+
+    samples = {
+        "asof_buffer": {("f144", "a"): {"timestamp": 9, "partition": 0, "offset": 1,
+                                        "value": 2.5}},
+        "asof_emitted": {("f144", "a")},
+        "events_written": {("ev44", "bank"): 12},
+        "cue_last": {("ev44", "bank"): 3},
+        "last_written_ts": {("f144", "a", 1): 11_000_000_000},
+        "statics_by_path": {"/entry/d": {"x": [1.0, 2.0]}},
+        "summary_by_path": {"/entry/a": Summary(-2.0, 5.0, 7.0, 4),
+                            "/entry/n": Summary(1, 9, 20, 3)},
+        "batches_processed": 4,
+        "last_spark_batch_id": 7,
+        "max_event_time_ns": 13_000_000_000,
+        "finished": True,
+        "metrics": {**quality.ZERO_METRICS, "messages_received": 9, "snapshot_errors": 1},
+    }
+    assert set(samples) == {f.name for f in fields(StreamingJobState)}
+    default = StreamingJobState()
+    for name, value in samples.items():
+        assert value != getattr(default, name), name
+    _save_job_state(StreamingJobState(**samples), str(tmp_path))
+    got = _load_job_state(str(tmp_path))
+    for name, value in samples.items():
+        assert getattr(got, name) == value, name
+
+
+def test_pre_summary_state_file_fails_loudly(tmp_path):
+    """A state file written before the running f144 summaries (this one
+    also before the F4 carry was partition-keyed) has no
+    ``summary_by_path``. With batches staged, loading it raises an error
+    naming the field instead of finalizing wrong values; with none staged
+    it loads with no summaries."""
+    from kafka_to_nexus_spark.streaming.job import STATE_FILE, _load_job_state
+
+    old = {
+        "asof_buffer": [], "asof_emitted": [], "events_written": [],
+        "cue_last": [],
+        "last_written_ts": [[["f144", "src_a"], 12_000_000_000]],
+        "statics_by_path": {}, "batches_processed": 3,
+        "last_spark_batch_id": 2, "max_event_time_ns": 0,
+        "finished": False, "metrics": {},
+    }
+    (tmp_path / STATE_FILE).write_text(json.dumps(old))
+    with pytest.raises(ValueError, match="summary_by_path"):
+        _load_job_state(str(tmp_path))
+    unstarted = {**old, "last_written_ts": [], "batches_processed": 0,
+                 "last_spark_batch_id": -1}
+    (tmp_path / STATE_FILE).write_text(json.dumps(unstarted))
+    assert _load_job_state(str(tmp_path)).summary_by_path == {}
 
 
 def test_single_path_repeat_dedup_per_partition(spark, tmp_path):
@@ -1595,29 +1741,6 @@ def test_da00_constant_resolves_from_a_later_batch(spark, tmp_path):
     job.finalize()
     meta = staging.read_meta(job.out_dir)
     assert meta["metadata_values"]["/entry/hist/edges"] == [9.0, 9.5, 10.0]
-
-
-def test_old_format_state_file_migrates_to_partition_keys(spark, tmp_path):
-    """A state file written before F4 carry state was partition-keyed
-    (2-tuple keys) must load, mapping its carry values to partition 0."""
-    import json as _json
-
-    from kafka_to_nexus_spark.streaming.job import (
-        STATE_FILE, StreamingJob, _load_job_state,
-    )
-
-    out = tmp_path / "out"
-    out.mkdir()
-    (out / STATE_FILE).write_text(_json.dumps({
-        "asof_buffer": [], "asof_emitted": [], "events_written": [],
-        "cue_last": [],
-        "last_written_ts": [[["f144", "src_a"], 12_000_000_000]],
-        "statics_by_path": {}, "batches_processed": 3,
-        "last_spark_batch_id": 2, "max_event_time_ns": 0,
-        "finished": False, "metrics": {},
-    }))
-    st = _load_job_state(str(out))
-    assert st.last_written_ts == {("f144", "src_a", 0): 12_000_000_000}
 
 
 def test_stop_retarget_rearms_partition_filter_and_latches_finished(spark, buffered_job):
